@@ -44,8 +44,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Never-driver-verified queries first (by priority tier), proven
-    # names rotate behind; no-oracle queries at the back of each group.
+    # Unsettled queries first (registration order), then settled ones,
+    # stalest driver evidence first (registry.ordered_registry).
     return {name: spec.fn for name, spec in ordered_registry().items()}
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -245,7 +245,6 @@ def fn_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_map_functions",
-    priority=35,  # fixed round 3 (HUGEINT + empty-array oracle) — must re-verify
     oracle="""
     WITH src AS (
       SELECT p_brand,
@@ -361,7 +360,6 @@ def fn_array_modern(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_nationkey, k
     """,
     tags=("collection", "generator", "map"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def fn_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode() over a MAP column (ref `generators.scala` Explode:160

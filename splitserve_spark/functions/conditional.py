@@ -196,7 +196,6 @@ def fn_na_fill_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_na_replace",
-    priority=35,  # new round 3 — promote into driver window
     oracle="""
     SELECT c_custkey,
            CASE c_mktsegment

@@ -80,7 +80,6 @@ def _expected_hash_values() -> str:
     ORDER BY n_nationkey
     """,
     tags=("function", "hash"),
-    priority=97,  # past the full r7 window; certifies in r8
 )
 def fn_hash_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """murmur3 hash / xxhash64 / crc32 — the hash family Spark uses for

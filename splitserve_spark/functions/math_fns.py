@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -270,7 +270,6 @@ WB_LO, WB_HI, WB_N = 0.0, 500000.0, 10
     FROM b GROUP BY bucket ORDER BY bucket
     """,
     tags=("function", "math"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def fn_width_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """width_bucket equi-width histogram assignment (reference
@@ -312,7 +311,6 @@ def fn_width_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderkey < 400 ORDER BY o_orderkey
     """,
     tags=("function", "math", "bitwise"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def fn_bit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar bit manipulation (reference `mathExpressions.scala`

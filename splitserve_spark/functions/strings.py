@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -281,7 +281,6 @@ def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     tags=("string", "xml"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XPath extraction over XML strings (ref `xml/xpath.scala`
@@ -323,7 +322,6 @@ def fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part WHERE p_partkey < 200 ORDER BY p_partkey
     """,
     tags=("function", "string"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def fn_string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance functions (reference `stringExpressions.scala`
@@ -370,7 +368,6 @@ AES_KEY = "0123456789abcdef"
     FROM customer WHERE c_custkey < 300 ORDER BY c_custkey
     """,
     tags=("function", "crypto"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def fn_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aes_encrypt / aes_decrypt roundtrip (reference `misc.scala`

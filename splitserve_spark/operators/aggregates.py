@@ -20,11 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import (
-    PRI_BEHIND_BACKLOG,
-    PRI_NEXT_WINDOW,
-    register,
-)
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -764,7 +760,6 @@ ORDER BY o_orderpriority
     "agg_filter_clause",
     oracle=_FILTER_CLAUSE_SQL,
     tags=("agg", "sql"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2003 FILTER clause on aggregates (ref
@@ -802,7 +797,6 @@ EQWIDTH_BINS = 20
     ORDER BY bin
     """,
     tags=("agg", "histogram"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-WIDTH histogram of lineitem prices — the fixed-bin twin of
@@ -858,7 +852,6 @@ def agg_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cell.o_orderstatus
     """,
     tags=("agg", "stats"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of the order-priority distribution within each
@@ -911,7 +904,6 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
     tags=("aggregate", "stats"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI linear-regression aggregates (regr_slope / regr_intercept /

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.operators.prefix_rank import ntile_from_rank, with_global_prefix
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -355,7 +355,6 @@ SESSION_GAP_HOURS = 24
     """,
     tags=("analytics", "events", "session",
           "skew_hazard:sessionize_hot_key_safe"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def window_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window aggregation in BATCH mode (ref streaming
@@ -408,7 +407,6 @@ def window_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("analytics", "window",
           "skew_hazard:sessionize_hot_key_safe"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running DISTINCT count over a window — per user, how many
@@ -460,7 +458,6 @@ BASKET_TOP_N = 20
     LIMIT {BASKET_TOP_N}
     """,
     tags=("analytics", "agg"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: the top-20 part pairs that co-occur
@@ -541,7 +538,6 @@ MAD_SIGMA = 1.4826
     ORDER BY e.event_type
     """,
     tags=("analytics", "events", "robust"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier audit via median absolute deviation — the
@@ -624,7 +620,6 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("analytics", "events", "sequence",
           "skew_hazard:sessionize_hot_key_safe"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
@@ -702,7 +697,6 @@ RFM_ASOF = "1998-08-03"
     ORDER BY r_score, f_score, m_score
     """,
     tags=("analytics", "segmentation"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: every customer scored into quintiles on
@@ -800,7 +794,6 @@ FUNNEL_WINDOW_DAYS = 7
     ORDER BY stage_idx
     """,
     tags=("analytics", "events"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deadline-bounded funnel: each stage must convert within
@@ -850,7 +843,6 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY rk
     """,
     tags=("analytics", "window"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def window_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto concentration curve: the smallest set of customers whose
@@ -934,7 +926,6 @@ BOT_MIN_GAP_MIN = 90
     """,
     tags=("analytics", "events", "abuse",
           "skew_hazard:sessionize_hot_key_safe"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bot/abuse heuristics per user: burstiness (max events in any
@@ -1020,7 +1011,6 @@ MAU_DAYS = 30
     ORDER BY dau.day
     """,
     tags=("analytics", "events", "engagement"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU / WAU / MAU + stickiness (DAU/MAU) per day — THE product
@@ -1111,7 +1101,6 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY y, m
     """,
     tags=("analytics", "timeseries"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def orders_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly order/revenue time series with year-over-year growth —
@@ -1175,7 +1164,6 @@ ROLL_DAYS = 7
     ORDER BY day
     """,
     tags=("analytics", "timeseries", "anomaly"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving-baseline anomaly score on the daily event-value series:
@@ -1238,7 +1226,6 @@ def window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cell ORDER BY cohort_week, age_week
     """,
     tags=("analytics", "product"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value triangle: users grouped by the week of
@@ -1316,7 +1303,6 @@ SWEEP_SESSION_MIN = 10
     FROM swept GROUP BY day ORDER BY day
     """,
     tags=("analytics", "interval"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrency per day by sweep-line: each event opens a
@@ -1402,7 +1388,6 @@ CUSUM_H = 300
     FROM s GROUP BY event_type ORDER BY event_type
     """,
     tags=("analytics", "events", "drift"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided upper CUSUM drift detection (Page 1954) per event

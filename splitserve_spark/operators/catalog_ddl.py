@@ -21,7 +21,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -345,7 +345,6 @@ def ddl_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY r_regionkey
     """,
     tags=("ddl", "alter"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def ddl_alter_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALTER TABLE ... ADD COLUMNS (reference `command/tables.scala`

@@ -33,7 +33,7 @@ from splitserve_spark.functions.parity_hash import (
     perm_hash_spark_sql,
     perm_hash_sql,
 )
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -574,7 +574,6 @@ INCR_FENCE = 250
 
 @register(
     "dedup_incremental",
-    priority=88,  # round-5 window is full (50 oracle checks) — verifies r6
     oracle=f"""
     WITH f AS (
       SELECT doc_id,
@@ -658,7 +657,6 @@ CONTAINMENT_TAU = 0.8
     ORDER BY doc_a, doc_b
     """,
     tags=("dedup", "pipeline", "containment"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set CONTAINMENT C(A,B) = |A∩B| / |A| on the same fenced
@@ -736,7 +734,6 @@ _RAW_URL_SQL = (
     FROM canon GROUP BY 1 ORDER BY 1
     """,
     tags=("dedup", "llm-pipeline", "url"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + dedup — the first pass of every crawl

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -654,7 +654,6 @@ def _sssp_seeds(sym: DataFrame, n_sources: int | None = None) -> DataFrame:
     ORDER BY node
     """,
     tags=("graph", "workload", "iterative"),
-    priority=PRI_NEXT_WINDOW + 1,  # strictly last: round-6 debt clears first
 )
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WEIGHTED single/multi-source shortest paths — the classic Pregel
@@ -814,7 +813,6 @@ def _scc_oracle() -> str:
     "graph_scc",
     oracle=_scc_oracle(),
     tags=("graph", "workload", "iterative"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strongly connected components of a directed graph (reference
@@ -945,7 +943,6 @@ def _kcore_oracle() -> str:
     "graph_kcore",
     oracle=_kcore_oracle(),
     tags=("graph", "workload", "iterative"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition (k=2) by iterative peeling: repeatedly
@@ -1050,7 +1047,6 @@ def _adamic_adar_oracle() -> str:
     "graph_adamic_adar",
     oracle=_adamic_adar_oracle(),
     tags=("graph", "workload"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction: score every non-adjacent node pair

@@ -302,7 +302,6 @@ ONESTEP_K = 8
 
 @register(
     "ml_kmeans_onestep",
-    priority=88,  # round-5 window is full — verifies r6
     oracle=f"""
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings

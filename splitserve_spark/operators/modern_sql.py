@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from splitserve_spark import sql_entry
-from splitserve_spark.registry import PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 
 #: Binary-heap parent edge over nation keys: parent(k) = (k-1) div 2.
 #: A deterministic 25-node hierarchy derived from TESTDATA, so both
@@ -260,7 +260,6 @@ def merge_upsert_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mixed
     """,
     tags=("sql", "modern", "collation"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String collations (Spark 4.0, SPARK-46830): UTF8_LCASE makes
@@ -323,7 +322,6 @@ FROM orders
     ORDER BY o_orderpriority
     """,
     tags=("sql", "modern", "pipe"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4.0, SPARK-49555): `FROM t |> WHERE …

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -435,7 +435,6 @@ def _ppm_channel_sum_sql(c: int) -> str:
     ORDER BY doc_id
     """,
     tags=("multimodal", "pipeline", "image"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image decode, second modality: binary PPM (P6) payloads are
@@ -529,7 +528,6 @@ def _ppm_patch_sum_sql(c: int) -> str:
     ORDER BY doc_id, py, px
     """,
     tags=("multimodal", "pipeline", "image", "patches"),
-    priority=PRI_NEXT_WINDOW,  # don't displace the r7 backlog window
 )
 def mm_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ViT-style patchification: every decoded image is cut into the
@@ -633,7 +631,6 @@ def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
     ORDER BY doc_id, frame_id
     """,
     tags=("multimodal", "pipeline", "feature-extract"),
-    priority=PRI_NEXT_WINDOW + 1,  # strictly last: round-6 debt clears first
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-FRAME audio feature extraction — the speech-pipeline

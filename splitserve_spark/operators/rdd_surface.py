@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -257,7 +257,6 @@ def rdd_broadcast_accumulator(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     """,
     tags=("rdd", "tree"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def rdd_tree_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """treeAggregate (reference `core/.../rdd/RDD.scala:1106`

@@ -35,11 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 from pyspark.sql.window import Window
 
-from splitserve_spark.registry import (
-    PRI_BEHIND_BACKLOG,
-    PRI_NEXT_WINDOW,
-    register,
-)
+from splitserve_spark.registry import register
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
@@ -1306,7 +1302,6 @@ TRUNC_DIM = 16
     ORDER BY f.query_id
     """,
     tags=("similarity", "pipeline", "diagnostics"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def sim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation diagnostic: how many of
@@ -1401,7 +1396,6 @@ def sim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY label
     """,
     tags=("similarity", "pipeline", "ml-eval"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def sim_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid classification eval (Rocchio): per-label
@@ -1540,7 +1534,6 @@ def _seed_assign_kernel(seed_mat: list, n_seeds: int):
     FROM p GROUP BY dup_id, cluster_id ORDER BY dup_id
     """,
     tags=("similarity", "pipeline", "dedup"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -1690,7 +1683,6 @@ SIM_RADIUS = 0.3
     ORDER BY query_id, neighbor_id
     """,
     tags=("similarity", "ann"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius (range) search: all corpus vectors within a cosine

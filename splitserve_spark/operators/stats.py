@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.operators.prefix_rank import with_global_prefix
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -380,7 +380,6 @@ KS_TYPE_B = "purchase"
     GROUP BY c.na, c.nb
     """,
     tags=("stats", "hypothesis"),
-    priority=PRI_NEXT_WINDOW,  # never driver-checked: re-verify first
 )
 def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic between the value
@@ -451,7 +450,6 @@ HH_SUPPORT = 0.2
     ORDER BY col, item
     """,
     tags=("stat", "heavy-hitters"),
-    priority=PRI_NEXT_WINDOW,  # don't displace the r7 backlog window
 )
 def stat_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT heavy hitters — the value-checked twin of the
@@ -516,7 +514,6 @@ def stat_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, band
     """,
     tags=("stats", "hypothesis"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-squared test of independence, per-cell form (reference
@@ -598,7 +595,6 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     tags=("stats", "hypothesis"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Mann–Whitney U (Wilcoxon rank-sum) between the value

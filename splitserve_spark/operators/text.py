@@ -18,11 +18,7 @@ from splitserve_spark.functions.parity_hash import (
     md5_hash60,
     md5_hash60_sql,
 )
-from splitserve_spark.registry import (
-    PRI_BEHIND_BACKLOG,
-    PRI_NEXT_WINDOW,
-    register,
-)
+from splitserve_spark.registry import register
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
@@ -899,7 +895,6 @@ KEYWORDS_PER_DOC = 3
     ORDER BY doc_id, rank
     """,
     tags=("text", "pipeline", "keywords"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF keyword extraction: the top-3 most characteristic terms
@@ -986,7 +981,6 @@ CHUNK_STRIDE = 15
     ORDER BY doc_id, chunk_idx
     """,
     tags=("text", "pipeline", "chunking"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping context-window chunking, entirely in JVM built-ins —
@@ -1049,7 +1043,6 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source
     """,
     tags=("text", "pipeline", "tokenize"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocabulary coverage: the OOV rate per source against
@@ -1102,7 +1095,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source
     """,
     tags=("text", "pipeline", "profiling"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-length percentile profile (p50/p90/p99 +
@@ -1149,7 +1141,6 @@ NGRAM_TOP_K = 25
     LIMIT {NGRAM_TOP_K}
     """,
     tags=("text", "pipeline", "collocations"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-25 bigram collocations — the n-gram statistics
@@ -1216,7 +1207,6 @@ def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source
     """,
     tags=("text", "pipeline", "drift"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def text_source_drift_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor: per source, the Jensen-Shannon
@@ -1303,7 +1293,6 @@ IDX_POSTINGS_HEAD = 20
     ORDER BY term
     """,
     tags=("text", "pipeline", "index"),
-    priority=PRI_NEXT_WINDOW,  # don't displace the r7 backlog window
 )
 def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index (posting-list) build — the materialization
@@ -1404,7 +1393,6 @@ GOPHER_MIN_UNIQUE_RATIO = 0.40
     FROM m ORDER BY doc_id
     """,
     tags=("text", "pipeline", "quality"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def text_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher document-quality rule filter (Rae et al. 2021, the rule

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.tables import Tables
@@ -298,7 +298,6 @@ def qds95_both_sites_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY sales_year, revenue DESC, p_brand
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def qds3_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q3 plan shape beyond the paper's quartet (TPC-DS spec
@@ -355,7 +354,6 @@ def qds3_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 100
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_NEXT_WINDOW + 1,  # strictly last: round-6 debt clears first
 )
 def qds7_demographic_item_avgs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q7 plan shape beyond the paper's quartet (spec query 7:
@@ -443,7 +441,6 @@ def _dec_revenue():
     ORDER BY revenue DESC, category
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def qds42_category_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q42 plan shape (spec query 42: category revenue for one
@@ -497,7 +494,6 @@ def qds42_category_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY ext_price DESC, p_brand
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def qds52_brand_month_extprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q52 plan shape (spec query 52: brand ext-price for one
@@ -551,7 +547,6 @@ def qds52_brand_month_extprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p_brand
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def qds19_cross_nation_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q19 plan shape (spec query 19: brand revenue restricted
@@ -624,7 +619,6 @@ def qds19_cross_nation_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFr
     FROM events
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def qds88_hour_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q88 shape — eight time-band counts emitted as one row.
@@ -688,7 +682,6 @@ def qds88_hour_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY day
     """,
     tags=("tpcds", "beyond-quartet"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def qds51_cumulative_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q51 shape — two channels' daily revenue, FULL OUTER
@@ -774,7 +767,6 @@ def qds51_cumulative_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY class, revenueratio DESC, item_id
     """,
     tags=("tpcds", "beyond-quartet", "window"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def qds98_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q98 plan shape (spec query 98: each item's revenue share

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -571,7 +571,6 @@ MIX_TEMPERATURE_ALPHA = 0.3
     ORDER BY source
     """,
     tags=("pipeline", "mixing"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixing (p_s ∝ n_s^α, α=0.3 — the
@@ -636,7 +635,6 @@ PII_PHONE_RE = "555-[0-9]{4}"
     ORDER BY source
     """,
     tags=("pipeline", "privacy", "text"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def pii_detect_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection audit — the measurement half of the privacy
@@ -712,7 +710,6 @@ ARES_K = 100
     LIMIT {ARES_K}
     """,
     tags=("pipeline", "sampling"),
-    priority=PRI_NEXT_WINDOW,  # don't displace the r7 backlog window
 )
 def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement (Efraimidis-
@@ -788,7 +785,6 @@ def _epoch_shuffle_oracle() -> str:
     "mix_epoch_shuffle",
     oracle=_epoch_shuffle_oracle(),
     tags=("training-prep", "llm-pipeline", "shuffle"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def mix_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle + sharding for one training epoch —
@@ -846,7 +842,6 @@ def mix_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY split
     """,
     tags=("pipeline", "sampling"),
-    priority=PRI_BEHIND_BACKLOG,
 )
 def split_group_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP-aware train/eval holdout: the split key is the hash of

@@ -293,7 +293,6 @@ UDTF_CHUNK = 10
 
 @register(
     "udtf_chunk_text",
-    priority=88,  # round-5 window is full (50 oracle checks) — verifies r6
     oracle=f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(trim(text), ' +') AS ws

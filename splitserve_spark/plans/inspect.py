@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import DataFrame
 
@@ -31,12 +32,6 @@ def assert_in_plan(df: DataFrame, *needles: str) -> None:
         assert needle in plan, f"expected {needle!r} in plan:\n{plan}"
 
 
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    for needle in needles:
-        assert needle not in plan, f"did not expect {needle!r} in plan:\n{plan}"
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters lines of every scan in the plan."""
     return "\n".join(
@@ -53,8 +48,6 @@ def count_exchanges(df: DataFrame) -> int:
     deliberately excluded: the word-boundary regex does not match
     either (no boundary after 't'/'d'), only standalone `Exchange
     hashpartitioning/rangepartitioning/...` nodes."""
-    import re
-
     plan = physical_plan(df, mode="simple")
     return sum(
         1
@@ -111,3 +104,38 @@ def unpartitioned_window_nodes_in(plan: str) -> list[str]:
             continue  # partitioned, unordered
         out.append(line)
     return out
+
+
+def _depth(line: str) -> int:
+    """Position where plan-node content starts (past the tree bars)."""
+    return re.match(r"[\s:+\-*]*", line).end()
+
+
+def count_executed_scans(plan: str) -> dict[str, int]:
+    """FileScans per base table on the UNCACHED paths of a `simple` plan.
+
+    A persisted intermediate prints as InMemoryRelation with its full
+    child lineage re-printed at EVERY reference (with re-aliased
+    attributes), so a raw FileScan count overstates executed scans
+    N-fold.  Each cached subtree executes at most once (first
+    materialization) regardless of reference count, so cached subtrees
+    are skipped entirely — what this counts is the repeat-scan class
+    that re-EXECUTES per branch (tests/test_plans.py's registry-wide
+    repeat-scan guard)."""
+    counts: dict[str, int] = {}
+    lines = plan.splitlines()
+    i = 0
+    while i < len(lines):
+        line = lines[i]
+        if "InMemoryRelation" in line:
+            d = _depth(line)
+            j = i + 1
+            while j < len(lines) and _depth(lines[j]) > d:
+                j += 1
+            i = j
+            continue
+        s = re.search(r"file:[^\]]*/(\w+)\.parquet", line)
+        if s:
+            counts[s.group(1)] = counts.get(s.group(1), 0) + 1
+        i += 1
+    return counts

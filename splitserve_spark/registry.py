@@ -15,8 +15,11 @@ computed column identically on both sides.
 from __future__ import annotations
 
 import importlib
+import json
+import pathlib
+import re
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,60 +34,10 @@ class QuerySpec:
     tags: tuple[str, ...] = ()
     bench: bool = False  # include in bench.py headline set
     doc: str = ""
-    priority: int = 50  # ordering for the driver's queries() dict
-    seq: int = 0  # registration sequence (tiebreaker within priority)
+    seq: int = 0  # registration sequence (driver-order tiebreaker)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-# Priority tiers (lower = earlier in queries()).  The driver verifies
-# only the first ~DRIVER_WINDOW entries per round; ordered_registry()
-# additionally rotates already-driver-green names (_DRIVER_GREEN) behind
-# never-verified ones, so tiers order queries WITHIN each of those two
-# groups.  Tier 35 = fixed/added this round, must (re-)verify.
-#   0  TPC-H Q1-Q22
-#   10 TPC-DS paper quartet
-#   20 LLM-pipeline operators (dedup/similarity/text/multimodal/pipeline)
-#   30 core joins/aggregates/windows highlights
-#   50 default (everything else with an oracle)
-#   90 no-oracle rows-only queries — register last, never in the window
-PRI_TPCH = 0
-PRI_TPCDS = 10
-PRI_PIPELINE = 20
-PRI_CORE = 30
-PRI_DEFAULT = 50
-PRI_NO_ORACLE = 90
-#: Deliberately deferred to the NEXT round's window: registered after
-#: the current round's 50 never-checked names exactly filled the
-#: driver window (displacing the rows-only names that have waited
-#: since round 1 would break the round's verification plan).  These
-#: sort behind every earlier never-checked name and are picked up
-#: first by the following round's rotation.
-PRI_NEXT_WINDOW = 95
-#: Additions made while a round's backlog already fills the driver
-#: window exactly: sort behind BOTH that backlog (95) and its
-#: strictly-last stragglers (96) — seq follows module-load order, so
-#: a merely-equal priority would let a new query in an early-loaded
-#: module displace an older backlog name and break the round's
-#: verification plan.
-PRI_BEHIND_BACKLOG = 98
-
-import re  # noqa: E402
-
-_TIER_PATTERNS: tuple[tuple[re.Pattern, int], ...] = (
-    (re.compile(r"^q\d+_"), PRI_TPCH),
-    (re.compile(r"^qds\d+_"), PRI_TPCDS),
-    (re.compile(
-        r"^(pipeline_|dedup_|sim_|text_|mm_|asof_|range_join_"
-        r"|join_salted|join_bucketed)"), PRI_PIPELINE),
-)
-
-# Oracle-backed relational highlights promoted into the driver window.
-_CORE_HIGHLIGHTS = frozenset({
-    "agg_variance", "agg_collect_sorted", "agg_rollup",
-    "window_ranking", "window_range_frame",
-    "setop_except", "join_full_outer", "subq_exists_correlated",
-})
 
 # Driver-verification history, DERIVED from the committed
 # CORRECTNESS_r*.json evidence files at import time (never
@@ -93,10 +46,7 @@ _CORE_HIGHLIGHTS = frozenset({
 # wins: green = hash_match true (or, for rows-only checks, rows_match
 # true with no hash); red/errored names stay OUT of the green set so
 # they re-enter the driver window and re-verify.
-import json as _json  # noqa: E402
-import pathlib as _pathlib  # noqa: E402
-
-_REPO_ROOT = _pathlib.Path(__file__).resolve().parent.parent
+_REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def verdict_ok(v: dict) -> bool:
@@ -126,7 +76,7 @@ def _load_driver_verdicts() -> tuple[dict[str, bool], frozenset,
     rounds: dict[str, int] = {}
     for path in sorted(_REPO_ROOT.glob("CORRECTNESS_r*.json")):
         try:
-            results = _json.loads(path.read_text())
+            results = json.loads(path.read_text())
         except (OSError, ValueError):
             continue  # unreadable evidence file — skip, never crash import
         if not isinstance(results, dict):
@@ -153,35 +103,20 @@ _DRIVER_CHECKED = frozenset(_DRIVER_VERDICTS)
 _DRIVER_GREEN = frozenset(n for n, ok in _DRIVER_VERDICTS.items() if ok)
 
 
-def _default_priority(name: str, has_oracle: bool) -> int:
-    if not has_oracle:
-        return PRI_NO_ORACLE
-    for pat, tier in _TIER_PATTERNS:
-        if pat.match(name):
-            return tier
-    if name in _CORE_HIGHLIGHTS:
-        return PRI_CORE
-    return PRI_DEFAULT
-
-
 def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    priority: int | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under ``name`` with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        pri = priority
-        if pri is None:
-            pri = _default_priority(name, oracle is not None)
         REGISTRY[name] = QuerySpec(
             name=name, fn=fn, oracle=oracle, tags=tags, bench=bench,
-            doc=(fn.__doc__ or "").strip(), priority=pri, seq=len(REGISTRY),
+            doc=(fn.__doc__ or "").strip(), seq=len(REGISTRY),
         )
         return fn
 
@@ -204,25 +139,21 @@ def _settled(spec: QuerySpec) -> bool:
 
 
 def _staleness_key(spec: QuerySpec) -> tuple:
-    """Sort key for settled specs: oldest-evidence-round first.  With
-    certification debt at zero (every name settled, round 8), a
-    (priority, seq) tie-break would re-check the SAME 50 names every
-    round while the other 258 certifications age — some date to r1,
-    several runtime upgrades ago.  Rotating by evidence round means
-    each round's window re-certifies the 50 longest-unverified names,
-    so every certification refreshes on a ~6-round cycle."""
-    return (_DRIVER_EVIDENCE_ROUND.get(spec.name, 0), spec.priority,
-            spec.seq)
+    """Sort key for settled specs: oldest evidence round first, then
+    registration sequence.  Rotating by evidence round means each
+    round's window re-certifies the 50 longest-unverified names, so
+    every certification refreshes on a ~6-round cycle instead of the
+    same 50 names being re-checked every round."""
+    return (_DRIVER_EVIDENCE_ROUND.get(spec.name, 0), spec.seq)
 
 
 def ordered_registry() -> dict[str, QuerySpec]:
-    """Registry in driver-facing order: never-driver-verified queries
-    first (by priority tier, then registration sequence), already-green
-    ones last — and among the settled, stalest certification first
-    (see _staleness_key).  The driver checks only the first
-    ~DRIVER_WINDOW entries of queries() per round, so this rotation
-    maximizes cumulative driver-verified coverage and keeps every
-    certification fresh."""
+    """Registry in driver-facing order, by two keys: unsettled queries
+    first, in registration sequence; then settled ones, stalest
+    certification first (see _staleness_key).  The driver checks only
+    the first ~DRIVER_WINDOW entries of queries() per round, so this
+    rotation maximizes cumulative driver-verified coverage and keeps
+    every certification fresh."""
     load_all()
     return {
         spec.name: spec
@@ -230,7 +161,7 @@ def ordered_registry() -> dict[str, QuerySpec]:
             REGISTRY.values(),
             key=lambda s: (
                 (True,) + _staleness_key(s) if _settled(s)
-                else (False, 0, s.priority, s.seq)
+                else (False, 0, s.seq)
             ),
         )
     }

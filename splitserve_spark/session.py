@@ -54,18 +54,28 @@ TUNING_CONF = {
 
 
 def ensure_parity_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable parity confs to an existing session.
+    """Apply the parity confs to an existing session and verify them.
 
-    Safe to call per-query: `spark.conf.set` on an already-set value is a
-    no-op driver-side and never touches executors.
+    Safe to call per-query: each key is read first and set only when it
+    differs, so a session that already carries them costs one
+    driver-side read per key and never touches executors.  A conf that
+    cannot be set, or does not read back as set, raises with its key —
+    a silently unset ANSI or timezone conf gives wrong answers, not
+    slow ones.
     """
+    conf = spark.conf
     for key, value in PARITY_CONF.items():
+        if conf.get(key, None) == value:
+            continue
         try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Some confs may be static in exotic deployments; parity
-            # queries avoid depending on those.
-            pass
+            conf.set(key, value)
+        except Exception as ex:
+            raise RuntimeError(
+                f"cannot set parity conf {key}={value}: {ex}") from ex
+        actual = conf.get(key, None)
+        if actual != value:
+            raise RuntimeError(
+                f"parity conf {key} reads back {actual!r}, not {value!r}")
     return spark
 
 

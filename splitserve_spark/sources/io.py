@@ -26,7 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splitserve_spark.registry import PRI_NEXT_WINDOW, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
@@ -271,7 +271,6 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_regionkey
     """,
     tags=("source", "parquet", "schema-evolution"),
-    priority=PRI_NEXT_WINDOW,  # current round's window is full
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet schema evolution via mergeSchema (ref

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from splitserve_spark.session import ensure_parity_conf
-from splitserve_spark.tables import TABLE_NAMES, Tables
+from splitserve_spark.tables import Tables
+
 
 def sql(spark: SparkSession, query: str, sf_dir: str) -> DataFrame:
     """Execute `query` with the sf_dir tables visible under their
@@ -26,7 +27,3 @@ def sql(spark: SparkSession, query: str, sf_dir: str) -> DataFrame:
     ensure_parity_conf(spark)
     Tables(spark, sf_dir).register_temp_views()
     return spark.sql(query)
-
-
-def table_names() -> tuple[str, ...]:
-    return TABLE_NAMES

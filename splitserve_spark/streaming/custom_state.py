@@ -93,7 +93,6 @@ from splitserve_spark.registry import register  # noqa: E402
 
 @register(
     "stream_stateful_profile",
-    priority=35,  # fixed round 3 (multi-batch dedup + 4dp) — must re-verify
     oracle="""
     SELECT user_id,
            count(*)                       AS n_events,
@@ -253,7 +252,6 @@ def _ordered_event_splits(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "stream_cusum_stateful",
-    priority=98,  # PRI_BEHIND_BACKLOG: added while the backlog fills the window
     oracle=None,  # set right below from the batch twin — single source of truth
     tags=("streaming", "stateful", "custom-operator", "drift"),
 )

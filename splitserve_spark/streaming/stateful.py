@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from splitserve_spark.registry import PRI_BEHIND_BACKLOG, register
+from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
 from splitserve_spark.tables import Tables, sfdir_tag
 
@@ -82,7 +82,6 @@ _SESSION_ORACLE = """
 
 @register(
     "sessionize_lag_cumsum",
-    priority=35,  # fixed round 3 (HUGEINT session_id oracle) — must re-verify
     oracle=_SESSION_ORACLE,
     tags=("streaming", "session", "window",
           "skew_hazard:sessionize_hot_key_safe"),
@@ -358,7 +357,6 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("streaming", "join"),
-    priority=PRI_BEHIND_BACKLOG,  # don't displace the r7 backlog plan
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join (reference streaming supports

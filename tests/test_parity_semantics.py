@@ -60,6 +60,43 @@ def test_parity_conf_survives_foreign_session_state(spark):
         ensure_parity_conf(spark)
 
 
+class _StubConf:
+    """A session conf whose ``set`` is ignored for ``stuck`` keys (a
+    deployment that pins them) or raises for ``locked`` keys."""
+
+    def __init__(self, stuck=(), locked=()):
+        self.values = {"spark.sql.ansi.enabled": "true"}
+        self.stuck, self.locked = set(stuck), set(locked)
+
+    def get(self, key, default=None):
+        return self.values.get(key, default)
+
+    def set(self, key, value):
+        if key in self.locked:
+            raise ValueError("static conf")
+        if key not in self.stuck:
+            self.values[key] = value
+
+
+def test_parity_conf_that_does_not_read_back_raises():
+    """A conf that silently stays unset (ANSI on) or refuses the set
+    must fail loudly, naming the key — never run queries with pre-ANSI
+    semantics assumed but not in force."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from splitserve_spark.session import PARITY_CONF
+
+    ok = SimpleNamespace(conf=_StubConf())
+    assert ensure_parity_conf(ok) is ok
+    assert ok.conf.values == PARITY_CONF
+    for conf in (_StubConf(stuck={"spark.sql.ansi.enabled"}),
+                 _StubConf(locked={"spark.sql.ansi.enabled"})):
+        with pytest.raises(RuntimeError, match="spark.sql.ansi.enabled"):
+            ensure_parity_conf(SimpleNamespace(conf=conf))
+
+
 def test_aqe_on_off_equivalence(spark):
     """Property test: AQE must not change results, only plans."""
     from pyspark.sql import functions as F

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from splitserve_spark.plans.inspect import (
     assert_in_plan,
     count_exchanges,
+    count_executed_scans,
     physical_plan,
     pushed_filters,
 )
@@ -483,8 +484,7 @@ def test_no_unfenced_cartesian_anywhere(registry_simple_plans):
     offenders = [
         name
         for name, plan in registry_simple_plans.items()
-        if not name.startswith(("udf_", "stat_observe"))
-        and "CartesianProduct" in plan
+        if "CartesianProduct" in plan
     ]
     assert not offenders, offenders
 
@@ -594,7 +594,7 @@ import pytest  # noqa: E402
 @pytest.fixture(scope="module")
 def registry_simple_plans(spark):
     """One `simple` physical plan per guard-eligible registry query,
-    shared by the three registry-wide guards below — several queries
+    shared by the four registry-wide guards below — several queries
     are eager (driver-side approxQuantile/collect steps), so planning
     each once instead of once per guard is a real suite-time win."""
     from splitserve_spark.registry import REGISTRY, load_all
@@ -620,8 +620,6 @@ def test_no_unpartitioned_window_anywhere(registry_simple_plans):
 
     offenders = {}
     for name, plan in registry_simple_plans.items():
-        if name.startswith(("udf_", "stat_observe")):
-            continue
         if name in UNPARTITIONED_WINDOW_ALLOWED:
             continue
         nodes = unpartitioned_window_nodes_in(plan)
@@ -690,22 +688,15 @@ def test_no_repeat_corpus_scans_anywhere(registry_simple_plans):
     outside the reasoned allow-list above.  A table scanned N times is
     an N× corpus-read multiplier at 100 TB — the defect class fixed by
     the run_cache persists (text r7, funnel/ANN/analytics r8).  Uses
-    the cache-aware counter from tools/scan_audit.py (persisted
-    subtrees count once), whose format assumptions tests/test_tools.py
-    pins."""
-    import os as _os
-    import sys as _sys
-
-    _sys.path.insert(0, _os.path.join(_os.path.dirname(
-        _os.path.dirname(_os.path.abspath(__file__))), "tools"))
-    from scan_audit import _count_executed_scans
-
+    the cache-aware counter plans.inspect.count_executed_scans
+    (persisted subtrees count once), whose format assumptions
+    tests/test_tools.py pins."""
     offenders = {}
     for name, plan in registry_simple_plans.items():
         if name in REPEAT_SCAN_ALLOWED:
             continue
         worst = {
-            t: c for t, c in _count_executed_scans(plan).items() if c >= 3
+            t: c for t, c in count_executed_scans(plan).items() if c >= 3
         }
         if worst:
             offenders[name] = worst

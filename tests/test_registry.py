@@ -10,14 +10,12 @@ def test_driver_window_composition():
     )
     w = driver_window()
     assert len(w) == DRIVER_WINDOW
-    from splitserve_spark.registry import PRI_NEXT_WINDOW
     # "settled" = latest driver verdict fully certifies the spec (a
     # rows-only green upgraded with an oracle is NOT settled — it must
     # re-enter the window for a value-checked verdict).
     waiting = [
         n for n in ordered_registry()
         if n not in w and not _settled(REGISTRY[n]) and REGISTRY[n].oracle
-        and REGISTRY[n].priority < PRI_NEXT_WINDOW
     ]
     greens_in_window = [n for n in w if _settled(REGISTRY[n])]
     assert not (waiting and greens_in_window), (waiting, greens_in_window)
@@ -35,7 +33,6 @@ def test_driver_window_composition():
     never = [
         n for n, s in REGISTRY.items()
         if s.oracle is not None and n not in _DRIVER_VERDICTS
-        and s.priority < PRI_NEXT_WINDOW
     ]
     if len(never) + len(reds) <= DRIVER_WINDOW:
         for name in never:
@@ -45,8 +42,8 @@ def test_driver_window_composition():
 def test_settled_rotation_is_oldest_evidence_first():
     """r8 verdict task: with certification debt at zero, the driver
     window must re-certify the STALEST certifications, not the same 50
-    low-(priority, seq) names every round.  Invariants: (a) settled
-    names appear in non-decreasing evidence-round order; (b) no settled
+    low-seq names every round.  Invariants: (a) settled names appear
+    in non-decreasing evidence-round order; (b) no settled
     name sits in the window while a STALER settled name waits outside
     (modulo unsettled names, which always come first); (c) when the
     whole registry is settled, the window's max evidence round is ≤ the

@@ -1,7 +1,7 @@
-"""Format pins for the non-gating diagnostics in tools/.
+"""Format pins for the plan-string helpers and the tools/ diagnostics.
 
-tools/scan_audit.py regex-parses `explainString(..., "simple")` output
-and skips InMemoryRelation subtrees by indentation — plan-format drift
+plans.inspect.count_executed_scans regex-parses the `simple` plan and
+skips InMemoryRelation subtrees by indentation — plan-format drift
 across Spark versions would silently miscount (r7 ADVICE).  These
 tests pin the exact assumptions against a live plan, so drift fails
 loudly here instead.
@@ -9,25 +9,16 @@ loudly here instead.
 
 from __future__ import annotations
 
-import os
-import sys
-
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "tools"))
-
-from scan_audit import _count_executed_scans, _depth  # noqa: E402
-
-from splitserve_spark.tables import Tables  # noqa: E402
-from tests.oracle_utils import SF_DIR  # noqa: E402
-
-
-def _simple_plan(df) -> str:
-    # The exact call scan_audit.main() uses.
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
+from splitserve_spark.plans.inspect import (
+    _depth,
+    count_executed_scans,
+    physical_plan,
+)
+from splitserve_spark.tables import Tables
+from tests.oracle_utils import SF_DIR
+from tools.scale_smoke import _stream_state_verdict, build_skew_corpus
 
 
 def test_scan_audit_format_assumptions(spark):
@@ -43,7 +34,7 @@ def test_scan_audit_format_assumptions(spark):
         df = cached.join(
             t.region, F.col("n_regionkey") == F.col("r_regionkey")
         )
-        plan = _simple_plan(df)
+        plan = physical_plan(df, mode="simple")
         assert "InMemoryRelation" in plan, plan
         assert "FileScan" in plan and "region.parquet" in plan, plan
 
@@ -55,7 +46,7 @@ def test_scan_audit_format_assumptions(spark):
         nat = next(i for i, l in enumerate(lines) if "nation.parquet" in l)
         assert nat > imr and _depth(lines[nat]) > _depth(lines[imr]), plan
 
-        counts = _count_executed_scans(plan)
+        counts = count_executed_scans(plan)
         assert counts == {"region": 1}, (counts, plan)
     finally:
         cached.unpersist()
@@ -70,16 +61,11 @@ def test_scan_audit_counts_repeat_scans(spark):
         F.col("n_nationkey").alias("k2"), F.col("n_name").alias("nm")
     )
     df = a.join(b, a.n_nationkey == b.k2)
-    counts = _count_executed_scans(_simple_plan(df))
+    counts = count_executed_scans(physical_plan(df, mode="simple"))
     assert counts.get("nation") == 2, counts
 
 
 # ---- scale_smoke helpers (round 9: streaming + skew families) --------
-
-from scale_smoke import (  # noqa: E402
-    _stream_state_verdict,
-    build_skew_corpus,
-)
 
 
 def test_stream_state_verdict_rules():

@@ -31,7 +31,7 @@ def main() -> None:
     ap.add_argument("--out", default="measurements/r12/time_all.jsonl")
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     from splitserve_spark.registry import load_all
     from splitserve_spark.session import get_session
     from splitserve_spark.tables import TABLE_NAMES, Tables
