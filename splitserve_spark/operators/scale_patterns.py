@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
-from splitserve_spark.tables import Tables
+from splitserve_spark.tables import Tables, sfdir_tag
 
 N_SALT = 8
 
@@ -99,8 +99,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # Per-process token (see catalog_ddl._tag): two JVMs on one
     # checkout must not write the same bucketed-table location.
     sweep_stale_locations(spark)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-    tag = f"{tag}_{proc_suffix()}"
+    tag = f"{sfdir_tag(sf_dir)}_{proc_suffix()}"
     t_orders, t_lineitem = f"orders_b_{tag}", f"lineitem_b_{tag}"
     t = Tables(spark, sf_dir)
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")

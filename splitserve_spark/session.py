@@ -113,7 +113,7 @@ def get_session(
 
 
 @contextmanager
-def stream_shuffle_bound(spark: SparkSession, floor: int = 8):
+def stream_shuffle_bound(spark: SparkSession):
     """Pin ``spark.sql.shuffle.partitions`` to the session's actual
     parallelism while a streaming query plans and drains, restoring the
     prior value afterwards.
@@ -124,17 +124,17 @@ def stream_shuffle_bound(spark: SparkSession, floor: int = 8):
     batch-sized value (stock Spark: 200) gives a small drain hundreds
     of state-store instances per stateful operator PER MICRO-BATCH
     (commit + maintenance each), which multiplies drain wall-time by
-    the partition surplus rather than adding parallelism.  Sizing it to
-    ``defaultParallelism`` tracks the cluster (a 1000-core cluster gets
-    1000), so this is scale-adaptive, not a local constant.
+    the partition surplus rather than adding parallelism.  The count is
+    exactly ``defaultParallelism`` — one state store per task slot, one
+    commit wave per micro-batch — so it tracks the cluster.
 
     Use around ``.start()`` + ``awaitTermination()`` — both the
     micro-batch planning and the drain happen inside the block; the
     restore only runs after the query has terminated.
     """
     prior = spark.conf.get("spark.sql.shuffle.partitions")
-    target = max(int(spark.sparkContext.defaultParallelism), floor)
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
+    slots = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots))
     try:
         yield
     finally:

@@ -61,6 +61,7 @@ from pyspark.sql.datasource import (
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
+from splitserve_spark.tables import sfdir_tag
 
 #: Epoch for record timestamps: CreateTime of offset o is EPOCH + o s.
 KAFKA_EPOCH = datetime(2026, 1, 1, 0, 0, 0)
@@ -470,7 +471,7 @@ def source_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     register_kafka_shaped(spark)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
+    tag = sfdir_tag(sf_dir)
     name = f"kafka_q_{tag}_p{os.getpid()}"
     broker_dir = tempfile.mkdtemp(prefix="kshape_broker_")
     stream = (
@@ -590,7 +591,7 @@ def source_kafka_json_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     register_kafka_shaped(spark)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
+    tag = sfdir_tag(sf_dir)
     name = f"kafka_j_{tag}_p{os.getpid()}"
     broker_dir = tempfile.mkdtemp(prefix="kshape_json_")
     starting = json.dumps({str(p): v for p, v in KJ_STARTING.items()})
@@ -706,7 +707,7 @@ def stream_kafka_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug anywhere in source or aggregation is a hash mismatch."""
     ensure_parity_conf(spark)
     register_kafka_shaped(spark)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
+    tag = sfdir_tag(sf_dir)
     name = f"kafka_w_{tag}_p{os.getpid()}"
     broker_dir = tempfile.mkdtemp(prefix="kshape_win_")
     stream = (

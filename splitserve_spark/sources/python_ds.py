@@ -32,6 +32,7 @@ from pyspark.sql.datasource import (
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
+from splitserve_spark.tables import sfdir_tag
 
 PDS_DOCS = 500
 PDS_SHARDS = 8
@@ -191,7 +192,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(FrontierTailSource)
     except Exception:
         pass
-    name = "pys_" + "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
+    name = "pys_" + sfdir_tag(sf_dir)
     stream = spark.readStream.format("crawl_frontier_tail").load()
     q = (
         stream.writeStream.format("memory")

@@ -104,9 +104,7 @@ def source_socket_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_N_WORDS} words arrived) is the result the oracle hashes."""
     ensure_parity_conf(spark)
     host, port = serve_lines(SOCKET_LINES)
-    name = "sock_wc_" + "".join(
-        c if c.isalnum() else "_" for c in sf_dir.strip("/")
-    )
+    name = "sock_wc_" + sfdir_tag(sf_dir)
     stream = (
         spark.readStream.format("socket")
         .option("host", host)

@@ -240,16 +240,17 @@ def stream_file_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates (beyond-2.1 extra): exact dedup on
-    event_id through the micro-batch engine with watermark-bounded
-    state; the post-dedup count must equal the batch count(DISTINCT) —
-    dedup state dropped nothing and deduplicated everything. (A raw
-    total alongside would need a second stateful aggregation over the
-    pre-dedup stream; kept out of scope for this single-metric check.)"""
+    event_id through the micro-batch engine, with state holding every
+    key (stream_dedup_within_watermark is the bounded-state form); the
+    post-dedup count must equal the batch count(DISTINCT) — dedup state
+    dropped nothing and deduplicated everything.  No watermark: ``ts``
+    is not a dedup column, so it would evict nothing and only add a
+    no-data micro-batch re-committing every key.  (A raw total would
+    need a second stateful aggregation; out of scope here.)"""
     ensure_parity_conf(spark)
     name = "sdid_" + sfdir_tag(sf_dir)
     deduped = (
         _events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
         .groupBy()
         .agg(F.count(F.lit(1)).alias("n_unique"))
@@ -562,9 +563,7 @@ def stream_dedup_within_watermark(
     side a pure dedup (the single-stateful-operator form every engine
     version supports)."""
     ensure_parity_conf(spark)
-    name = "sdww_" + "".join(
-        c if c.isalnum() else "_" for c in sf_dir.strip("/")
-    )
+    name = "sdww_" + sfdir_tag(sf_dir)
     leg = lambda: _events_stream(spark, sf_dir).select(  # noqa: E731
         "event_id", "event_type", "ts"
     )

@@ -60,6 +60,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from splitserve_spark.session import ensure_parity_conf
+from splitserve_spark.tables import sfdir_tag
 
 TWS_OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_cents bigint, n_types bigint"
@@ -147,9 +148,7 @@ def stream_tws_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from splitserve_spark.tables import normalize_event_ts
 
     src_dir = _ordered_event_splits(spark, sf_dir)
-    name = "stws_" + "".join(
-        c if c.isalnum() else "_" for c in sf_dir.strip("/")
-    )
+    name = "stws_" + sfdir_tag(sf_dir)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema)

@@ -108,14 +108,12 @@ def test_cusum_stream_really_crosses_batch_boundaries(spark):
     per split with strictly increasing n_events."""
     from splitserve_spark.registry import REGISTRY, load_all
     from splitserve_spark.streaming.custom_state import _N_SPLITS
+    from splitserve_spark.tables import sfdir_tag
     from tests.oracle_utils import SF_DIR
 
     load_all()
     REGISTRY["stream_cusum_stateful"].fn(spark, SF_DIR).count()
-    name = "scs_" + "".join(
-        c if c.isalnum() else "_" for c in SF_DIR.strip("/")
-    )
-    sink = spark.table(name).toPandas()
+    sink = spark.table("scs_" + sfdir_tag(SF_DIR)).toPandas()
     per_type = sink.groupby("event_type")["n_events"]
     assert (per_type.count() == _N_SPLITS).all(), sink
     assert (

@@ -120,6 +120,7 @@ def test_stream_ingest_manifest_gates_readback(spark):
     import tempfile
 
     from splitserve_spark.registry import REGISTRY
+    from splitserve_spark.tables import sfdir_tag
 
     out = REGISTRY["pipeline_stream_ingest"].fn(spark, SF_DIR).toPandas()
     n_before = int(out["n_docs"].sum())
@@ -127,9 +128,7 @@ def test_stream_ingest_manifest_gates_readback(spark):
     # derivation as pipeline_stream_ingest — gettempdir, not /tmp)
     base = os.path.join(
         tempfile.gettempdir(), "splitserve_spark_stream",
-        "ingest_" + "".join(c if c.isalnum() else "_"
-                            for c in SF_DIR.strip("/"))
-        + f"_p{os.getpid()}",
+        f"ingest_{sfdir_tag(SF_DIR)}_p{os.getpid()}",
     )
     shards = os.path.join(base, "shards")
     assert os.path.isdir(os.path.join(shards, "_spark_metadata")), (

@@ -246,7 +246,6 @@ def streaming_smoke(spark, src, out, scale):
         tag = "sdd_" + run_tag + ("_k" if sf_dir == out else "_1")
         ded = (
             _events_stream(spark, sf_dir)
-            .withWatermark("ts", "1 hour")
             .dropDuplicates(["event_id"])
             .groupBy()
             .agg(F.count(F.lit(1)).alias("n_unique"))
