@@ -58,6 +58,14 @@ def with_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _capped_docs(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
+    """The doc_id frame of the registered mm_* queries: doc_id < cap,
+    which bounds their oracle output (the kernels themselves are pure
+    functions of doc_id and run uncapped in the scale smoke)."""
+    t = Tables(spark, sf_dir)
+    return t.documents.select("doc_id").filter(F.col("doc_id") < cap)
+
+
 @register(
     "mm_binary_meta",
     oracle="""
@@ -123,6 +131,14 @@ def _encode_wav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         )
 
 
+def _wav(docs: DataFrame) -> DataFrame:
+    """doc_id frame → (doc_id, payload) with each doc's PCM-WAV bytes:
+    the one encode step every WAV builder starts from."""
+    return docs.mapInPandas(
+        _encode_wav_batches, schema="doc_id bigint, payload binary"
+    )
+
+
 def _parse_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
     """Walk the RIFF chunk list, unpack the fmt header, numpy-decode
     the int16 data chunk → (channels, sample_rate, samples).  Raises on
@@ -176,6 +192,18 @@ def _decode_wav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         yield out
 
 
+def wav_features(docs: DataFrame) -> DataFrame:
+    """Uncapped decode pipeline: doc_id frame → per-doc WAV header
+    fields and sample stats, parsed back from the encoded bytes."""
+    return _wav(docs).mapInPandas(
+        _decode_wav_batches,
+        schema=(
+            "doc_id bigint, channels int, sample_rate int, bits int, "
+            "n_samples int, byte_len int, mean_amp double, peak_amp int"
+        ),
+    )
+
+
 @register(
     "mm_decode_features",
     oracle=f"""
@@ -216,17 +244,8 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap the kernel for PIL/ffmpeg for codec formats (see
     `decode_media`)."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") < MM_WAV_DOCS)
-    wav = docs.mapInPandas(
-        _encode_wav_batches, schema="doc_id bigint, payload binary"
-    )
-    return wav.mapInPandas(
-        _decode_wav_batches,
-        schema=(
-            "doc_id bigint, channels int, sample_rate int, bits int, "
-            "n_samples int, byte_len int, mean_amp double, peak_amp int"
-        ),
+    return wav_features(
+        _capped_docs(spark, sf_dir, MM_WAV_DOCS)
     ).orderBy("doc_id")
 
 
@@ -259,6 +278,18 @@ def _frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     }
                 )
         yield pd.DataFrame(rows, columns=cols)
+
+
+def frame_sample(docs: DataFrame) -> DataFrame:
+    """Uncapped frame pipeline: doc_id frame → every FRAME_STRIDE-th
+    FRAME_LEN-sample frame of each decoded WAV, with energy and peak."""
+    return _wav(docs).mapInPandas(
+        _frame_batches,
+        schema=(
+            "doc_id bigint, frame_idx int, n_in_frame int, "
+            "energy bigint, peak int"
+        ),
+    )
 
 
 @register(
@@ -304,17 +335,8 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits per-frame energy/peak — the 1:N payload→frames fan-out of a
     video/audio pipeline, analytically oracled per frame."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") < MM_FRAME_DOCS)
-    wav = docs.mapInPandas(
-        _encode_wav_batches, schema="doc_id bigint, payload binary"
-    )
-    return wav.mapInPandas(
-        _frame_batches,
-        schema=(
-            "doc_id bigint, frame_idx int, n_in_frame int, "
-            "energy bigint, peak int"
-        ),
+    return frame_sample(
+        _capped_docs(spark, sf_dir, MM_FRAME_DOCS)
     ).orderBy("doc_id", "frame_idx")
 
 
@@ -350,6 +372,13 @@ def _encode_ppm_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
                 "payload": [_ppm_bytes(int(d)) for d in pdf["doc_id"]],
             }
         )
+
+
+def _ppm(docs: DataFrame) -> DataFrame:
+    """doc_id frame → (doc_id, payload) with each doc's PPM bytes."""
+    return docs.mapInPandas(
+        _encode_ppm_batches, schema="doc_id long, payload binary"
+    )
 
 
 def _parse_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -449,13 +478,8 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort; at 100 TB the payload column streams through
     Arrow batches and only the tiny feature rows come out."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") < MM_PPM_DOCS)
-    payloads = ids.mapInPandas(
-        _encode_ppm_batches, schema="doc_id long, payload binary"
-    )
     return (
-        payloads.mapInPandas(
+        _ppm(_capped_docs(spark, sf_dir, MM_PPM_DOCS)).mapInPandas(
             _decode_ppm_batches,
             schema="doc_id long, width int, height int, n_pixels int, "
                    "sum_r long, sum_g long, sum_b long",
@@ -505,6 +529,16 @@ def _ppm_patch_sum_sql(c: int) -> str:
     )
 
 
+def image_patches(docs: DataFrame) -> DataFrame:
+    """Uncapped patch pipeline: doc_id frame → one row per full
+    MM_PATCH×MM_PATCH patch of each decoded PPM, with channel sums."""
+    return _ppm(docs).mapInPandas(
+        _patch_ppm_batches,
+        schema="doc_id long, py int, px int, "
+               "sum_r long, sum_g long, sum_b long",
+    )
+
+
 @register(
     "mm_image_patches",
     oracle=f"""
@@ -544,19 +578,9 @@ def mm_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the synthetic pixel formula analytically over the
     same grid."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    ids = t.documents.select("doc_id").filter(F.col("doc_id") < MM_PPM_DOCS)
-    payloads = ids.mapInPandas(
-        _encode_ppm_batches, schema="doc_id long, payload binary"
-    )
-    return (
-        payloads.mapInPandas(
-            _patch_ppm_batches,
-            schema="doc_id long, py int, px int, "
-                   "sum_r long, sum_g long, sum_b long",
-        )
-        .orderBy("doc_id", "py", "px")
-    )
+    return image_patches(
+        _capped_docs(spark, sf_dir, MM_PPM_DOCS)
+    ).orderBy("doc_id", "py", "px")
 
 
 #: Audio front-end frame geometry: non-overlapping AUDIO_FRAME-sample
@@ -656,12 +680,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     input partitioning, and the sort is the queryable-output
     convention, not part of the pipeline."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") < MM_WAV_DOCS)
-    wav = docs.mapInPandas(
-        _encode_wav_batches, schema="doc_id bigint, payload binary"
-    )
-    return wav.mapInPandas(
+    return _wav(_capped_docs(spark, sf_dir, MM_WAV_DOCS)).mapInPandas(
         _audio_feature_batches,
         schema=(
             "doc_id bigint, frame_id int, energy bigint, "
@@ -705,6 +724,18 @@ def _autocorr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
                       ("pitch_lag", "int32"), ("r_peak", "int64")):
             out[c] = out[c].astype(dt)
         yield out
+
+
+def audio_autocorr(docs: DataFrame) -> DataFrame:
+    """Uncapped autocorrelation pipeline: doc_id frame → per-clip
+    r(0..2), pitch lag and peak autocorrelation of each decoded WAV."""
+    return _wav(docs).mapInPandas(
+        _autocorr_batches,
+        schema=(
+            "doc_id bigint, n_samples int, r0 bigint, r1 bigint, "
+            "r2 bigint, pitch_lag int, r_peak bigint"
+        ),
+    )
 
 
 @register(
@@ -764,15 +795,6 @@ def mm_audio_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort; the per-clip kernel is O(n·{AC_MAX_LAG}) numpy
     dot products inside the batch."""
     ensure_parity_conf(spark)
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id").filter(F.col("doc_id") < MM_WAV_DOCS)
-    wav = docs.mapInPandas(
-        _encode_wav_batches, schema="doc_id bigint, payload binary"
-    )
-    return wav.mapInPandas(
-        _autocorr_batches,
-        schema=(
-            "doc_id bigint, n_samples int, r0 bigint, r1 bigint, "
-            "r2 bigint, pitch_lag int, r_peak bigint"
-        ),
+    return audio_autocorr(
+        _capped_docs(spark, sf_dir, MM_WAV_DOCS)
     ).orderBy("doc_id")

@@ -711,10 +711,8 @@ def _attrib_outer_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def _attrib_outer_joined(spark: SparkSession, src_dir: str) -> DataFrame:
     """The LEFT OUTER attribution topology over a staged heartbeat dir
-    (two filtered watermarked sides, the 3-clause range condition) —
-    shared by the registered operator and tools/scale_smoke.py, so the
-    smoke certifies the SHIPPED plan rather than a hand copy that can
-    drift."""
+    (two filtered watermarked sides, the 3-clause range condition) of
+    stream_click_attribution_outer, before its output projection."""
     from splitserve_spark.tables import normalize_event_ts
 
     raw_schema = spark.read.parquet(src_dir).schema

@@ -277,13 +277,20 @@ def test_kafka_crash_window_doubles_once_delivery_exact(spark, tmp_path):
         q.stop()
 
     # The kill: engine commit log loses its newest entry; the broker
-    # state's last_end sits one full cap ahead (the latestOffset that
-    # ran just before the crash, whose batch never reached the WAL).
+    # state's last_end sits one full cap ahead of the offset WAL's
+    # newest end (the latestOffset that ran just before the crash,
+    # whose batch never reached the WAL).  Measured from the WAL, not
+    # from the broker state: phase 1's stop can itself land between a
+    # latestOffset and its WAL write, which already leaves last_end a
+    # cap ahead, and a second cap on top would stack two crash windows.
     delete_latest_commit(ckpt)
+    offsets = os.path.join(ckpt, "offsets")
+    newest = max(int(f) for f in os.listdir(offsets) if f.isdigit())
+    with open(os.path.join(offsets, str(newest))) as fh:
+        pre_kill_end = int(json.loads(fh.read().splitlines()[2])["0"])
     state_path = os.path.join(broker_dir, f"{topic}.json")
     with open(state_path) as fh:
         state = json.load(fh)
-    pre_kill_end = int(state["last_end"]["0"])
     assert pre_kill_end < KC_LOG - 2 * KC_CAP, (
         f"phase 1 drained too far ({pre_kill_end}) for the doubling to "
         "be observable; lower the trigger rate"

@@ -3,14 +3,13 @@ from __future__ import annotations
 import json
 import shutil
 import tempfile
-import threading
 
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from splitserve_spark.registry import REGISTRY, load_all
+from splitserve_spark.streaming.progress import drain_events
 from tests.oracle_utils import SF_DIR, check_query
 
 load_all()
@@ -35,50 +34,13 @@ def test_oracle_match(spark, name):
     check_query(spark, name, SF_DIR)
 
 
-class _DrainProgress(StreamingQueryListener):
-    """Progress events of the queries started while registered.  Events
-    of queries started earlier are ignored, so a late event from a
-    previous test cannot leak in."""
-
-    def __init__(self) -> None:
-        self.runs: set[str] = set()
-        self.events: list[dict] = []
-        self.terminated = threading.Event()
-
-    def onQueryStarted(self, event) -> None:
-        self.runs.add(str(event.runId))
-
-    def onQueryProgress(self, event) -> None:
-        if str(event.progress.runId) in self.runs:
-            self.events.append(json.loads(event.progress.json))
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        if str(event.runId) in self.runs:
-            self.terminated.set()
-
-
-def _drain_progress(spark, name):
-    """Run the registered drain ``name``; return its progress events."""
-    listener = _DrainProgress()
-    spark.streams.addListener(listener)
-    try:
-        REGISTRY[name].fn(spark, SF_DIR)
-        # The listener bus is asynchronous but ordered: once the
-        # termination arrives, every progress event has too.
-        assert listener.terminated.wait(60), f"{name}: no termination event"
-    finally:
-        spark.streams.removeListener(listener)
-    return listener.events
-
-
 def test_dedup_ids_drains_in_one_micro_batch(spark):
     """Plain dropDuplicates never evicts state, so a watermark on it
     bounds nothing and only adds a no-data micro-batch that re-commits
     every key.  The drain reads every file in one batch and stops."""
-    events = _drain_progress(spark, "stream_dedup_ids")
+    _, events = drain_events(
+        spark, lambda: REGISTRY["stream_dedup_ids"].fn(spark, SF_DIR)
+    )
     assert [e["batchId"] for e in events] == [0]
 
 
@@ -90,8 +52,8 @@ def test_state_stores_match_slots(spark, name):
     """stream_shuffle_bound sizes each stateful operator to exactly one
     state store per task slot: one commit wave per micro-batch."""
     slots = spark.sparkContext.defaultParallelism
-    ops = [op for e in _drain_progress(spark, name)
-           for op in e["stateOperators"]]
+    _, events = drain_events(spark, lambda: REGISTRY[name].fn(spark, SF_DIR))
+    ops = [op for e in events for op in e["stateOperators"]]
     assert ops, f"{name}: no state operator reported"
     assert [op["numShufflePartitions"] for op in ops] == [slots] * len(ops)
 

@@ -18,7 +18,17 @@ from splitserve_spark.plans.inspect import (
 )
 from splitserve_spark.tables import Tables
 from tests.oracle_utils import SF_DIR
-from tools.scale_smoke import _stream_state_verdict, build_skew_corpus
+from tools.scale_smoke import (
+    MM_SMOKE,
+    SMOKE_QUERIES,
+    STREAM_SMOKE,
+    STREAM_TWINS,
+    _stream_state_verdict,
+    build_skew_corpus,
+    main,
+    smoke_record,
+    stream_twin,
+)
 
 
 def test_scan_audit_format_assumptions(spark):
@@ -126,3 +136,52 @@ def test_build_skew_corpus_shape(tmp_path):
         f"SELECT count(DISTINCT user_id) FROM '{src}/events.parquet'"
     ).fetchone()[0]
     assert n_users_uni == 4 * n_users_src
+
+
+def test_smoke_names_are_registered():
+    """Every query the smoke runs or stands in for is registered: the
+    pipeline rows, the stream twins' drains, and the mm_* queries that
+    cap each multimodal builder (which must exist in multimodal.py)."""
+    from splitserve_spark.operators import multimodal as M
+    from splitserve_spark.registry import REGISTRY, load_all
+
+    load_all()
+    names = [*SMOKE_QUERIES, *STREAM_TWINS.values(), *MM_SMOKE.values()]
+    assert [n for n in names if n not in REGISTRY] == []
+    assert set(STREAM_TWINS) <= set(STREAM_SMOKE)
+    assert all(callable(getattr(M, b, None)) for b in MM_SMOKE)
+
+
+def test_stream_twin_runs_registered_dedup(spark):
+    """The dedup_ids row runs stream_dedup_ids itself: its state holds
+    every event_id plus the count aggregate's one row, and passes the
+    state-tracks-keys verdict."""
+    res = stream_twin(spark, "dedup_ids", SF_DIR)
+    assert res["rows"] == 1
+    assert res["state"] == res["keys"] + 1
+    assert res["keys"] == res["inputs"]
+    rec = {f"{k}_1x": v for k, v in res.items()}
+    assert _stream_state_verdict("dedup_ids", rec, 1)
+
+
+def test_smoke_record_suffixes_judges_and_reports(capsys):
+    """One record per call: fields suffixed by side, the second-over-
+    first ratios, the verdict — and a raising runner becomes an error
+    record with no verdict."""
+    rec = smoke_record(
+        "stream:x", lambda n: {"rows": n, "state": 2 * n},
+        [("1x", 1), ("8x", 8)], lambda r: "ok",
+    )
+    assert (rec["rows_1x"], rec["rows_8x"]) == (1, 8)
+    assert rec["state_ratio"] == 8.0 and "time_ratio" in rec
+    assert rec["verdict"] == "ok"
+    bad = smoke_record("x", lambda _: 1 / 0, [("", None)], lambda r: "ok")
+    assert "verdict" not in bad and bad["error"].startswith("ZeroDivision")
+    assert len(capsys.readouterr().out.splitlines()) == 2
+
+
+def test_smoke_only_rejects_unknown_names(monkeypatch):
+    monkeypatch.setattr(
+        "sys.argv", ["scale_smoke.py", "--only", "wav_features,bogus"]
+    )
+    assert main() == 2

@@ -24,14 +24,17 @@ def main() -> None:
     from splitserve_spark.registry import load_all
     from splitserve_spark.session import get_session
 
-    spark = get_session("plan-dump", shuffle_partitions=8)
+    # Fixed slots as well as fixed shuffle partitions: operators that
+    # size their own repartitions from defaultParallelism would
+    # otherwise embed the host's CPU count in the committed plans.
+    spark = get_session("plan-dump", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
     out = [
         "# PLANS — physical plans of the bench query set",
         "",
         f"Generated by `python tools/gen_plans.py` at `{sf_dir}`, "
-        "shuffle_partitions=8. The `simple` physical plan before "
+        "local[8], shuffle_partitions=8. The `simple` physical plan before "
         "execution (AQE may further coalesce/convert at runtime).",
         "",
     ]

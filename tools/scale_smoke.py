@@ -3,6 +3,8 @@
 replicated corpus and record wall time + output growth.
 
     python tools/scale_smoke.py [--scale 8] [--src /root/testdata/sf0.1]
+        [--family all|pipeline|graph|streaming|skew|multimodal|functions|vocab]
+        [--only NAME,...] [--ratio-limit R]
 
 Builds `<repo>/tmp_scale/x{K}/` containing documents / embeddings /
 events replicated K× (ids offset per copy, payload columns byte-
@@ -22,6 +24,24 @@ What this checks that the per-SF strict runs cannot:
   twins;
 - nothing driver-materializes the corpus (a collect would OOM long
   before 100 TB, but shows up here as superlinear time first).
+
+Every record comes out of one loop (smoke_record): a family supplies
+a runner and a verdict; the loop times the runner on both sides (1×
+and K×, or uniform and hot), suffixes its fields with the side, and
+judges the record.  Where a registered plan exists the runner executes
+it: pipeline rows and the four STREAM_TWINS run their REGISTRY query,
+multimodal rows the multimodal.py builders the mm_* queries cap.
+Runners with no registered twin, and why:
+- graph:* — the registered ops read fenced, SF-invariant fixtures, so
+  the smoke replicates their edge lists and drives graph.py's cores;
+- stream:session_window — stream_session_window is a batch query;
+- stream:dedup_within — the registered within-watermark dedup drains
+  in one batch, so it never evicts;
+- stream:ingest_horizon — pipeline_stream_ingest cannot grow its log
+  in time;
+- fn:* — wide function projections, a probe, not a query;
+- skew:* — a hot-key corpus and its uniform twin no query reads;
+- vocab:* — a Heaps'-law corpus for the tfidf df-join flip.
 
 A time_ratio wildly above K (for a K× corpus) is the smoke signal;
 modest ratios are expected because local[32] overheads amortize.
@@ -76,12 +96,20 @@ SMOKE_QUERIES = [
 #: — so replication smoke is their ONLY scale check.  Each runs the
 #: real micro-batch engine on the 1× source and the K× corpus and
 #: records, besides wall time, the peak state-store row count
-#: (lastProgress stateOperators numRowsTotal): state must track KEYS
+#: (progress stateOperators numRowsTotal): state must track KEYS
 #: (sessions / ids / in-horizon join rows / event types), never input
 #: history — the property that bounds an unbounded 100 TB/day stream.
 STREAM_SMOKE = ["session_window", "dedup_ids", "dedup_within",
                 "stream_stream_join", "attribution_outer", "cusum",
                 "ingest_horizon"]
+
+#: Stream rows that run a registered drain: smoke name → registered query.
+STREAM_TWINS = {
+    "dedup_ids": "stream_dedup_ids",
+    "stream_stream_join": "stream_click_attribution",
+    "attribution_outer": "stream_click_attribution_outer",
+    "cusum": "stream_cusum_stateful",
+}
 
 
 #: Graph-family smoke: the iterative operators are exempt from the
@@ -130,9 +158,9 @@ def _prefix_copies(df, scale, cols):
     return reduce(lambda a, b: a.union(b), parts)
 
 
-def graph_smoke(spark, src, scale):
-    """Yield (name, runner_1x, runner_Kx) triples over the factored
-    graph cores on replicated edge lists."""
+def graph_smoke(spark, src):
+    """{name: runner(k)} over the factored graph cores on k-fold
+    replicated edge lists; runners return {rows}."""
     from pyspark.sql import functions as F
 
     from splitserve_spark.operators import graph as G
@@ -186,39 +214,99 @@ def graph_smoke(spark, src, scale):
         "scc": scc, "kcore": kcore, "adamic_adar": adamic_adar,
         "sssp": sssp, "triangle": triangle,
     }
-    for name in GRAPH_SMOKE:
-        b = builders[name]
-        yield name, (lambda b=b: b(1)), (lambda b=b, k=scale: b(k))
+    return {
+        name: (lambda k, b=b: {"rows": b(k).count()})
+        for name, b in builders.items()
+    }
 
 
-def streaming_smoke(spark, src, out, scale):
-    """Yield (name, runner(sf_dir)) pairs over the stateful streaming
-    operators.  Each runner executes a REAL micro-batch query
-    (availableNow) against the given events directory and returns
-    {rows, state, keys}: sink rows, the peak state-store row count
-    across all progress events, and the batch-computed key count the
-    state is supposed to track.  The K× corpus replicates events with
-    per-copy user_id/event_id offsets and identical ts/event_type, so
-    keys grow exactly K× for user- and id-keyed state and stay CONSTANT
-    for event_type-keyed state (CUSUM) — the sharpest form of the
+def _drain_to_memory(spark, df, mode, tag):
+    """Drain ``df`` (availableNow) into memory table ``tag``; return
+    (sink rows, peak state-store rows)."""
+    from splitserve_spark.streaming.progress import drain_events, state_peak
+
+    _, events = drain_events(
+        spark,
+        lambda: df.writeStream.format("memory").outputMode(mode)
+        .queryName(tag).trigger(availableNow=True).start()
+        .awaitTermination(),
+    )
+    return spark.table(tag).count(), state_peak(events)
+
+
+def stream_twin(spark, name, sf_dir):
+    """Run the registered drain ``STREAM_TWINS[name]`` over ``sf_dir``
+    and return {rows, state, keys, inputs}: the rows its sink received
+    and its peak state-store rows (both from its progress events), the
+    batch-computed key count the state is supposed to track, and the
+    input event count."""
+    from pyspark.sql import functions as F
+
+    from splitserve_spark.registry import REGISTRY
+    from splitserve_spark.streaming.progress import drain_events, state_peak
+    from splitserve_spark.streaming.stateful import ATTRIB_GAP
+    from splitserve_spark.tables import normalize_event_ts
+
+    _, events = drain_events(
+        spark, lambda: REGISTRY[STREAM_TWINS[name]].fn(spark, sf_dir)
+    )
+    rows = sum(e["sink"]["numOutputRows"] for e in events)
+    ev = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    if name == "dedup_ids":
+        keys = ev.select("event_id").distinct().count()
+    elif name == "cusum":
+        keys = ev.select("event_type").distinct().count()
+    else:  # join state buffers in-horizon rows of both sides
+        keys = ev.filter(F.col("event_type").isin("click", "purchase")).count()
+    if name == "attribution_outer":
+        # The heartbeat flush must hold at K×: sink rows EQUAL the
+        # batch LEFT JOIN row count (every unmatched click's window
+        # closed by the sentinel-advanced watermark), failing loudly if
+        # the flush ever stops working at scale.
+        cond = (
+            (F.col("c_user") == F.col("b_user"))
+            & (F.col("buy_ts") >= F.col("click_ts"))
+            & (F.col("buy_ts")
+               <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIB_GAP}"))
+        )
+        cb = ev.filter(F.col("event_type") == "click").select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+        )
+        bb = ev.filter(F.col("event_type") == "purchase").select(
+            F.col("user_id").alias("b_user"),
+            F.col("ts").alias("buy_ts"),
+        )
+        expect = cb.join(bb, cond, "left_outer").count()
+        if rows != expect:
+            raise AssertionError(
+                f"outer flush incomplete at {sf_dir}: sink rows {rows} "
+                f"!= batch left-join {expect}"
+            )
+        keys += 2  # the two heartbeat sentinels sit in join state too
+    return {"rows": rows, "state": state_peak(events), "keys": keys,
+            "inputs": ev.count()}
+
+
+def streaming_smoke(spark, out, scale):
+    """{name: runner(sf_dir)} over the stateful streaming operators.
+    Each runner executes a REAL micro-batch query against the given
+    events directory and returns {rows, state, keys, inputs}: sink
+    rows, the peak state-store row count across all progress events,
+    the batch-computed key count the state is supposed to track, and
+    the input event count.  STREAM_TWINS rows run their registered
+    drain (stream_twin); the three runners below have no registered
+    twin.  The K× corpus replicates events with per-copy
+    user_id/event_id offsets and identical ts/event_type, so keys grow
+    exactly K× for user- and id-keyed state and stay CONSTANT for
+    event_type-keyed state (CUSUM) — the sharpest form of the
     state-tracks-keys claim."""
     from pyspark.sql import functions as F
 
     from splitserve_spark.streaming.stateful import GAP, _events_stream
 
     run_tag = f"sm{os.getpid()}_{scale}"
-
-    def drive(writer, name):
-        q = writer.queryName(name).trigger(availableNow=True).start()
-        q.awaitTermination()
-        state = 0
-        for p in q.recentProgress:
-            tot = sum(
-                so.get("numRowsTotal", 0)
-                for so in p.get("stateOperators", [])
-            )
-            state = max(state, tot)
-        return spark.table(name).count(), state
 
     def session_window(sf_dir):
         tag = "ssw_" + run_tag + ("_k" if sf_dir == out else "_1")
@@ -232,29 +320,11 @@ def streaming_smoke(spark, src, out, scale):
         # sessions ending after (max_ts - watermark) stay open in state
         # and never reach the sink, so rows < keys here — the state
         # peak is the signal, the sink count is informational.
-        rows, state = drive(
-            agg.writeStream.format("memory").outputMode("append"), tag
-        )
+        rows, state = _drain_to_memory(spark, agg, "append", tag)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         keys = (  # batch twin: the true session count state must track
             ev.groupBy(F.session_window("ts", GAP), "user_id").count().count()
         )
-        return {"rows": rows, "state": state, "keys": keys,
-                "inputs": ev.count()}
-
-    def dedup_ids(sf_dir):
-        tag = "sdd_" + run_tag + ("_k" if sf_dir == out else "_1")
-        ded = (
-            _events_stream(spark, sf_dir)
-            .dropDuplicates(["event_id"])
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n_unique"))
-        )
-        rows, state = drive(
-            ded.writeStream.format("memory").outputMode("complete"), tag
-        )
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        keys = ev.select("event_id").distinct().count()
         return {"rows": rows, "state": state, "keys": keys,
                 "inputs": ev.count()}
 
@@ -283,9 +353,7 @@ def streaming_smoke(spark, src, out, scale):
         ded = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        rows, state = drive(
-            ded.writeStream.format("memory").outputMode("append"), tag
-        )
+        rows, state = _drain_to_memory(spark, ded, "append", tag)
         # The bound state must respect: the largest single split (all
         # of one batch's keys live until the next batch's watermark).
         keys = max(
@@ -293,134 +361,6 @@ def streaming_smoke(spark, src, out, scale):
             for f in sorted(glob.glob(f"{src_dir}/b*.parquet"))
         )
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return {"rows": rows, "state": state, "keys": keys,
-                "inputs": ev.count()}
-
-    def stream_stream_join(sf_dir):
-        from splitserve_spark.streaming.stateful import ATTRIB_GAP
-
-        tag = "ssj_" + run_tag + ("_k" if sf_dir == out else "_1")
-        clicks = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", "1 hour")
-        )
-        buys = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("buy_id"),
-                F.col("user_id").alias("b_user"),
-                F.col("ts").alias("buy_ts"),
-            )
-            .withWatermark("buy_ts", "1 hour")
-        )
-        joined = clicks.join(
-            buys,
-            (F.col("c_user") == F.col("b_user"))
-            & (F.col("buy_ts") >= F.col("click_ts"))
-            & (F.col("buy_ts")
-               <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIB_GAP}")),
-            "inner",
-        )
-        rows, state = drive(
-            joined.writeStream.format("memory").outputMode("append"), tag
-        )
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        keys = ev.filter(
-            F.col("event_type").isin("click", "purchase")
-        ).count()  # join state buffers in-horizon rows of both sides
-        return {"rows": rows, "state": state, "keys": keys,
-                "inputs": ev.count()}
-
-    def attribution_outer(sf_dir):
-        """LEFT OUTER twin of stream_stream_join (the round-11
-        stream_click_attribution_outer operator): buffered-row state
-        must be IDENTICAL in kind to the inner join — outer semantics
-        add no state rows, only deferred null emission — while the
-        output grows by the unmatched clicks.  The runner also proves
-        the heartbeat flush holds at K×: sink rows must EQUAL the
-        batch LEFT JOIN row count (every unmatched click's window
-        closed by the sentinel-advanced watermark), failing loudly if
-        the flush ever stops working at scale."""
-        from splitserve_spark.streaming.stateful import (
-            ATTRIB_GAP,
-            _attrib_outer_dir,
-            _attrib_outer_joined,
-        )
-        from splitserve_spark.tables import normalize_event_ts
-
-        tag = "sso_" + run_tag + ("_k" if sf_dir == out else "_1")
-        src_dir = _attrib_outer_dir(spark, sf_dir)
-        # The SHIPPED topology, not a hand copy — drift-proof.
-        joined = _attrib_outer_joined(spark, src_dir)
-        _, state = drive(
-            joined.writeStream.format("memory").outputMode("append"), tag
-        )
-        rows = spark.table(tag).filter(F.col("click_id") >= 0).count()
-        ev = normalize_event_ts(
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-        )
-        cond = (
-            (F.col("c_user") == F.col("b_user"))
-            & (F.col("buy_ts") >= F.col("click_ts"))
-            & (F.col("buy_ts")
-               <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIB_GAP}"))
-        )
-        cb = ev.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        bb = ev.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("buy_ts"),
-        )
-        expect = cb.join(bb, cond, "left_outer").count()
-        if rows != expect:
-            raise AssertionError(
-                f"outer flush incomplete at {sf_dir}: sink rows {rows} "
-                f"!= batch left-join {expect}"
-            )
-        # Join state buffers in-horizon rows of both sides, plus the
-        # two heartbeat sentinels.
-        keys = ev.filter(
-            F.col("event_type").isin("click", "purchase")
-        ).count() + 2
-        return {"rows": rows, "state": state, "keys": keys,
-                "inputs": ev.count()}
-
-    def cusum(sf_dir):
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        from splitserve_spark.streaming import custom_state as C
-        from splitserve_spark.tables import normalize_event_ts
-
-        tag = "scu_" + run_tag + ("_k" if sf_dir == out else "_1")
-        src_dir = C._ordered_event_splits(spark, sf_dir)
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = normalize_event_ts(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src_dir}/b*.parquet")
-        ).select("event_type", "ts", "event_id", "value")
-        upd = stream.groupBy("event_type").applyInPandasWithState(
-            C._fold_cusum,
-            outputStructType=C.CUSUM_OUTPUT_SCHEMA,
-            stateStructType=C.CUSUM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        rows, state = drive(
-            upd.writeStream.format("memory").outputMode("update"), tag
-        )
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        keys = ev.select("event_type").distinct().count()
         return {"rows": rows, "state": state, "keys": keys,
                 "inputs": ev.count()}
 
@@ -445,6 +385,10 @@ def streaming_smoke(spark, src, out, scale):
             KQ_PARTS,
             KQ_SKEW,
             register_kafka_shaped,
+        )
+        from splitserve_spark.streaming.progress import (
+            drain_events,
+            state_peak,
         )
 
         register_kafka_shaped(spark)
@@ -477,41 +421,38 @@ def streaming_smoke(spark, src, out, scale):
             .withWatermark("ts", f"{delay_s} seconds")
             .dropDuplicatesWithinWatermark(["fp"])
         )
-        q = (
-            ded.writeStream.format("memory")
-            .queryName(tag)
-            .outputMode("append")
-            .trigger(processingTime="200 milliseconds")
-            .start()
-        )
-        state = 0
-        try:
-            seen: dict[int, int] = {}  # batchId -> numInputRows
-            drained_at = None
-            deadline = time.time() + 300
-            while time.time() < deadline:
-                for p in q.recentProgress:
-                    bid = p["batchId"]
-                    if bid not in seen:
-                        seen[bid] = p["numInputRows"]
-                    state = max(
-                        state,
-                        sum(
-                            so.get("numRowsTotal", 0)
-                            for so in p.get("stateOperators", [])
-                        ),
-                    )
-                if sum(seen.values()) >= total:
-                    # Drained; linger ~2 s for the trailing empty batch
-                    # that finalizes the watermark, then stop.
-                    drained_at = drained_at or time.time()
-                    if time.time() - drained_at > 2:
-                        break
-                time.sleep(0.3)
-            else:
-                raise TimeoutError("ingest smoke did not drain the log")
-        finally:
-            q.stop()
+
+        def drain():
+            q = (
+                ded.writeStream.format("memory")
+                .queryName(tag)
+                .outputMode("append")
+                .trigger(processingTime="200 milliseconds")
+                .start()
+            )
+            try:
+                seen: dict[int, int] = {}  # batchId -> numInputRows
+                drained_at = None
+                deadline = time.time() + 300
+                while time.time() < deadline:
+                    for p in q.recentProgress:
+                        bid = p["batchId"]
+                        if bid not in seen:
+                            seen[bid] = p["numInputRows"]
+                    if sum(seen.values()) >= total:
+                        # Drained; linger ~2 s for the trailing empty
+                        # batch that finalizes the watermark, then stop.
+                        drained_at = drained_at or time.time()
+                        if time.time() - drained_at > 2:
+                            break
+                    time.sleep(0.3)
+                else:
+                    raise TimeoutError("ingest smoke did not drain the log")
+            finally:
+                q.stop()
+
+        _, events = drain_events(spark, drain)
+        state = state_peak(events)
         # Analytic in-horizon bound: the most distinct fingerprints
         # alive in any (2·delay + 2·per-partition batch span) window —
         # a WithinWatermark key lives until the watermark passes its
@@ -537,114 +478,16 @@ def streaming_smoke(spark, src, out, scale):
         return {"rows": spark.table(tag).count(), "state": state,
                 "keys": keys, "inputs": total}
 
-    builders = {
-        "session_window": session_window,
-        "dedup_ids": dedup_ids,
-        "dedup_within": dedup_within,
-        "stream_stream_join": stream_stream_join,
-        "attribution_outer": attribution_outer,
-        "cusum": cusum,
-        "ingest_horizon": ingest_horizon,
+    twins = {
+        name: (lambda sf_dir, name=name: stream_twin(spark, name, sf_dir))
+        for name in STREAM_TWINS
     }
-    for name in STREAM_SMOKE:
-        yield name, builders[name]
-
-
-#: Text-IR decomposition probe (round 10): the BM25/TF-IDF 32× ratios
-#: drifted high and noisy across r7-r9 refreshes (5.9 → 6.8 → 7.9)
-#: without an attribution.  This family splits each operator into its
-#: cost phases and times every phase separately (2 reps, min) at 1×
-#: and K×, so the growth can be pinned on a phase: the tokenize scan
-#: (no shuffle), the postings shuffle (explode → groupBy(doc, w)), or
-#: everything after it (df rollup + score join + per-doc rank window).
-#: Run at several K (8/32/64) for a marginal-cost curve: if
-#: wall(K) ≈ a + b·K with stable b, the operator is linear in data
-#: and the raw ratio drift was the fixed cost a amortizing, not a
-#: scale hazard.
-def textir_phases(spark, sf_dir):
-    """Return {phase: seconds} + row counts for the text-IR cost
-    decomposition on one corpus directory."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from splitserve_spark.operators import text as T
-    from splitserve_spark.registry import REGISTRY
-
-    def timed(fn, reps=2):
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            out = fn()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return out, round(best, 3)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rec = {}
-
-    # bm25 phase 1: the tokenize projection (scan + split + 3 term
-    # filters, zero shuffles) — the operator's only corpus pass.
-    ws = T._words(F.col("text"))
-
-    def eq(term):
-        return lambda w: w == term
-
-    proj = docs.select(
-        "doc_id",
-        F.size(ws).cast("double").alias("dl"),
-        *[
-            F.size(F.filter(ws, eq(term))).cast("double").alias(f"tf_{term}")
-            for term in T.BM25_QUERY_TERMS
-        ],
-    )
-    # Force the projection: a bare count() lets Catalyst prune the
-    # tokenize columns entirely (the probe then measures parquet
-    # row-count metadata, observed as "K× faster than 1×").
-    def run_tokenize():
-        row = proj.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("s"),
-            *[F.sum(f"tf_{t}") for t in T.BM25_QUERY_TERMS],
-        ).collect()[0]
-        return int(row["n"])
-
-    rec["bm25_docs"], rec["sec_bm25_tokenize"] = timed(run_tokenize)
-    # bm25 full operator (includes its persist + stats agg + top-k).
-    _, rec["sec_bm25_full"] = timed(
-        lambda: REGISTRY["text_bm25_search"].fn(spark, sf_dir).count()
-    )
-
-    # tfidf phase 1: the postings shuffle — explode → groupBy(doc, w).
-    words = docs.select("doc_id", F.explode(ws).alias("w"))
-    tf = words.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    rec["postings_rows"], rec["sec_tfidf_postings"] = timed(tf.count)
-    # tfidf phase 2: everything after the postings shuffle, measured
-    # from a pre-materialized tf (df rollup + score join + rank
-    # window) — if THIS grows faster than the postings phase, the
-    # operator is shuffle-width-bound and needs an earlier combine.
-    tf_p = tf.persist()
-    tf_p.count()  # materialize outside the timer
-    try:
-        df_tab = tf_p.groupBy("w").agg(F.count("*").alias("df"))
-        n_docs = docs.agg(F.count("*").alias("n_docs"))
-        scored = T._score_tfidf(tf_p, df_tab, n_docs)
-        wk = Window.partitionBy("doc_id").orderBy(F.col("raw").desc(), "w")
-        after = (
-            scored.select(
-                "doc_id", F.row_number().over(wk).alias("rank"), "w"
-            )
-            .filter(F.col("rank") <= T.KEYWORDS_PER_DOC)
-        )
-        rec["keyword_rows"], rec["sec_tfidf_after_postings"] = timed(
-            after.count
-        )
-    finally:
-        tf_p.unpersist()
-    # tfidf full operator (its own persist discipline included).
-    _, rec["sec_tfidf_full"] = timed(
-        lambda: REGISTRY["text_keyword_tfidf"].fn(spark, sf_dir).count()
-    )
-    rec["distinct_terms"] = words.select("w").distinct().count()
-    return rec
+    return {
+        "session_window": session_window,
+        "dedup_within": dedup_within,
+        "ingest_horizon": ingest_horizon,
+        **twins,
+    }
 
 
 #: Multimodal smoke: the Arrow-kernel (mapInPandas) operators are the
@@ -656,83 +499,41 @@ def textir_phases(spark, sf_dir):
 #: amortization holds under 1:N in-batch row expansion) and (b) the
 #: transform pipeline keeps ZERO exchanges — scan → encode → kernel
 #: must never grow a shuffle at any K.
-MM_SMOKE = ["wav_features", "frame_sample", "image_patches",
-            "audio_autocorr"]
+#: Each row runs a multimodal.py builder uncapped; the value is the
+#: registered query that applies the builder's doc_id cap.
+MM_SMOKE = {
+    "wav_features": "mm_decode_features",
+    "frame_sample": "mm_frame_sample",
+    "image_patches": "mm_image_patches",
+    "audio_autocorr": "mm_audio_autocorr",
+}
 
 
-def mm_smoke(spark, src, out, scale):
-    """Yield (name, runner(sf_dir)) pairs over the multimodal Arrow
-    kernels, uncapped (every doc_id in the corpus synthesizes a
-    payload — the kernels are pure functions of doc_id, the registered
-    ops' caps exist only to bound oracle output).  Runners return
-    {rows, exchanges}: result rows and the Exchange count in the
-    transform plan (pre-action), which must stay 0."""
+def _exchanges(df):
+    """Exchange count in ``df``'s physical plan."""
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "Exchange"
+    )
+
+
+def mm_smoke(spark):
+    """{name: runner(sf_dir)} over the multimodal builders, uncapped
+    (every doc_id in the corpus synthesizes a payload — the kernels are
+    pure functions of doc_id, the registered ops' caps exist only to
+    bound oracle output).  Runners return {rows, exchanges}: result
+    rows and the Exchange count in the transform plan (pre-action),
+    which must stay 0."""
     from splitserve_spark.operators import multimodal as M
 
-    def docs(sf_dir):
-        return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id"
-        )
+    def runner(name, sf_dir):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        df = getattr(M, name)(docs.select("doc_id"))
+        return {"exchanges": _exchanges(df), "rows": df.count()}
 
-    def wav(sf_dir):
-        return docs(sf_dir).mapInPandas(
-            M._encode_wav_batches, schema="doc_id bigint, payload binary"
-        )
-
-    def wav_features(sf_dir):
-        return wav(sf_dir).mapInPandas(
-            M._decode_wav_batches,
-            schema=(
-                "doc_id bigint, channels int, sample_rate int, bits int, "
-                "n_samples int, byte_len int, mean_amp double, peak_amp int"
-            ),
-        )
-
-    def frame_sample(sf_dir):
-        return wav(sf_dir).mapInPandas(
-            M._frame_batches,
-            schema=(
-                "doc_id bigint, frame_idx int, n_in_frame int, "
-                "energy bigint, peak int"
-            ),
-        )
-
-    def image_patches(sf_dir):
-        ppm = docs(sf_dir).mapInPandas(
-            M._encode_ppm_batches, schema="doc_id long, payload binary"
-        )
-        return ppm.mapInPandas(
-            M._patch_ppm_batches,
-            schema="doc_id long, py int, px int, "
-                   "sum_r long, sum_g long, sum_b long",
-        )
-
-    def audio_autocorr(sf_dir):
-        return wav(sf_dir).mapInPandas(
-            M._autocorr_batches,
-            schema=(
-                "doc_id bigint, n_samples int, r0 bigint, r1 bigint, "
-                "r2 bigint, pitch_lag int, r_peak bigint"
-            ),
-        )
-
-    builders = {
-        "wav_features": wav_features,
-        "frame_sample": frame_sample,
-        "image_patches": image_patches,
-        "audio_autocorr": audio_autocorr,
+    return {
+        name: (lambda sf_dir, name=name: runner(name, sf_dir))
+        for name in MM_SMOKE
     }
-
-    def runner(build, sf_dir):
-        df = build(sf_dir)
-        exchanges = df._jdf.queryExecution().executedPlan().toString().count(
-            "Exchange"
-        )
-        return {"rows": df.count(), "exchanges": exchanges}
-
-    for name in MM_SMOKE:
-        b = builders[name]
-        yield name, (lambda sf_dir, b=b: runner(b, sf_dir))
 
 
 #: Scalar-function replication smoke (r10 verdict task 6 — the last
@@ -747,10 +548,9 @@ def mm_smoke(spark, src, out, scale):
 FN_SMOKE = ["strings_wide", "datetime_wide", "json_wide"]
 
 
-def functions_smoke(spark, src, out, scale):
-    """Yield (name, runner(sf_dir)) pairs; runners return
-    {rows, exchanges} for a wide function projection reduced to one
-    hash-checksum row."""
+def functions_smoke(spark):
+    """{name: runner(sf_dir)}; runners return {rows, exchanges} for a
+    wide function projection reduced to one hash-checksum row."""
     from pyspark.sql import functions as F
 
     from splitserve_spark.tables import Tables
@@ -819,14 +619,12 @@ def functions_smoke(spark, src, out, scale):
     def runner(build, sf_dir):
         df = build(sf_dir)
         (row,) = df.collect()
-        exchanges = df._jdf.queryExecution().executedPlan().toString().count(
-            "Exchange"
-        )
-        return {"rows": int(row["rows_"]), "exchanges": exchanges}
+        return {"rows": int(row["rows_"]), "exchanges": _exchanges(df)}
 
-    for name in FN_SMOKE:
-        b = builders[name]
-        yield name, (lambda sf_dir, b=b: runner(b, sf_dir))
+    return {
+        name: (lambda sf_dir, b=b: runner(b, sf_dir))
+        for name, b in builders.items()
+    }
 
 
 #: Hot-key smoke: a corpus where ONE user owns 50% of events — the
@@ -886,9 +684,9 @@ def build_skew_corpus(src: str, out: str, scale: int) -> None:
         )
 
 
-def skew_smoke(spark, skew_dir, scale):
-    """Yield (name, runner(variant)) pairs; variant is 'hot' or
-    'uniform'.  Runners return {rows, plan} — plan is the FINAL
+def skew_smoke(spark, skew_dir):
+    """{name: runner(variant)}; variant is 'uniform' or 'hot'.  Runners
+    return {rows, skew_split, bhj}, the flags read off the FINAL
     adaptive physical plan (post-execution), where OptimizeSkewedJoin's
     skew=true marker is visible."""
     from pyspark.sql import functions as F
@@ -902,7 +700,9 @@ def skew_smoke(spark, skew_dir, scale):
         # finalized adaptive plan.  Every skew runner reduces to a
         # tiny summary first, so the collect is driver-safe.
         rows = df.collect()
-        return rows, df._jdf.queryExecution().executedPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return rows, {"skew_split": "skew=true" in plan,
+                      "bhj": "BroadcastHashJoin" in plan}
 
     def join_user_rollup(variant):
         """Fact-side shuffle join keyed on the hot column: events ⋈
@@ -959,8 +759,8 @@ def skew_smoke(spark, skew_dir, scale):
                     F.sum("user_events").alias("weight"),
                 )
             )
-            rows, plan = _final_plan(joined)
-            return {"rows": len(rows), "plan": plan}
+            rows, flags = _final_plan(joined)
+            return {"rows": len(rows), **flags}
         finally:
             for k, v in old.items():
                 spark.conf.set(k, v)
@@ -985,8 +785,8 @@ def skew_smoke(spark, skew_dir, scale):
                 F.sum("user_events").alias("weight"),
             )
         )
-        rows, plan = _final_plan(joined)
-        return {"rows": len(rows), "plan": plan}
+        rows, flags = _final_plan(joined)
+        return {"rows": len(rows), **flags}
 
     def agg_user_totals(variant):
         ev = _events(variant)
@@ -998,8 +798,8 @@ def skew_smoke(spark, skew_dir, scale):
             )
             .agg(F.count(F.lit(1)).alias("n_users"))  # tiny driver result
         )
-        rows, plan = _final_plan(agg)
-        return {"rows": rows[0][0], "plan": plan}
+        rows, flags = _final_plan(agg)
+        return {"rows": rows[0][0], **flags}
 
     def window_sessionize(variant):
         from pyspark.sql.window import Window
@@ -1028,8 +828,8 @@ def skew_smoke(spark, skew_dir, scale):
             .agg(F.count(F.lit(1)).alias("n_events"))
             .agg(F.count(F.lit(1)).alias("n_sessions"))
         )
-        rows, plan = _final_plan(sess)
-        return {"rows": rows[0][0], "plan": plan}
+        rows, flags = _final_plan(sess)
+        return {"rows": rows[0][0], **flags}
 
     def window_sessionize_hotsafe(variant):
         """The split-and-stitch mitigation for the hot-user window:
@@ -1047,8 +847,8 @@ def skew_smoke(spark, skew_dir, scale):
         sess = _hot_safe_sessions(ev).agg(
             F.count(F.lit(1)).alias("n_sessions")
         )
-        rows, plan = _final_plan(sess)
-        return {"rows": rows[0][0], "plan": plan}
+        rows, flags = _final_plan(sess)
+        return {"rows": rows[0][0], **flags}
 
     builders = {
         "join_user_rollup": join_user_rollup,
@@ -1057,8 +857,7 @@ def skew_smoke(spark, skew_dir, scale):
         "window_sessionize": window_sessionize,
         "window_sessionize_hotsafe": window_sessionize_hotsafe,
     }
-    for name in SKEW_SMOKE:
-        yield name, builders[name]
+    return builders
 
 
 def _stream_state_verdict(name, rec, scale):
@@ -1094,6 +893,31 @@ def _stream_state_verdict(name, rec, scale):
         )
     slack = 1.05
     return s1 <= k1 * slack + 2 and sk <= kk * slack + 2
+
+
+def _skew_verdict(name, rec):
+    """The hot-key contract per operator; time_ratio is hot over
+    uniform wall."""
+    if name == "join_user_rollup" and not rec["skew_split_hot"]:
+        return "SKEW_SPLIT_DID_NOT_ENGAGE"
+    # The broadcast twin must take the broadcast plan (its whole point
+    # is removing the skewable shuffle), and — gated below with the
+    # others — hold wall parity.
+    if name == "join_user_rollup_broadcast" and not (
+        rec["bhj_hot"] and rec["bhj_uniform"]
+    ):
+        return "BROADCAST_DID_NOT_ENGAGE"
+    if name == "join_user_rollup_broadcast" and (
+        rec["skew_split_hot"] or rec["skew_split_uniform"]
+    ):
+        return "BROADCAST_PLAN_STILL_SKEW_SPLIT"
+    # A hot key costing >4x its equal-volume uniform twin means the hot
+    # partition serialized the stage; the sessionization window is
+    # EXPECTED to degrade (no engine mechanism splits a semantic
+    # per-key window) — it reports, the other two gate.
+    if name != "window_sessionize" and rec["time_ratio"] > 4.0:
+        return "HOT_KEY_SERIALIZED"
+    return "ok"
 
 
 REL_TABLES = [
@@ -1224,6 +1048,16 @@ def vocab_probe(spark, sf_dir):
     return rec
 
 
+def _vocab_verdict(rec):
+    """One vocab point: identical values across the broadcast and the
+    forced-shuffle df join, and the forced plan really shuffles."""
+    if rec["checksum_natural"] != rec["checksum_shuffle"]:
+        return "FLIP_CHANGED_VALUES"
+    if rec["df_join_forced"] != "shuffle":
+        return "FORCED_SHUFFLE_NOT_SHUFFLE"
+    return "ok"
+
+
 def build_corpus(src: str, out: str, scale: int) -> None:
     """Replicate documents/embeddings/events scale× with offset ids
     (text/embedding/event payloads byte-identical per copy); symlink
@@ -1261,6 +1095,37 @@ def build_corpus(src: str, out: str, scale: int) -> None:
             os.symlink(f"{src}/{table}.parquet", dst)
 
 
+def smoke_record(label, run, sides, verdict):
+    """Print and return one smoke record.  For each ``(tag, arg)`` in
+    ``sides`` it times ``run(arg)`` and stores its wall time and every
+    field it returns suffixed ``_tag`` (unsuffixed for the empty tag).
+    Two sides add ``time_ratio`` (second over first; ``state_ratio``
+    too when the runner reports state), then ``verdict(rec)`` judges
+    the record.  A raising runner or verdict becomes ``error``."""
+    rec = {"query": label}
+    try:
+        for tag, arg in sides:
+            sfx = f"_{tag}" if tag else ""
+            t0 = time.time()
+            res = run(arg)
+            rec["sec" + sfx] = round(time.time() - t0, 3)
+            rec.update((k + sfx, v) for k, v in res.items())
+        if len(sides) == 2:
+            a, b = (tag for tag, _ in sides)
+            rec["time_ratio"] = round(
+                rec[f"sec_{b}"] / max(rec[f"sec_{a}"], 1e-9), 2
+            )
+            if f"state_{a}" in rec:
+                rec["state_ratio"] = round(
+                    rec[f"state_{b}"] / max(rec[f"state_{a}"], 1), 2
+                )
+        rec["verdict"] = verdict(rec)
+    except Exception as exc:  # noqa: BLE001 — report, keep smoking
+        rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
+    print(json.dumps(rec), flush=True)
+    return rec
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scale", type=int, default=8)
@@ -1268,25 +1133,48 @@ def main() -> int:
     ap.add_argument("--ratio-limit", type=float, default=None,
                     help="fail if sec_Kx/sec_1x exceeds this (default 3*scale)")
     ap.add_argument("--only", default=None,
-                    help="comma-separated subset of pipeline queries "
-                         "and/or streaming builders; the other members "
-                         "of those families are skipped")
+                    help="comma-separated record names (the part after "
+                         "the family prefix, e.g. dedup_exact, scc, "
+                         "dedup_ids, wav_features); every other member "
+                         "of every family is skipped.  The vocab probe "
+                         "has no named members and ignores it")
     ap.add_argument("--family",
                     choices=["pipeline", "graph", "streaming", "skew",
-                             "multimodal", "textir", "vocab", "functions",
-                             "all"],
+                             "multimodal", "vocab", "functions", "all"],
                     default="all")
     args = ap.parse_args()
-    ratio_limit = args.ratio_limit or 3.0 * args.scale
+    scale = args.scale
+    ratio_limit = args.ratio_limit or 3.0 * scale
+
+    members = {
+        "graph": GRAPH_SMOKE,
+        "streaming": STREAM_SMOKE,
+        "functions": FN_SMOKE,
+        "multimodal": list(MM_SMOKE),
+        "skew": SKEW_SMOKE,
+        "pipeline": SMOKE_QUERIES,
+    }
+    wanted = set(args.only.split(",")) if args.only else None
+    if wanted:
+        unknown = wanted - {n for names in members.values() for n in names}
+        if unknown:
+            print(f"error: unknown --only names: {sorted(unknown)}",
+                  file=sys.stderr)
+            return 2
+    chosen = {
+        family: [n for n in names if wanted is None or n in wanted]
+        for family, names in members.items()
+        if args.family in (family, "all")
+    }
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(repo, "tmp_scale", f"x{args.scale}")
-    if args.family in ("pipeline", "streaming", "multimodal", "textir",
-                       "functions", "all"):
+    out = os.path.join(repo, "tmp_scale", f"x{scale}")
+    if any(chosen.get(f)
+           for f in ("pipeline", "streaming", "multimodal", "functions")):
         if os.path.isdir(out):
             shutil.rmtree(out)
-        build_corpus(args.src, out, args.scale)
-        if args.family in ("streaming", "all"):
+        build_corpus(args.src, out, scale)
+        if chosen.get("streaming"):
             # The CUSUM splits fixture memoizes per sf_dir tag; the K×
             # corpus was just rebuilt, so drop any stale splits for it.
             import tempfile
@@ -1308,279 +1196,111 @@ def main() -> int:
 
     load_all()
     spark = get_session()
-    failures = []
+    kx = [("1x", args.src), (f"{scale}x", out)]
 
-    stream_names = list(STREAM_SMOKE)
-    if args.only:
-        wanted = set(args.only.split(","))
-        unknown = wanted - set(SMOKE_QUERIES) - set(STREAM_SMOKE)
-        if unknown:
-            print("error: --only names in neither SMOKE_QUERIES nor "
-                  f"STREAM_SMOKE: {sorted(unknown)}", file=sys.stderr)
-            return 2
-        stream_names = [q for q in stream_names if q in wanted]
+    def linear(rec):
+        return "SUPERLINEAR" if rec["time_ratio"] > ratio_limit else "ok"
 
-    if args.family in ("graph", "all"):
-        for name, run1, runk in graph_smoke(spark, args.src, args.scale):
-            rec = {"query": f"graph:{name}"}
-            try:
-                for tag, runner in (("1x", run1), (f"{args.scale}x", runk)):
-                    t0 = time.time()
-                    rows = runner().count()
-                    rec[f"rows_{tag}"], rec[f"sec_{tag}"] = rows, round(
-                        time.time() - t0, 3
-                    )
-                rec["time_ratio"] = round(
-                    rec[f"sec_{args.scale}x"] / max(rec["sec_1x"], 1e-9), 2
-                )
-                if rec["time_ratio"] > ratio_limit:
-                    rec["verdict"] = "SUPERLINEAR"
-                    failures.append(f"graph:{name}")
-                else:
-                    rec["verdict"] = "ok"
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"graph:{name}")
-            print(json.dumps(rec), flush=True)
+    def stream_verdict(name):
+        return lambda rec: (
+            linear(rec) if _stream_state_verdict(name, rec, scale)
+            else "STATE_NOT_KEY_BOUND"
+        )
 
-    if args.family in ("streaming", "all"):
-        for name, runner in streaming_smoke(spark, args.src, out, args.scale):
-            if name not in stream_names:
-                continue
-            rec = {"query": f"stream:{name}"}
-            try:
-                for tag, sf_dir in (("1x", args.src), (f"{args.scale}x", out)):
-                    t0 = time.time()
-                    res = runner(sf_dir)
-                    rec[f"sec_{tag}"] = round(time.time() - t0, 3)
-                    rec[f"rows_{tag}"] = res["rows"]
-                    rec[f"state_{tag}"] = res["state"]
-                    rec[f"keys_{tag}"] = res["keys"]
-                    rec[f"inputs_{tag}"] = res["inputs"]
-                rec["time_ratio"] = round(
-                    rec[f"sec_{args.scale}x"] / max(rec["sec_1x"], 1e-9), 2
-                )
-                rec["state_ratio"] = round(
-                    rec[f"state_{args.scale}x"] / max(rec["state_1x"], 1), 2
-                )
-                key_bound = _stream_state_verdict(name, rec, args.scale)
-                if not key_bound:
-                    rec["verdict"] = "STATE_NOT_KEY_BOUND"
-                    failures.append(f"stream:{name}")
-                elif rec["time_ratio"] > ratio_limit:
-                    rec["verdict"] = "SUPERLINEAR"
-                    failures.append(f"stream:{name}")
-                else:
-                    rec["verdict"] = "ok"
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"stream:{name}")
-            print(json.dumps(rec), flush=True)
+    def fn_verdict(rec):
+        if (rec[f"exchanges_{scale}x"] != rec["exchanges_1x"]
+                or rec["exchanges_1x"] != 2):
+            # Exactly 2 = partial + final of the consuming aggregate;
+            # anything else means an expression started shuffling
+            # (even uniformly at both scales).
+            return "PROJECTION_GREW_A_SHUFFLE"
+        if rec[f"rows_{scale}x"] != scale * rec["rows_1x"]:
+            return "ROWS_NOT_KX"
+        return linear(rec)
 
-    if args.family in ("functions", "all"):
-        for name, runner in functions_smoke(spark, args.src, out, args.scale):
-            rec = {"query": f"fn:{name}"}
-            try:
-                for tag, sf_dir in (("1x", args.src), (f"{args.scale}x", out)):
-                    t0 = time.time()
-                    res = runner(sf_dir)
-                    rec[f"sec_{tag}"] = round(time.time() - t0, 3)
-                    rec[f"rows_{tag}"] = res["rows"]
-                    rec[f"exchanges_{tag}"] = res["exchanges"]
-                rec["time_ratio"] = round(
-                    rec[f"sec_{args.scale}x"] / max(rec["sec_1x"], 1e-9), 2
-                )
-                if (rec[f"exchanges_{args.scale}x"] != rec["exchanges_1x"]
-                        or rec["exchanges_1x"] != 2):
-                    # Exactly 2 = partial + final of the consuming
-                    # aggregate; anything else means an expression
-                    # started shuffling (even uniformly at both scales).
-                    rec["verdict"] = "PROJECTION_GREW_A_SHUFFLE"
-                    failures.append(f"fn:{name}")
-                elif rec[f"rows_{args.scale}x"] != args.scale * rec["rows_1x"]:
-                    rec["verdict"] = "ROWS_NOT_KX"
-                    failures.append(f"fn:{name}")
-                elif rec["time_ratio"] > ratio_limit:
-                    rec["verdict"] = "SUPERLINEAR"
-                    failures.append(f"fn:{name}")
-                else:
-                    rec["verdict"] = "ok"
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"fn:{name}")
-            print(json.dumps(rec), flush=True)
+    def mm_verdict(rec):
+        if rec[f"exchanges_{scale}x"] or rec["exchanges_1x"]:
+            return "KERNEL_PIPELINE_GREW_A_SHUFFLE"
+        return linear(rec)
 
-    if args.family == "vocab":  # Heaps'-law df-join probe, not in "all"
-        points = sorted({1, max(2, args.scale // 4), args.scale})
-        joins = {}
-        for k in points:
-            vout = os.path.join(repo, "tmp_scale", f"vocab{k}")
-            if os.path.isdir(vout):
-                shutil.rmtree(vout)
-            build_vocab_corpus(args.src, vout, k)
-            rec = {"query": f"vocab:{k}x", "scale": k}
-            try:
-                rec.update(vocab_probe(spark, vout))
-                if rec["checksum_natural"] != rec["checksum_shuffle"]:
-                    rec["verdict"] = "FLIP_CHANGED_VALUES"
-                    failures.append(f"vocab:{k}x")
-                elif rec["df_join_forced"] != "shuffle":
-                    rec["verdict"] = "FORCED_SHUFFLE_NOT_SHUFFLE"
-                    failures.append(f"vocab:{k}x")
-                else:
-                    rec["verdict"] = "ok"
-                joins[k] = rec.get("df_join")
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"vocab:{k}x")
-            print(json.dumps(rec), flush=True)
-        rec = {"query": "vocab:flip",
-               "joins": [joins.get(k) for k in points], "points": points}
-        if joins.get(points[0]) == "broadcast" and (
-                joins.get(points[-1]) == "shuffle"):
-            rec["verdict"] = "ok"
-        else:
-            rec["verdict"] = "NO_FLIP_OBSERVED"
-            failures.append("vocab:flip")
-        print(json.dumps(rec), flush=True)
+    def jobs():
+        """(label, runner, sides, verdict) per record, in run order."""
+        if chosen.get("graph"):
+            runners = graph_smoke(spark, args.src)
+            for name in chosen["graph"]:
+                yield (f"graph:{name}", runners[name],
+                       [("1x", 1), (f"{scale}x", scale)], linear)
+        if chosen.get("streaming"):
+            runners = streaming_smoke(spark, out, scale)
+            for name in chosen["streaming"]:
+                yield (f"stream:{name}", runners[name], kx,
+                       stream_verdict(name))
+        if chosen.get("functions"):
+            runners = functions_smoke(spark)
+            for name in chosen["functions"]:
+                yield f"fn:{name}", runners[name], kx, fn_verdict
+        if args.family == "vocab":  # Heaps'-law df-join probe, not in "all"
+            points = sorted({1, max(2, scale // 4), scale})
+            joins = {}
 
-    if args.family == "textir":  # decomposition probe, not in "all"
-        for tag, sf_dir in (("1x", args.src), (f"{args.scale}x", out)):
-            rec = {"query": f"textir:{tag}", "scale": args.scale}
-            try:
-                rec.update(textir_phases(spark, sf_dir))
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"textir:{tag}")
-            print(json.dumps(rec), flush=True)
+            def probe(k, vout):
+                rec = {"scale": k, **vocab_probe(spark, vout)}
+                joins[k] = rec["df_join"]
+                return rec
 
-    if args.family in ("multimodal", "all"):
-        for name, runner in mm_smoke(spark, args.src, out, args.scale):
-            rec = {"query": f"mm:{name}"}
-            try:
-                for tag, sf_dir in (("1x", args.src), (f"{args.scale}x", out)):
-                    t0 = time.time()
-                    res = runner(sf_dir)
-                    rec[f"sec_{tag}"] = round(time.time() - t0, 3)
-                    rec[f"rows_{tag}"] = res["rows"]
-                    rec[f"exchanges_{tag}"] = res["exchanges"]
-                rec["time_ratio"] = round(
-                    rec[f"sec_{args.scale}x"] / max(rec["sec_1x"], 1e-9), 2
-                )
-                if rec[f"exchanges_{args.scale}x"] or rec["exchanges_1x"]:
-                    rec["verdict"] = "KERNEL_PIPELINE_GREW_A_SHUFFLE"
-                    failures.append(f"mm:{name}")
-                elif rec["time_ratio"] > ratio_limit:
-                    rec["verdict"] = "SUPERLINEAR"
-                    failures.append(f"mm:{name}")
-                else:
-                    rec["verdict"] = "ok"
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"mm:{name}")
-            print(json.dumps(rec), flush=True)
-
-    if args.family in ("skew", "all"):
-        skew_dir = os.path.join(repo, "tmp_scale", f"skew{args.scale}")
-        if os.path.isdir(skew_dir):
-            shutil.rmtree(skew_dir)
-        build_skew_corpus(args.src, skew_dir, args.scale)
-        # Warmup outside the timed window: scan both variants (JVM
-        # codegen, file-index) and pre-materialize the join rollups so
-        # the first timed runner doesn't absorb one-time setup.
-        from pyspark.sql import functions as _F
-        for variant in ("uniform", "hot"):
-            ev = spark.read.parquet(f"{skew_dir}/events_{variant}.parquet")
-            ev.count()
-            ev.groupBy("user_id").agg(
-                _F.count(_F.lit(1)).alias("user_events")
-            ).write.parquet(f"{skew_dir}/rollup_{variant}.parquet")
-        for name, runner in skew_smoke(spark, skew_dir, args.scale):
-            rec = {"query": f"skew:{name}"}
-            try:
-                for variant in ("uniform", "hot"):
-                    t0 = time.time()
-                    res = runner(variant)
-                    rec[f"sec_{variant}"] = round(time.time() - t0, 3)
-                    rec[f"rows_{variant}"] = res["rows"]
-                    rec[f"skew_split_{variant}"] = "skew=true" in res["plan"]
-                    rec[f"bhj_{variant}"] = (
-                        "BroadcastHashJoin" in res["plan"]
-                    )
-                rec["hot_over_uniform"] = round(
-                    rec["sec_hot"] / max(rec["sec_uniform"], 1e-9), 2
-                )
-                if name == "join_user_rollup" and not rec["skew_split_hot"]:
-                    rec["verdict"] = "SKEW_SPLIT_DID_NOT_ENGAGE"
-                    failures.append(f"skew:{name}")
-                # The broadcast twin must take the broadcast plan (its
-                # whole point is removing the skewable shuffle), and —
-                # gated below with the others — hold wall parity.
-                elif name == "join_user_rollup_broadcast" and not (
-                    rec["bhj_hot"] and rec["bhj_uniform"]
-                ):
-                    rec["verdict"] = "BROADCAST_DID_NOT_ENGAGE"
-                    failures.append(f"skew:{name}")
-                elif name == "join_user_rollup_broadcast" and (
-                    rec["skew_split_hot"] or rec["skew_split_uniform"]
-                ):
-                    rec["verdict"] = "BROADCAST_PLAN_STILL_SKEW_SPLIT"
-                    failures.append(f"skew:{name}")
-                # A hot key costing >4x its equal-volume uniform twin
-                # means the hot partition serialized the stage; the
-                # sessionization window is EXPECTED to degrade (no
-                # engine mechanism splits a semantic per-key window) —
-                # it reports, the other two gate.
-                elif name != "window_sessionize" and \
-                        rec["hot_over_uniform"] > 4.0:
-                    rec["verdict"] = "HOT_KEY_SERIALIZED"
-                    failures.append(f"skew:{name}")
-                else:
-                    rec["verdict"] = "ok"
-            except Exception as exc:  # noqa: BLE001 — report, keep smoking
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-                failures.append(f"skew:{name}")
-            print(json.dumps(rec), flush=True)
-
-    pipeline_queries = SMOKE_QUERIES if args.family in ("pipeline", "all") else []
-    if args.only:
-        pipeline_queries = [
-            q for q in pipeline_queries if q in set(args.only.split(","))
-        ]
-    for name in pipeline_queries:
-        spec = REGISTRY[name]
-        rec = {"query": name}
-        try:
-            for tag, sf_dir in (("1x", args.src), (f"{args.scale}x", out)):
-                t0 = time.time()
-                rows = spec.fn(spark, sf_dir).count()
-                rec[f"rows_{tag}"], rec[f"sec_{tag}"] = rows, round(
-                    time.time() - t0, 3
-                )
-            rec["time_ratio"] = round(
-                rec[f"sec_{args.scale}x"] / max(rec["sec_1x"], 1e-9), 2
+            for k in points:
+                vout = os.path.join(repo, "tmp_scale", f"vocab{k}")
+                if os.path.isdir(vout):
+                    shutil.rmtree(vout)
+                build_vocab_corpus(args.src, vout, k)
+                yield (f"vocab:{k}x", (lambda d, k=k: probe(k, d)),
+                       [("", vout)], _vocab_verdict)
+            yield (
+                "vocab:flip",
+                lambda _: {"joins": [joins.get(k) for k in points],
+                           "points": points},
+                [("", None)],
+                lambda rec: "ok" if rec["joins"][0] == "broadcast"
+                and rec["joins"][-1] == "shuffle" else "NO_FLIP_OBSERVED",
             )
-            if rec["time_ratio"] > ratio_limit:
-                rec["verdict"] = "SUPERLINEAR"
-                failures.append(name)
-            else:
-                rec["verdict"] = "ok"
-        except Exception as exc:  # noqa: BLE001 — report, keep smoking
-            rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
-            failures.append(name)
-        print(json.dumps(rec), flush=True)
-    n = len(pipeline_queries) + (
-        len(GRAPH_SMOKE) if args.family in ("graph", "all") else 0
-    ) + (
-        len(stream_names) if args.family in ("streaming", "all") else 0
-    ) + (
-        len(SKEW_SMOKE) if args.family in ("skew", "all") else 0
-    ) + (
-        len(MM_SMOKE) if args.family in ("multimodal", "all") else 0
-    )
+        if chosen.get("multimodal"):
+            runners = mm_smoke(spark)
+            for name in chosen["multimodal"]:
+                yield f"mm:{name}", runners[name], kx, mm_verdict
+        if chosen.get("skew"):
+            skew_dir = os.path.join(repo, "tmp_scale", f"skew{scale}")
+            if os.path.isdir(skew_dir):
+                shutil.rmtree(skew_dir)
+            build_skew_corpus(args.src, skew_dir, scale)
+            # Warmup outside the timed window: scan both variants (JVM
+            # codegen, file-index) and pre-materialize the join rollups
+            # so the first timed runner doesn't absorb one-time setup.
+            from pyspark.sql import functions as _F
+            for variant in ("uniform", "hot"):
+                ev = spark.read.parquet(
+                    f"{skew_dir}/events_{variant}.parquet"
+                )
+                ev.count()
+                ev.groupBy("user_id").agg(
+                    _F.count(_F.lit(1)).alias("user_events")
+                ).write.parquet(f"{skew_dir}/rollup_{variant}.parquet")
+            runners = skew_smoke(spark, skew_dir)
+            for name in chosen["skew"]:
+                yield (f"skew:{name}", runners[name],
+                       [("uniform", "uniform"), ("hot", "hot")],
+                       lambda rec, name=name: _skew_verdict(name, rec))
+        for name in chosen.get("pipeline", []):
+            spec = REGISTRY[name]
+            yield (name,
+                   lambda sf_dir, spec=spec: {
+                       "rows": spec.fn(spark, sf_dir).count()},
+                   kx, linear)
+
+    records = [smoke_record(*job) for job in jobs()]
+    failures = [r["query"] for r in records if r.get("verdict") != "ok"]
     print(json.dumps({
-        "scale": args.scale,
-        "queries": n,
+        "scale": scale,
+        "queries": len(records),
         "failed": failures,
     }), flush=True)
     return 1 if failures else 0
