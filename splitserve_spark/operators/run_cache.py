@@ -14,7 +14,7 @@ so it cannot be unpersisted at return time.  The contract is
 entry, freeing whatever the PREVIOUS tracked invocation cached.
 Consumers must therefore materialize an operator's result before
 invoking the next tracked operator (every harness here — driver,
-bench, check_all, tests — collects eagerly); a released result is
+bench, tools/sweep.py, tests — collects eagerly); a released result is
 never wrong, it just recomputes.
 """
 

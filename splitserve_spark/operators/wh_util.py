@@ -4,7 +4,7 @@ Catalog objects written by the suite (bucketed join tables, the ddl_*
 family) embed a per-process token in their names so two JVMs running
 against the SAME repo checkout never write the same saveAsTable
 location (the r7/r8 judge pytest runs both corrupted a fixed-name
-bucketed table when run concurrently with check_all).
+bucketed table when run concurrently with the oracle sweep).
 
 The token means dead processes leave orphan warehouse directories
 behind; sweep_stale_locations() removes directories whose embedding

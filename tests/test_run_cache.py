@@ -47,7 +47,7 @@ def test_release_survives_already_unpersisted_frame(spark):
 def test_second_tracked_operator_releases_the_first(spark):
     """The cross-operator contract: each tracked operator's entry
     releases the PREVIOUS one's intermediates, so back-to-back
-    invocations (bench loops, check_all sweeps) hold at most one
+    invocations (bench loops, tools/sweep.py runs) hold at most one
     operator's caches at a time."""
     load_all()
     release_prior()

@@ -9,15 +9,24 @@ loudly here instead.
 
 from __future__ import annotations
 
+import io
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from splitserve_spark.plans.inspect import (
     _depth,
+    count_exchanges,
     count_executed_scans,
     physical_plan,
 )
 from splitserve_spark.tables import Tables
 from tests.oracle_utils import SF_DIR
+from tools import sweep
 from tools.scale_smoke import (
     MM_SMOKE,
     SMOKE_QUERIES,
@@ -29,6 +38,8 @@ from tools.scale_smoke import (
     smoke_record,
     stream_twin,
 )
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def test_scan_audit_format_assumptions(spark):
@@ -185,3 +196,52 @@ def test_smoke_only_rejects_unknown_names(monkeypatch):
         "sys.argv", ["scale_smoke.py", "--only", "wav_features,bogus"]
     )
     assert main() == 2
+
+
+# ---- sweep: the one check/time/plans CLI ------------------------------
+
+
+def test_sweep_rejects_typos_before_any_session(tmp_path):
+    """A misspelled query name or a missing --sf-dir exits 2: neither
+    may pass as an empty 0/0 sweep."""
+    assert sweep.main(["check", "--strict", "q1_pricing_sumary"]) == 2
+    missing = ["--sf-dir", str(tmp_path / "sf0.1")]
+    assert sweep.main(["check", *missing, "q1_pricing_summary"]) == 2
+
+
+def test_sweep_time_records_match_plan_inspect(spark):
+    """The time record's exchange and scan counts are the ones PLANS.md
+    and the repeat-scan guard use (not a raw regex over simpleString,
+    which also counts BroadcastExchange/ReusedExchange and reprinted
+    cached lineage), and its rows are the query's row count."""
+    from splitserve_spark.registry import load_all
+
+    registry = load_all()
+    specs = [registry[n] for n in ("q3_shipping_priority",
+                                   "qds94_web_no_returns")]
+    out = io.StringIO()
+    recs = sweep.run(spark, specs, "time", SF_DIR, out=out, reps=1)
+    assert [json.loads(line) for line in out.getvalue().splitlines()] == recs
+    for spec, rec in zip(specs, recs):
+        df = spec.fn(spark, SF_DIR)
+        assert rec["error"] is None, rec
+        assert rec["exchanges"] == count_exchanges(df)
+        plan = physical_plan(df, mode="simple")
+        assert rec["scans"] == count_executed_scans(plan)
+        assert rec["rows"] == df.count()
+        assert min(rec["build_s"], rec["plan_s"], rec["exec_s"]) >= 0
+
+
+def test_plans_md_is_current(tmp_path):
+    """The committed PLANS.md is byte-for-byte what `sweep.py plans
+    --bench` writes at the default SF: a change to a bench query's plan
+    shape must regenerate it."""
+    out = tmp_path / "PLANS.md"
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SF_DIR"}
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "sweep.py"), "plans",
+         "--bench", "--out", str(out)],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert out.read_bytes() == (REPO / "PLANS.md").read_bytes()

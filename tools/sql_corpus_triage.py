@@ -9,9 +9,10 @@ Usage: python tools/sql_corpus_triage.py [file.sql ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from splitserve_spark import sql_corpus
 from splitserve_spark.session import get_session
