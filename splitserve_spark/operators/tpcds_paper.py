@@ -9,8 +9,8 @@ channel tables here), because the shapes — not the retail column names
   Q5  : per-channel sales⊎returns UNION ALL → ROLLUP report
   Q16 : EXISTS (second site) + NOT EXISTS (return) + count(DISTINCT)
   Q94 : same skeleton on a second "channel" slice with date-range scan
-  Q95 : both membership tests against a pre-aggregated multi-supplier
-        order view referenced twice (exchange reuse)
+  Q95 : both membership tests against the multi-supplier order view,
+        collapsed into one per-order aggregate (_slice_membership)
 
 Channel mapping: lineitem rows are "sales"; returnflag='R' rows double
 as the returns flow.  Site/warehouse mapping: l_suppkey (an order
@@ -138,6 +138,37 @@ _Q16_94_ORACLE = """
 """
 
 
+def _slice_membership(t: Tables, orders: DataFrame, has_r: int) -> DataFrame:
+    """Order count and decimal price sum of the `orders` slice's
+    multi-supplier orders whose returned-line flag is `has_r` (0 for
+    Q16/Q94's NOT EXISTS, 1 for Q95).  One per-order aggregate holds
+    both tests: ≥2 suppliers ⟺ min(suppkey)≠max(suppkey), and a max()
+    return flag.  Each verdict depends on the order's own lines only,
+    so the slice joins lineitem BEFORE the aggregate, which then groups
+    the slice's lines, not the whole fact table.  Grouping on (key,
+    price) is the oracle's DISTINCT o_orderkey, o_totalprice.  No
+    broadcast hint: orders grows with SF, and at scale this selective
+    shuffle join is what the runtime bloom filter prunes."""
+    li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
+    return (
+        li.join(
+            orders.select("o_orderkey", "o_totalprice"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .groupBy("o_orderkey", "o_totalprice")
+        .agg(
+            (F.min("l_suppkey") != F.max("l_suppkey")).alias("multi"),
+            F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r"),
+        )
+        .filter(F.col("multi") & (F.col("has_r") == has_r))
+        .agg(
+            F.countDistinct("o_orderkey").alias("order_count"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double").alias("total_price"),
+        )
+    )
+
+
 def _q16_94_impl(
     spark: SparkSession, sf_dir: str, d0: str, d1: str, prios: tuple[str, ...],
     negate_prio: bool,
@@ -149,33 +180,7 @@ def _q16_94_impl(
         & (F.col("o_orderdate") < _ts(d1))
         & (~prio if negate_prio else prio)
     )
-    li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
-    # Both membership tests fold into ONE per-order aggregate over ONE
-    # lineitem pass: "≥2 distinct suppliers" ⟺ min(suppkey)≠max(suppkey)
-    # (single-shuffle with map-side partial min/max, where the
-    # countDistinct form needs a two-level (orderkey, suppkey) →
-    # orderkey aggregate = two exchanges), and "has a returned line" is
-    # a max() flag in the same aggregate (was a second lineitem scan +
-    # distinct + anti join).  The EXISTS correlates only on o_orderkey,
-    # so the per-line quantifier reduces to the per-order predicate.
-    qualifying = (
-        li.groupBy("l_orderkey")
-        .agg(
-            (F.min("l_suppkey") != F.max("l_suppkey")).alias("multi"),
-            F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r"),
-        )
-        .filter(F.col("multi") & (F.col("has_r") == 0))
-        .select("l_orderkey")
-    )
-    return (
-        orders
-        .join(qualifying, F.col("o_orderkey") == qualifying["l_orderkey"], "left_semi")
-        .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("total_price"),
-        )
-    )
+    return _slice_membership(t, orders, has_r=0)
 
 
 @register(
@@ -190,10 +195,9 @@ def qds16_multi_site_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q16 shape: orders shipped from ≥2 sites (EXISTS another
     supplier's line) with no returns (NOT EXISTS), count-distinct +
     sum.  Both quantifiers correlate only on o_orderkey, so they fold
-    into one per-order lineitem aggregate (see _q16_94_impl) followed
-    by a single semi join. (Oracle's l1 join has duplicate orders per
-    line; DISTINCT before the final aggregate mirrors Q16's
-    count(DISTINCT).)"""
+    into one per-order aggregate over the date/priority slice's lines
+    (see _slice_membership). (Oracle's l1 join has duplicate orders
+    per line; its DISTINCT is the aggregate's (key, price) grouping.)"""
     ensure_parity_conf(spark)
     return _q16_94_impl(
         spark, sf_dir, "1996-01-01", "1996-04-01",
@@ -212,7 +216,9 @@ def qds16_multi_site_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def qds94_web_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q94 shape: identical membership skeleton to Q16 on the
     second "channel" slice (different date window + priority class) —
-    the paper runs both to stress the same I/O pattern twice."""
+    the paper runs both to stress the same I/O pattern twice.  The
+    per-order aggregate covers the slice's lines only (see
+    _slice_membership)."""
     ensure_parity_conf(spark)
     return _q16_94_impl(
         spark, sf_dir, "1997-01-01", "1997-03-01", ("5-LOW",), negate_prio=True,
@@ -249,39 +255,16 @@ def qds95_both_sites_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the return test requires the returning line itself to be in a
     multi-site order — but that line's order is then multi-site by
     definition, so the two tests collapse to one per-order aggregate
-    (see the inline note)."""
+    ("≥2 suppliers AND has a returned line") over the date slice's
+    lines (see _slice_membership; o_orderkey is orders' key, so its
+    (key, price) groups are the oracle's orders rows)."""
     ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
-    li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
-    # The two membership tests collapse: returned_multi ⊆ ws_wh (its
-    # lines are semi-joined against ws_wh), so "IN ws_wh AND IN
-    # returned_multi" ⟺ "≥2 distinct suppliers AND has a returned
-    # line" — one per-order aggregate over one lineitem pass, with
-    # min≠max replacing the two-exchange countDistinct form and the
-    # return test a max() flag in the same aggregate (was: self-join-
-    # shaped CTE + a second scan + semi join + distinct).
-    qualifying = (
-        li.groupBy("l_orderkey")
-        .agg(
-            (F.min("l_suppkey") != F.max("l_suppkey")).alias("multi"),
-            F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r"),
-        )
-        .filter(F.col("multi") & (F.col("has_r") == 1))
-        .select("l_orderkey")
+    orders = t.orders.filter(
+        (F.col("o_orderdate") >= _ts("1996-06-01"))
+        & (F.col("o_orderdate") < _ts("1996-09-01"))
     )
-    return (
-        t.orders
-        .filter(
-            (F.col("o_orderdate") >= _ts("1996-06-01"))
-            & (F.col("o_orderdate") < _ts("1996-09-01"))
-        )
-        .join(qualifying, F.col("o_orderkey") == qualifying["l_orderkey"], "left_semi")
-        .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double").alias("total_price"),
-        )
-    )
+    return _slice_membership(t, orders, has_r=1)
 
 
 @register(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
-from splitserve_spark.tables import Tables
+from splitserve_spark.tables import Tables, sfdir_tag
 
 _IO_ROOT = os.path.join(tempfile.gettempdir(), "splitserve_spark_io")
 
@@ -36,6 +36,13 @@ _IO_ROOT = os.path.join(tempfile.gettempdir(), "splitserve_spark_io")
 def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     return os.path.join(_IO_ROOT, f"{tag}_{fmt}")
+
+
+def jdbc_roundtrip_url(sf_dir: str) -> str:
+    """In-memory Derby database of source_jdbc_roundtrip: it lives in
+    this JVM only, so processes at the same SF never share (or lock)
+    one on disk."""
+    return f"jdbc:derby:memory:{sfdir_tag(sf_dir)}_rt;create=true"
 
 
 def write_partitioned(
@@ -196,7 +203,8 @@ def source_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "jdbc"),
 )
 def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nation → JDBC table (embedded Derby) → partitioned JDBC read back.
+    """nation → JDBC table (in-memory embedded Derby) → partitioned JDBC
+    read back.
 
     Reference `datasources/jdbc/JDBCRelation.scala:103` (columnPartition:
     stride partitioning on [lowerBound, upperBound) with unbounded edge
@@ -214,8 +222,7 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark._jvm.java.lang.System.setProperty("derby.system.home", _IO_ROOT)
     except Exception:
         pass
-    db = _roundtrip_dir(sf_dir, "derby_db")
-    url = f"jdbc:derby:{db};create=true"
+    url = jdbc_roundtrip_url(sf_dir)
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     src = t.nation.select("n_nationkey", "n_name", "n_regionkey")
     src.write.jdbc(url, "nation_rt", mode="overwrite", properties=props)

@@ -4,7 +4,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from splitserve_spark.plans.inspect import count_exchanges, physical_plan
+from splitserve_spark.plans.inspect import _depth, count_exchanges, physical_plan
 from splitserve_spark.registry import REGISTRY, load_all
 from tests.oracle_utils import SF_DIR, check_query
 
@@ -75,13 +75,58 @@ def test_broadcast_vs_sortmerge_equivalence(spark):
     assert broadcast_rows == shuffle_rows
 
 
-def test_qds95_single_fact_pass(spark):
-    """Q95's two membership tests (multi-site view referenced twice +
-    returned-line semi join) fold into ONE per-order aggregate over ONE
-    lineitem pass (r11 optimization): the plan must scan lineitem
+MEMBERSHIP_QUERIES = [
+    "qds16_multi_site_no_returns",
+    "qds94_web_no_returns",
+    "qds95_both_sites_view",
+]
+
+
+@pytest.mark.parametrize("name", MEMBERSHIP_QUERIES)
+def test_membership_single_fact_pass_over_slice(spark, name):
+    """The Q16/Q94/Q95 membership tests fold into ONE per-order
+    aggregate over ONE lineitem pass: the plan must scan lineitem
     exactly once, with no countDistinct-style two-level expansion —
-    min/max partials collapse the fact stream map-side."""
-    df = REGISTRY["qds95_both_sites_view"].fn(spark, SF_DIR)
+    min/max partials collapse the fact stream map-side.  And the
+    aggregate groups only the orders slice's lines: the orders scan
+    sits beneath the per-order partial_min (joined in before it), not
+    beside it in a semi join applied after all of lineitem is
+    grouped."""
+    df = REGISTRY[name].fn(spark, SF_DIR)
     plan = physical_plan(df, mode="simple")
     assert plan.count("lineitem.parquet") == 1, plan
     assert "partial_min" in plan and "partial_max" in plan, plan
+    lines = plan.splitlines()
+    at = next(i for i, l in enumerate(lines) if "partial_min" in l)
+    below = []
+    for line in lines[at + 1:]:
+        if _depth(line) <= _depth(lines[at]):
+            break
+        below.append(line)
+    assert any("orders.parquet" in l for l in below), plan
+
+
+@pytest.mark.parametrize("name", MEMBERSHIP_QUERIES)
+def test_membership_plans_shuffle_join_without_broadcast(spark, name):
+    """With broadcast disabled (orders grows with SF), the slice⋈
+    lineitem join must be a shuffle equi-join — never a broadcast,
+    nested-loop or cartesian form — and still match the oracle."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        plan = physical_plan(REGISTRY[name].fn(spark, SF_DIR))
+        assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
+        for bad in ("BroadcastHashJoin", "BroadcastNestedLoopJoin", "Cartesian"):
+            assert bad not in plan, plan
+        check_query(spark, name, SF_DIR, strict=True)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -34,10 +34,9 @@ def test_jdbc_partitioned_scan_parallelism(spark):
     # Runs the roundtrip to (re)create the Derby table for the reads below.
     REGISTRY["source_jdbc_roundtrip"].fn(spark, SF_DIR).count()
 
-    from splitserve_spark.sources.io import _roundtrip_dir
+    from splitserve_spark.sources.io import jdbc_roundtrip_url
 
-    db = _roundtrip_dir(SF_DIR, "derby_db")
-    url = f"jdbc:derby:{db}"
+    url = jdbc_roundtrip_url(SF_DIR)
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     back = spark.read.jdbc(
         url, "nation_rt", column="n_nationkey",
