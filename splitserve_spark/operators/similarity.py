@@ -20,16 +20,24 @@ the regression twins the kernels are pinned against.  Argmin
 assignment (nearest centroid / codebook entry) aggregates with
 min_by over a (dist, id) struct — partial-aggregatable map-side, so
 assignment needs NO shuffle-and-window; ties break on the id exactly
-like the row_number form it replaces.  Top-k per query uses the
-rank-window + filter shape, which Spark executes with WindowGroupLimit
-pushdown (partial top-k before the shuffle).  The LSH variants trade
-the all-pairs scan for equi-joins on sign-bit signatures.
+like the row_number form it replaces.  Brute-force top-k
+(sim_cosine_topk) collects the query vectors on the driver and keeps a
+running top-k per query inside one partition-local mapInArrow pass
+over the corpus (no join: each vector crosses into Python once); the
+rank-window + filter then merges the partitions' k-row candidate
+lists into the exact global rank.  The probe-based variants (IVF, PQ,
+LSH) rank with the rank-window + filter shape alone, which Spark
+executes with WindowGroupLimit pushdown (partial top-k before the
+shuffle).  The LSH variants trade the all-pairs scan for equi-joins on
+sign-bit signatures.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
@@ -151,6 +159,73 @@ def _arrow_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
 
 
+def _fixed_dim_matrix(arr, dim: int) -> np.ndarray:
+    """A list array whose every row holds `dim` numbers (a fixed-dim
+    embedding column) as an `(n, dim)` float64 matrix, with no per-row
+    Python.  `flatten()` honours the array's offset, so a sliced batch
+    yields its own rows; float32 elements widen to float64 exactly.
+    Raises on a null or wrong-length row (and, via `to_numpy`, on a
+    null element)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lengths_ok = pc.all(pc.equal(arr.value_lengths(), dim), min_count=0)
+    if arr.null_count or not lengths_ok.as_py():
+        raise ValueError(f"expected non-null lists of length {dim}")
+    flat = arr.flatten().to_numpy()
+    return flat.astype(np.float64, copy=False).reshape(len(arr), dim)
+
+
+def _cosine_topk_kernel(q_ids: np.ndarray, q_mat: np.ndarray, k: int):
+    """mapInArrow body for exact cosine top-k: over `(vec_id,
+    embedding)` batches, keep a running top-`k` per query row of
+    `q_mat` and emit it once, at most k rows per query per partition.
+
+    Cosines use _arrow_cosine's sequential per-dimension folds (query ×
+    vector dot, then dot / (‖q‖·‖v‖)), so every value is bit-identical
+    to the pair-join form.  Order is Spark's `cosine DESC,
+    neighbor_id`: NaN (a zero vector) ranks greatest, ties break on the
+    lower id.  A query's own id is excluded.  State is the k survivors
+    per query plus one batch, never the partition."""
+    nq, dim = q_mat.shape
+    q_sq = np.zeros(nq, dtype=np.float64)
+    for d in range(dim):
+        q_sq += q_mat[:, d] * q_mat[:, d]
+    q_norm = np.sqrt(q_sq)
+
+    def topk(batches):
+        if not nq:
+            return
+        best_ids = [np.empty(0, dtype=np.int64)] * nq
+        best_cos = [np.empty(0, dtype=np.float64)] * nq
+        for batch in batches:
+            ids = batch.column("vec_id").to_numpy()
+            mat = _fixed_dim_matrix(batch.column("embedding"), dim)
+            dots = np.zeros((nq, len(ids)), dtype=np.float64)
+            sq = np.zeros(len(ids), dtype=np.float64)
+            for d in range(dim):
+                dots += q_mat[:, d, None] * mat[None, :, d]
+                sq += mat[:, d] * mat[:, d]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dots / (q_norm[:, None] * np.sqrt(sq)[None, :])
+            for i in range(nq):
+                keep = ids != q_ids[i]
+                c_ids = np.concatenate([best_ids[i], ids[keep]])
+                c_cos = np.concatenate([best_cos[i], cos[i, keep]])
+                nan = np.isnan(c_cos)
+                order = np.lexsort((c_ids, np.where(nan, 0.0, -c_cos), ~nan))[:k]
+                best_ids[i], best_cos[i] = c_ids[order], c_cos[order]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(q_ids, [len(b) for b in best_ids])),
+                pa.array(np.concatenate(best_ids)),
+                pa.array(np.concatenate(best_cos)),
+            ],
+            names=["query_id", "neighbor_id", "cosine"],
+        )
+
+    return topk
+
+
 @register(
     "sim_cosine_topk",
     oracle=f"""
@@ -175,24 +250,31 @@ def _arrow_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     bench=True,
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the query set against every
-    vector, rank per query.  Exact — the baseline sim_lsh_ann is
-    measured against."""
+    """Brute-force cosine top-k: exact — the baseline sim_lsh_ann is
+    measured against.
+
+    The N_QUERIES query vectors are collected on the driver (the
+    Lloyd-pull pattern of sim_ivf_ann) and closed over one mapInArrow
+    pass of _cosine_topk_kernel over the corpus: each partition keeps
+    a running top-k per query and emits at most k rows per query, so
+    no query × corpus pair row is ever built.  The rank window over
+    those ≤ partitions·N_QUERIES·k candidates gives the exact global
+    rank (REPOSE-style partition-local top-k, then a global merge)."""
     ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
-    e = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    corpus = t.embeddings.select("vec_id", "embedding")
+    q = corpus.filter(F.col("vec_id") < N_QUERIES).toArrow()
+    kernel = _cosine_topk_kernel(
+        q.column("vec_id").to_numpy(),
+        _fixed_dim_matrix(q.column("embedding"), EMB_DIM),
+        TOP_K,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _arrow_cosine(F.col("qv"), F.col("v")).alias("cosine"),
+        corpus.mapInArrow(
+            kernel, schema="query_id bigint, neighbor_id bigint, cosine double"
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)

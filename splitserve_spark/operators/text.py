@@ -710,6 +710,12 @@ def _bm25_oracle() -> str:
     """
 
 
+def _term_count(ws, term: str):
+    """Occurrences of `term` in the string array `ws`, fully codegen'd
+    (ArrayRemove drops every equal element); null for a null array."""
+    return F.array_size(ws) - F.array_size(F.array_remove(ws, F.lit(term)))
+
+
 @register(
     "text_bm25_search",
     bench=True,
@@ -721,9 +727,15 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-term query, return the top-20 by score.
 
     Scale design: because the query has a handful of terms, per-doc
-    term frequencies are computed with `size(filter(words, ...))` —
-    a narrow, codegen'd projection over the scan with NO explode and
-    NO posting-list shuffle.  Corpus-level stats (N, avgdl, per-term
+    term frequencies are computed as (_term_count)
+    `array_size(words) - array_size(array_remove(words, term))` — a
+    narrow, codegen'd projection over the scan with NO explode, NO
+    posting-list shuffle and no interpreted lambda (a
+    `size(filter(words, w -> w = term))` count is CodegenFallback,
+    evaluated per element; ArrayRemove is code-generated).  A null
+    `text` gives null term counts, which never pass `tf > 0`: the doc
+    is dropped and adds 0 to every df, while its `dl` (size() = -1)
+    still enters N and avgdl.  Corpus-level stats (N, avgdl, per-term
     document frequencies) reduce to a single row that Catalyst
     broadcasts back over the scan, so the whole search is one pass
     over the corpus plus a top-k.  At 100 TB with *ad-hoc* many-term
@@ -736,22 +748,16 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     ws = _words(F.col("text"))
 
-    def eq(term):
-        # NB: the lambda must be unary — a 2-arg lambda would be given
-        # (element, index) by the higher-order-function binder.
-        return lambda w: w == term
-
     # Persisted: both the 1-row stats aggregate and the scored output
-    # consume this projection — unpersisted, the tokenize/filter hot
-    # loop runs over the corpus twice (run_cache.py contract).
+    # consume this projection — unpersisted, the tokenize/count hot
+    # loop runs over the corpus twice (run_cache.py contract), and
+    # CollapseProject inlines the split into every term's count.
     docs = persist_tracked(
         t.documents.select(
             "doc_id",
             F.size(ws).cast("double").alias("dl"),
             *[
-                F.size(F.filter(ws, eq(term)))
-                .cast("double")
-                .alias(f"tf_{term}")
+                _term_count(ws, term).cast("double").alias(f"tf_{term}")
                 for term in BM25_QUERY_TERMS
             ],
         )

@@ -32,7 +32,7 @@ from pyspark.sql.datasource import (
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf
-from splitserve_spark.tables import sfdir_tag
+from splitserve_spark.tables import raw_schema, sfdir_tag
 
 PDS_DOCS = 500
 PDS_SHARDS = 8
@@ -530,9 +530,8 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_shard_stream_sink(spark)
     src_dir = _ordered_event_splits(spark, sf_dir)
     out = tempfile.mkdtemp(prefix="shard_stream_sink_")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
         .select(

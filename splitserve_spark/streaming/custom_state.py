@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
-from splitserve_spark.tables import sfdir_tag
+from splitserve_spark.tables import raw_schema, sfdir_tag
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_value double, last_ts_micros bigint"
@@ -281,11 +281,10 @@ def stream_cusum_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src_dir = _ordered_event_splits(spark, sf_dir)
     name = "scs_" + sfdir_tag(sf_dir)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     from splitserve_spark.tables import normalize_event_ts
 
     stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
     ).select("event_type", "ts", "event_id", "value")

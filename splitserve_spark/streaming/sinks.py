@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.tables import sfdir_tag
+from splitserve_spark.tables import raw_schema, sfdir_tag
 from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
 
 #: The canonical wordcount feed — single source of truth for the Spark
@@ -429,9 +429,8 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = MergeLedgerTarget(spark, base, "user_id",
                                events_profile_delta)
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
     ).select("user_id", "value", "ts")
@@ -550,11 +549,9 @@ def stream_merge_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = MergeLedgerTarget(spark, base, "user_id",
                                events_profile_delta)
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def _drain() -> None:
         stream = normalize_event_ts(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{staged}/b*.parquet")
         ).select("user_id", "value", "ts")

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
 from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
-from splitserve_spark.tables import Tables, sfdir_tag
+from splitserve_spark.tables import Tables, raw_schema, sfdir_tag
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over events.parquet with the SAME timestamp
@@ -41,9 +41,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events-ts ingestion seam."""
     from splitserve_spark.tables import normalize_event_ts
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .parquet(f"{sf_dir}/events.*")  # glob: file source needs a dir base path
     )
     return normalize_event_ts(stream)
@@ -715,11 +714,11 @@ def _attrib_outer_joined(spark: SparkSession, src_dir: str) -> DataFrame:
     stream_click_attribution_outer, before its output projection."""
     from splitserve_spark.tables import normalize_event_ts
 
-    raw_schema = spark.read.parquet(src_dir).schema
+    src_schema = spark.read.parquet(src_dir).schema
 
     def _side(event_type: str, id_col: str, user_col: str, ts_col: str):
         s = normalize_event_ts(
-            spark.readStream.schema(raw_schema).parquet(f"{src_dir}/events_*")
+            spark.readStream.schema(src_schema).parquet(f"{src_dir}/events_*")
         )
         return s.filter(F.col("event_type") == event_type).select(
             F.col("event_id").alias(id_col),

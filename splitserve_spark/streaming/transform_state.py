@@ -60,7 +60,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from splitserve_spark.session import ensure_parity_conf
-from splitserve_spark.tables import sfdir_tag
+from splitserve_spark.tables import raw_schema, sfdir_tag
 
 TWS_OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_cents bigint, n_types bigint"
@@ -149,9 +149,8 @@ def stream_tws_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src_dir = _ordered_event_splits(spark, sf_dir)
     name = "stws_" + sfdir_tag(sf_dir)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
     ).select(

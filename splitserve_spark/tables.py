@@ -13,6 +13,7 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -74,6 +75,36 @@ _DF_HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
+def _session_cache(store: weakref.WeakKeyDictionary, spark: SparkSession) -> dict:
+    """`spark`'s entry dict in a session-keyed cache."""
+    try:
+        return store.setdefault(spark, {})
+    except TypeError:  # session not weak-referenceable (mocks)
+        return {}
+
+
+#: Session-scoped cache of raw parquet file schemas (before
+#: normalize_event_ts), keyed like _DF_HANDLES.  A file-source stream
+#: needs its schema up front; inferring it from the footers is one
+#: Spark job per call.
+_RAW_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The on-disk schema of table `name` under `sf_dir`, inferred once
+    per session — the schema a `readStream` over that table's files
+    must declare."""
+    per_session = _session_cache(_RAW_SCHEMAS, spark)
+    key = (sf_dir, name)
+    if key not in per_session:
+        per_session[key] = spark.read.parquet(
+            os.path.join(sf_dir, f"{name}.parquet")
+        ).schema
+    return per_session[key]
+
+
 class Tables:
     """Lazy per-table loader: ``Tables(spark, sf_dir).lineitem``.
 
@@ -90,10 +121,7 @@ class Tables:
             raise AttributeError(name)
         if name not in TABLE_NAMES:
             raise AttributeError(f"unknown table {name!r}; have {TABLE_NAMES}")
-        try:
-            per_session = _DF_HANDLES.setdefault(self._spark, {})
-        except TypeError:  # session not weak-referenceable (mocks)
-            per_session = {}
+        per_session = _session_cache(_DF_HANDLES, self._spark)
         key = (self._sf_dir, name)
         if key not in per_session:
             from splitserve_spark.session import ensure_parity_conf

@@ -85,6 +85,48 @@ def test_bm25_scores_positive_and_sorted(spark):
     assert list(out["score"]) == sorted(out["score"], reverse=True)
 
 
+def test_bm25_term_counts_equal_lambda_count(spark):
+    """_term_count == size(filter(words, w -> w = term)) per doc and
+    term; a null text gives a count that, like the lambda form's,
+    never passes `tf > 0`."""
+    from pyspark.sql import functions as F
+
+    from splitserve_spark.operators.text import (
+        BM25_QUERY_TERMS,
+        _term_count,
+        _words,
+    )
+    from splitserve_spark.tables import Tables
+
+    docs = Tables(spark, SF_DIR).documents.select("doc_id", "text")
+    docs = docs.unionByName(
+        spark.createDataFrame([(-1, None)], "doc_id long, text string")
+    )
+    ws = _words(F.col("text"))
+
+    def eq(term):  # unary: a 2-arg lambda would be bound (element, index)
+        return lambda w: w == term
+
+    cols = []
+    for i, term in enumerate(BM25_QUERY_TERMS):
+        cols += [
+            _term_count(ws, term).alias(f"new{i}"),
+            F.size(F.filter(ws, eq(term))).alias(f"old{i}"),
+        ]
+    rows = docs.select("doc_id", "text", *cols).collect()
+    assert len(rows) > 1
+    hits = 0
+    for r in rows:
+        for i in range(len(BM25_QUERY_TERMS)):
+            new, old = r[f"new{i}"], r[f"old{i}"]
+            if r["text"] is None:
+                assert new is None and not (old is not None and old > 0)
+            else:
+                assert new == old, (r["doc_id"], BM25_QUERY_TERMS[i])
+                hits += new > 0
+    assert hits > 0
+
+
 def test_session_batch_invariants(spark):
     """Sessions per user are disjoint, ordered, and cover every event
     exactly once."""

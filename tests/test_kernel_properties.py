@@ -218,6 +218,80 @@ def test_sig_kernel_matches_python_fold(seed, n_rows, n_bits, n_tables):
         assert list(got[i]) == exp
 
 
+@st.composite
+def topk_case(draw):
+    """A corpus drawn with repetition from vector_batch()'s vectors
+    plus the zero vector (exact cosine ties, NaN cosines), query rows
+    picked from it (own id excluded), arbitrary batch cut points and
+    k."""
+    pool = [v for pair in draw(vector_batch()) for v in pair]
+    pool.append([0.0] * len(pool[0]))
+    corpus = draw(st.lists(st.sampled_from(pool), min_size=1, max_size=24))
+    ids = draw(st.permutations(range(100, 100 + len(corpus))))
+    q_rows = draw(
+        st.lists(st.integers(0, len(corpus) - 1), min_size=1, max_size=4)
+    )
+    cuts = sorted(draw(st.sets(st.integers(1, len(corpus)), max_size=6)))
+    k = draw(st.integers(min_value=1, max_value=6))
+    return corpus, list(ids), q_rows, cuts, k
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=topk_case())
+def test_cosine_topk_kernel_matches_brute_force(case):
+    """_cosine_topk_kernel's running top-k over arbitrarily cut
+    batches == a full sort of the sequential-fold cosines, bit-exact:
+    order cosine DESC with NaN greatest, then id; own id excluded."""
+    import pyarrow as pa
+
+    from splitserve_spark.operators.similarity import _cosine_topk_kernel
+
+    corpus, ids, q_rows, cuts, k = case
+    q_ids = np.array([ids[r] for r in q_rows], dtype=np.int64)
+    q_mat = np.array([corpus[r] for r in q_rows], dtype=np.float64)
+    table = pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(corpus, pa.list_(pa.float64()))],
+        names=["vec_id", "embedding"],
+    )
+    bounds = [0, *cuts, len(corpus)]
+    batches = [table.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+    out = pa.Table.from_batches(list(_cosine_topk_kernel(q_ids, q_mat, k)(batches)))
+    got = list(zip(*(out.column(c).to_pylist()
+                     for c in ("query_id", "neighbor_id", "cosine"))))
+
+    expected = []
+    with np.errstate(all="ignore"):
+        for qid, qv in zip(q_ids, q_mat.tolist()):
+            nq = np.sqrt(np.float64(_fold_dot(qv, qv)))
+            scored = [
+                (i, np.float64(_fold_dot(qv, v))
+                 / (nq * np.sqrt(np.float64(_fold_dot(v, v)))))
+                for i, v in zip(ids, corpus) if i != qid
+            ]
+            scored.sort(key=lambda p: (not math.isnan(p[1]),
+                                       0.0 if math.isnan(p[1]) else -p[1],
+                                       p[0]))
+            expected += [(int(qid), i, float(c)) for i, c in scored[:k]]
+    assert len(got) == len(expected)
+    for g, e in zip(got, expected):
+        assert g[:2] == e[:2], (got, expected)
+        assert g[2] == e[2] or (math.isnan(g[2]) and math.isnan(e[2])), (g, e)
+
+
+def test_fixed_dim_matrix_slices_and_rejects_ragged_rows():
+    import pyarrow as pa
+
+    from splitserve_spark.operators.similarity import _fixed_dim_matrix
+
+    arr = pa.array([[1.5, 2.0], [3.0, 4.25], [5.0, 6.0]], pa.list_(pa.float32()))
+    got = _fixed_dim_matrix(arr.slice(1, 2), 2)
+    assert got.dtype == np.float64
+    assert got.tolist() == [[3.0, 4.25], [5.0, 6.0]]
+    for bad in (pa.array([[1.0, 2.0], [3.0]]), pa.array([[1.0, 2.0], None])):
+        with pytest.raises(ValueError):
+            _fixed_dim_matrix(bad, 2)
+
+
 # ------------------------------------------------ distributed prefix rank
 
 @settings(

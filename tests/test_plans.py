@@ -294,6 +294,24 @@ def test_bm25_no_explode_and_stats_broadcast(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_bm25_term_counts_have_no_lambda(spark):
+    """Term counts are code-generated array functions: an interpreted
+    higher-order lambda (CodegenFallback) must not reach the plan."""
+    plan = physical_plan(q("text_bm25_search", spark))
+    assert "lambdafunction" not in plan, plan
+
+
+def test_cosine_topk_is_one_partition_local_arrow_pass(spark):
+    """Exact top-k scans the corpus once into one mapInArrow kernel:
+    no query × corpus nested-loop join, and no per-pair Arrow UDF."""
+    df = q("sim_cosine_topk", spark)
+    plan = physical_plan(df, mode="simple")
+    assert count_executed_scans(plan) == {"embeddings": 1}, plan
+    assert "MapInArrow" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 def test_zscore_stats_join_is_broadcast(spark):
     """The 5-row per-type stats table must broadcast back onto the
     events scan — shuffling the fact side against it would be the

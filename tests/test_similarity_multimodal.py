@@ -20,6 +20,18 @@ def test_oracle_match(spark, name):
     check_query(spark, name, SF_DIR)
 
 
+def test_cosine_topk_merges_across_arrow_batches(spark):
+    """7-row Arrow batches: the kernel's running top-k is merged
+    across ~70 batches per partition and must stay exact."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        check_query(spark, "sim_cosine_topk", SF_DIR, strict=True)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_label_centroid_drift_invariants(spark):
     pdf = REGISTRY["sim_label_centroid_drift"].fn(spark, SF_DIR).toPandas()
     assert pdf["centroid_cosine"].between(-1.0, 1.0).all()

@@ -44,6 +44,23 @@ def test_dedup_ids_drains_in_one_micro_batch(spark):
     assert [e["batchId"] for e in events] == [0]
 
 
+def test_events_stream_schema_is_inferred_once(spark):
+    """The raw events schema is inferred once per session: building
+    the file-source stream again launches no Spark job."""
+    from splitserve_spark.streaming.stateful import _events_stream
+
+    sc = spark.sparkContext
+    group = "events-stream-schema"
+    _events_stream(spark, SF_DIR)
+    try:
+        sc.setJobGroup(group, group)
+        again = _events_stream(spark, SF_DIR)
+    finally:
+        sc.setJobGroup(None, None)
+    assert again.isStreaming
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 @pytest.mark.parametrize(
     "name",
     ["stream_dedup_ids", "stream_file_source_agg", "stream_click_attribution"],

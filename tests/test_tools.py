@@ -13,6 +13,7 @@ import io
 import json
 import os
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -230,6 +231,16 @@ def test_sweep_time_records_match_plan_inspect(spark):
         assert rec["scans"] == count_executed_scans(plan)
         assert rec["rows"] == df.count()
         assert min(rec["build_s"], rec["plan_s"], rec["exec_s"]) >= 0
+
+
+def test_plans_md_masks_plan_ids():
+    """Plan ids and lambda variable numbers come from process-wide
+    counters: left unmasked, one changed plan renumbers every later
+    PLANS.md section."""
+    text = (REPO / "PLANS.md").read_text()
+    assert "[plan_id=_]" in text and "lambda x_n" in text
+    assert not re.search(r"plan_id=\d", text)
+    assert not re.search(r"lambda [xyz]_\d", text)
 
 
 def test_plans_md_is_current(tmp_path):

@@ -22,8 +22,10 @@ stdout unless --out names a file, so a bare run overwrites no evidence.
   action), after every table is warmed; plus rows, the shuffle
   exchanges and executed scans counted as PLANS.md and the repeat-scan
   guard count them, and the bench flag.
-- plans: PLANS.md, each query's `simple` physical plan (expression ids
-  masked for stable diffs) under its shuffle-exchange count.
+- plans: PLANS.md, each query's `simple` physical plan (expression
+  ids, plan ids and lambda variable numbers masked for stable diffs:
+  each comes from a process-wide counter, so one changed plan would
+  renumber every later section) under its shuffle-exchange count.
 
 Exits 2, before any session starts, on an unknown query name or a
 --sf-dir that is not a directory; 1 if any query fails; else 0.
@@ -120,6 +122,8 @@ def _time(spark, spec, sf_dir, strict, reps) -> dict:
 def _plans(spark, spec, sf_dir, strict, reps) -> dict:
     df = spec.fn(spark, sf_dir)
     plan = physical_plan(df, mode="simple").rstrip()
+    plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=_]", plan)
+    plan = re.sub(r"lambda ([xyz])_\d+", r"lambda \1_n", plan)
     return {"exchanges": count_exchanges(df),
             "plan": re.sub(r"#\d+L?", "#_", plan)}
 
