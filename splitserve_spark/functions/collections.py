@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -47,7 +46,6 @@ def _arr_str(col, sep: str = "|"):
 def fn_array_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """array / size / array_contains / element_at / sort_array /
     array_distinct / sequence."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k, r = F.col("n_nationkey"), F.col("n_regionkey")
     arr = F.array(k, r, F.lit(99))
@@ -85,7 +83,6 @@ def fn_array_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays_zip — all JVM lambda expressions, zero Python cost.  (Modern
     Spark surface; the 2.1 reference predates these but they're required
     for the vector ops in operators/similarity.py.)"""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k, r = F.col("n_nationkey"), F.col("n_regionkey")
     return (
@@ -117,7 +114,6 @@ def fn_array_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode (UDTF) over split tokens — reference Explode
     generators.scala:242 / LATERAL VIEW."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.select(
@@ -144,7 +140,6 @@ def fn_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode — 0-based position (oracle shifts UNNEST's 1-based
     ordinality)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.select(
@@ -170,7 +165,6 @@ def fn_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_struct_access(spark: SparkSession, sf_dir: str) -> DataFrame:
     """named_struct creation + field access, map creation + key lookup
     (reference complexTypeCreator.scala / complexTypeExtractors.scala)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     st = F.struct(F.col("n_nationkey").alias("key"), F.col("n_name").alias("name"))
     return (
@@ -199,7 +193,6 @@ def fn_struct_access(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_stack_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stack generator (reference generators.scala:112) — rows from
     literal columns, cross-product with the input."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.region.select("r_regionkey")
@@ -229,7 +222,6 @@ def fn_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.unpivot (melt) — wide→long reshape, the inverse of pivot
     (§2.4).  Runs as an Expand node: one input row fans out to one row
     per value column, no shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.filter(F.col("o_orderkey") <= 200)
@@ -271,7 +263,6 @@ def fn_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune it with map_filter, read it back with map_keys/map_values.
     The oracle computes identical outputs from plain lists (DuckDB's
     MAP surface differs; the *values* are what parity pins)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     sizes = F.array_sort(F.array_distinct(F.collect_list("p_size")))
     base = (
@@ -320,7 +311,6 @@ def fn_array_modern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array surface beyond 2.1: slice, reverse, position, zip_with —
     all JVM-side on per-order collected line arrays.  Both engines
     return 0 (not NULL) from array_position/list_position when absent."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     base = (
         t.lineitem.filter(F.col("l_orderkey") <= 300)
@@ -367,7 +357,6 @@ def fn_explode_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     column): each nation's attribute map flattens to (key, value)
     rows.  The EAV un-nesting every metadata pipeline needs; generator
     output stays whole-stage-codegen'd JVM."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     m = F.create_map(
         F.lit("name"), F.col("n_name"),

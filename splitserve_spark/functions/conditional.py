@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -35,7 +34,6 @@ from splitserve_spark.tables import Tables
     tags=("function", "conditional"),
 )
 def fn_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.filter(F.col("o_orderkey") <= 400)
@@ -83,7 +81,6 @@ def fn_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """coalesce / isnull / nullif / nvl / nvl2 / isnan (reference
     nullExpressions.scala:46-312)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     p = F.when(F.col("o_orderstatus") == "P", F.lit(None).cast("double")).otherwise(
         F.col("o_totalprice")
@@ -137,7 +134,6 @@ def fn_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cast matrix (reference Cast.scala, pre-ANSI).  Spark double→string
     of a whole double renders '123456.0' — totalprice has cents so both
     engines print digits; double→bigint truncates (oracle spells trunc)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.filter(F.col("o_orderkey") <= 400)
@@ -176,7 +172,6 @@ def fn_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_na_fill_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.na.drop(how='all') + df.na.fill per-column defaults
     (reference DataFrameNaFunctions.scala)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     base = t.customer.select(
         "c_custkey",
@@ -212,7 +207,6 @@ def fn_na_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.na.replace — value substitution per column (reference
     `python/pyspark/sql/dataframe.py:1182-1270`, DataFrameNaFunctions
     .replace): planned as a CASE WHEN projection, no shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.customer.select("c_custkey", "c_mktsegment", "c_nationkey")

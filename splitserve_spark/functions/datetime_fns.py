@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -45,7 +44,6 @@ from splitserve_spark.tables import Tables
 def fn_datetime_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field extraction; oracle shifts DuckDB's 0-based dayofweek to
     Spark's 1=Sunday convention."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     d = F.col("o_orderdate")
     return (
@@ -89,7 +87,6 @@ def fn_datetime_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_add/date_sub/add_months/last_day/date_trunc/datediff.
     Spark's add_months and DuckDB's +INTERVAL MONTH share end-of-month
     clamping; datediff argument order differs (end,start vs unit,start,end)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     d = F.col("o_orderdate")
     return (
@@ -127,7 +124,6 @@ def fn_datetime_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_datetime_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_format (Spark pattern letters ↔ strftime in the oracle),
     unix_timestamp/epoch, to_date, make_date."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     d = F.col("o_orderdate")
     return (
@@ -161,7 +157,6 @@ def fn_datetime_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_datetime_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-second timestamp handling on the events table (µs precision
     preserved through the nanos→micros load conversion in tables.py)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.events.filter(F.col("event_id") <= 200)

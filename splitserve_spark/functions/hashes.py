@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.functions.pure_hash import murmur3_x86_32, xxhash64
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -38,7 +37,6 @@ from splitserve_spark.tables import Tables
 )
 def fn_hash_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5 + sha2-256 hex digests (reference hash.scala Md5:51 Sha2:86)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.select(
@@ -89,7 +87,6 @@ def fn_hash_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python (canonical SMHasher/xxHash vectors pinned in tests) and the
     oracle carries the expected values for the fixed nation table —
     upgraded from the former rows-only determinism check."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.select(

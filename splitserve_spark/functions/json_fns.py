@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -34,7 +33,6 @@ from splitserve_spark.tables import Tables
 def fn_json_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     """get_json_object path extraction (string result, null on missing
     path) — reference GetJsonObject."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.events.filter(F.col("event_id") <= 300)
@@ -64,7 +62,6 @@ def fn_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json with explicit schema → struct field access, and
     to_json over a named struct (both engines emit compact
     {"key":value} text)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     schema = StructType([StructField("k", IntegerType())])
     return (
@@ -116,7 +113,6 @@ def fn_csv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     and surface the parsed fields as top-level columns.  Both
     directions are JVM-side (UniVocity parser) — the schema is explicit
     because at 100 TB you never infer CSV schemas per-row."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     opts = {"sep": "|"}
     line = F.to_csv(

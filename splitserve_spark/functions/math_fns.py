@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -43,7 +42,6 @@ from splitserve_spark.tables import Tables
     tags=("function", "math"),
 )
 def fn_math_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.filter(F.col("l_orderkey") <= 200)
@@ -94,7 +92,6 @@ def fn_math_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_math_trig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trig/hyperbolic family; hypot expressed in the oracle as
     sqrt(x²+y²) (DuckDB has no hypot)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k = F.col("n_nationkey")
     return (
@@ -144,7 +141,6 @@ def fn_math_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modulo / pmod / integer division / factorial / bitwise ops
     (reference arithmetic.scala + bitwiseExpressions.scala:36-130).
     pmod's always-positive result is spelled ((x%n)+n)%n in the oracle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ln = F.col("l_linenumber")
     return (
@@ -190,7 +186,6 @@ def fn_math_rounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     double→int cast truncates toward zero, matching DuckDB's
     CAST(TRUNC())-free semantics only via trunc — Spark's cast truncates,
     DuckDB CAST rounds, so the oracle uses CAST(trunc(...))."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.filter(F.col("o_orderkey") <= 300)
@@ -228,7 +223,6 @@ def fn_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow / bad cast / zero division — the ANSI-mode-compatible
     spelling of the engine's pre-ANSI semantics.  The oracle replicates
     with CASE/TRY_CAST; bigint overflow is pinned to NULL."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     big = F.lit(9223372036854775807).cast("long")
     return (
@@ -283,7 +277,6 @@ def fn_width_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: scan-side projection + one small groupBy; the histogram is
     the map-side-combinable way to profile a distribution at 100 TB
     (contrast exact percentile windows)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.select(
@@ -322,7 +315,6 @@ def fn_bit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure codegen projection, no shuffle; fence bounds oracle
     output only."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k = F.col("o_orderkey")
     return (

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -46,7 +45,6 @@ from splitserve_spark.tables import Tables
     tags=("function", "string"),
 )
 def fn_string_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.part.select(
@@ -90,7 +88,6 @@ def fn_string_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("function", "string"),
 )
 def fn_string_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.part.select(
@@ -126,7 +123,6 @@ def fn_string_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract / replace-all / rlike / split / translate.
     DuckDB regexp_replace replaces the FIRST match unless given the 'g'
     flag; Spark always replaces all — oracle passes 'g'."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.part.select(
@@ -157,7 +153,6 @@ def fn_string_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """base64/unbase64 roundtrip + printf-style formatting
     (reference Base64:1283, UnBase64:1312, FormatString:936)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.select(
@@ -191,7 +186,6 @@ def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_string_modern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modern string additions: split_part (±index), left/right,
     regexp_count, overlay — all JVM-side, same names in DuckDB."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.part.filter(F.col("p_partkey") <= 400)
@@ -234,7 +228,6 @@ def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors parse_url's component grammar with regexes.  Zero-shuffle
     codegen projection — exactly how URL columns are normalized before
     host-level dedup at 100 TB."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     url = F.concat(
         F.lit("https://"),
@@ -289,7 +282,6 @@ def fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized from document metadata so the query is self-contained;
     the oracle mirrors each location path with a regex.  Zero-shuffle
     JVM projection (javax.xml evaluation, no Python)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     xml = F.concat(
         F.lit('<doc id="'), F.col("doc_id").cast("string"),
@@ -336,7 +328,6 @@ def fn_string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure scan-side projection (codegen, no shuffle); the fence
     (p_partkey < 200) only bounds oracle output, not the technique."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     thresh = F.levenshtein("p_brand", F.lit("Brand#11"), 2)
     return (
@@ -382,7 +373,6 @@ def fn_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scan-side JVM crypto, no shuffle; the fence bounds oracle
     output only."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     key = F.lit(AES_KEY)
     mode = F.lit("ECB")

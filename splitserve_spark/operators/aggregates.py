@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -45,7 +44,6 @@ def agg_basic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count / count-distinct / sum / avg / min / max in one pass.
     count(DISTINCT) plans the two-phase distinct expansion
     (planAggregateWithOneDistinct in the reference)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -81,7 +79,6 @@ def agg_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines round to 4dp: summation order differs across engines,
     so raw doubles diverge at the ~1e-7 level (measured) and would break
     an exact value hash."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -123,7 +120,6 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """skewness/kurtosis — Spark computes population moments (g1, excess
     g2); DuckDB's built-ins are sample-corrected, so the oracle derives
     the population moments explicitly."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -149,7 +145,6 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregate", "stats"),
 )
 def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -180,7 +175,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (reference Percentile.scala:56);
     Spark `percentile` and DuckDB `quantile_cont` share the
     p*(n-1) linear-interpolation definition."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -222,7 +216,6 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     given input set.  At 100 TB the approx pair is the right default —
     fixed memory per group vs unbounded exact-distinct state — and the
     exact twins here are what certifies the sketches stay in-band."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -264,7 +257,6 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapped in sort_array because bare collect order is partition-order
     dependent on any engine.  Output is serialized with array_join: the
     driver's canonicalizer cannot sort/hash array-typed columns."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.nation.groupBy("n_regionkey")
@@ -291,7 +283,6 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_by/max_by on a unique ordering key — the deterministic form
     of the reference's first/last aggregates (First.scala:36, Last.scala:36)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.groupBy("o_custkey")
@@ -322,7 +313,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GroupingSets/Expand, basicLogicalOperators.scala:606,637).  Group
     keys are coalesced to a sentinel so output carries no nulls (null
     ordering differs between engines)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.rollup("l_returnflag", "l_linestatus")
@@ -357,7 +347,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregate", "grouping-analytics"),
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.cube("l_returnflag", "l_linestatus")
@@ -392,7 +381,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL entry point (grammar SqlBase.g4:378-380
     in the reference) — exercises temp-view registration + spark.sql."""
-    ensure_parity_conf(spark)
     Tables(spark, sf_dir).register_temp_views()
     return spark.sql(
         """
@@ -423,7 +411,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with explicit value list (reference PivotFirst.scala:71;
     RelationalGroupedDataset.scala:314).  Explicit values avoid the
     extra distinct-values job — mandatory at scale."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_linestatus")
@@ -445,7 +432,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregate", "having"),
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.groupBy("o_custkey")
@@ -469,7 +455,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregate", "boolean"),
 )
 def agg_bool_and_count_if(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_returnflag")
@@ -493,7 +478,6 @@ def agg_bool_and_count_if(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("aggregate", "distinct"),
 )
 def agg_sum_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.groupBy("l_linestatus")
@@ -532,7 +516,6 @@ def agg_median_mode_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties engine-specifically), and ordered distinct string aggregation
     (listagg's order is engine-dependent, so the deterministic form is
     array_sort(collect_set) + array_join)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     f = t.orders.filter(F.col("o_orderkey") <= 2000)
     counts = f.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -581,7 +564,6 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY — triggers RewriteDistinctAggregates (Expand: one replica
     of each row per distinct group + grouping-id routing; reference
     `catalyst/optimizer/RewriteDistinctAggregates.scala`)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.groupBy("o_orderstatus")
@@ -616,7 +598,6 @@ def agg_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     used for permission-mask rollups and parity checksums.  Fully
     map-side combinable: the shuffle carries one 3-long row per
     (partition, status)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.groupBy("o_orderstatus")
@@ -679,7 +660,6 @@ def agg_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     fenced per-source cardinality and pin the measured union boundary;
     the companion estimate-vs-exact tolerance test covers the general
     (non-exact) regime contract."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     docs = t.documents.filter(F.col("doc_id") < HLL_FENCE_MAX_ID).select(
         "source", "doc_id"
@@ -720,7 +700,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT) shuffle at 100 TB: raw keys never move — only
     4 KB bitmap blobs per (group, bucket) shuffle, and the merge is
     associative, so AQE can combine partials anywhere."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     partials = (
         t.orders.select(
@@ -771,7 +750,6 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     after."""
     from splitserve_spark import sql_entry
 
-    ensure_parity_conf(spark)
     return sql_entry.sql(spark, _FILTER_CLAUSE_SQL, sf_dir)
 
 
@@ -808,7 +786,6 @@ def agg_equiwidth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bin arithmetic (floor((v-lo)/step), top edge clamped into the last
     bin) is identical IEEE on both engines — no rounding needed for
     parity."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     li = t.lineitem.select("l_extendedprice")
     stats = li.agg(
@@ -863,7 +840,6 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two stacked map-side-combinable groupBys collapse the fact table
     to |status × priority| cells before any math; the entropy sum runs
     over that tiny cell table."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     cell = t.orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("c")
@@ -919,7 +895,6 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines round (4dp values, 6dp r2): the moment sums differ in
     addition order across engines, the classic ~1e-7 drift
     agg_variance documents."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     y, x = F.col("l_extendedprice"), F.col("l_quantity")
     return (

@@ -18,7 +18,6 @@ from pyspark.sql.window import Window
 
 from splitserve_spark.operators.prefix_rank import ntile_from_rank, with_global_prefix
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 #: Ordered funnel stages: a user "converts" stage N only with an event
@@ -134,7 +133,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Ref analytics surface: `sql/core/.../AggUtils.scala:37` — plain
     conditional aggregation; funnel itself is beyond-parity.)
     """
-    ensure_parity_conf(spark)
     return _stage_counts(*_funnel_stages(Tables(spark, sf_dir)))
 
 
@@ -173,7 +171,6 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     final agg are map-side combinable; output is O(days × horizon)
     regardless of event volume, so nothing here grows at 100 TB.
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts")
 
@@ -234,7 +231,6 @@ def agg_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final per-type rollup.  The same shape holds at 100 TB: the
     stats side stays O(|types|).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ev = t.events.select("event_type", "value")
 
@@ -296,7 +292,6 @@ def window_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank → ntile bucket arithmetically — identical output, every task
     sorting ~1/32 of the data.
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rows = t.lineitem.select("l_extendedprice", "l_orderkey", "l_linenumber")
     ranked, n, _ = with_global_prefix(
@@ -372,7 +367,6 @@ def window_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     sw = F.session_window("ts", f"{SESSION_GAP_HOURS} hours")
     return (
@@ -422,7 +416,6 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
@@ -472,7 +465,6 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-local pair-expansion discipline as the LSH dedup operator;
     the oracle uses the classic self-join formulation to prove the
     rewrite equivalent."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     baskets = (
         t.lineitem.select("l_orderkey", "l_partkey")
@@ -555,7 +547,6 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch and the corpus is re-scanned up to 7× instead of 3.  At
     100 TB swap the exact medians for percentile_approx and the shape
     is unchanged."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.run_cache import (
         persist_tracked, release_prior,
     )
@@ -635,7 +626,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = t.events.select(
@@ -714,12 +704,13 @@ def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort.  The three score tables re-join on custkey (hash joins on
     the rollup), still strictly cheaper than three single-reducer
     sorts of it."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
-    from splitserve_spark.operators.graph import _persist_tracked, _release_prior
+    from splitserve_spark.operators.run_cache import (
+        persist_tracked, release_prior,
+    )
 
-    _release_prior()  # free the previous invocation's cached rollup
-    per_cust = _persist_tracked(
+    release_prior()  # free the previous invocation's cached rollup
+    per_cust = persist_tracked(
         t.orders.groupBy("o_custkey").agg(
             F.datediff(
                 F.lit(RFM_ASOF).cast("date"),
@@ -806,7 +797,6 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the bound also CAPS join state in a streaming deployment — the
     batch twin of the interval-bounded stream-stream attribution
     join."""
-    ensure_parity_conf(spark)
     deadline = F.expr(f"INTERVAL {FUNNEL_WINDOW_DAYS} DAYS")
     return _stage_counts(
         *_funnel_stages(Tables(spark, sf_dir), deadline=deadline)
@@ -860,7 +850,6 @@ def window_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit, and the grand total / customer count come back as
     driver-side exact constants instead of a Window.partitionBy()
     global window."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     per_cust = t.orders.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 2).alias("revenue")
@@ -940,7 +929,6 @@ def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "ts")
     burst = (
@@ -1025,7 +1013,6 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.  Shuffles hash on day; state never exceeds
     |users| × horizon.  The oracle uses the equivalent range self-join
     formulation."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.run_cache import (
         persist_tracked, release_prior,
     )
@@ -1112,7 +1099,6 @@ def orders_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combinable groupBy collapses the fact table to
     |months| rows; the lag window runs over that tiny series (an
     unpartitioned window over dozens of rows — not a scale concern)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     monthly = t.orders.groupBy(
         F.year("o_orderdate").alias("y"),
@@ -1175,7 +1161,6 @@ def window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, exact decimal sums); the ROWS frame runs over that
     tiny series.  Frames are row-based with a total (day) order, so
     both engines window identically."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     daily = t.events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count("*").alias("n_events"),
@@ -1241,7 +1226,6 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  Sums are decimal(18,2) end-to-end and cast to double only
     at the output boundary (floating addition is not associative;
     decimal keeps both engines' totals bit-identical)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "event_type", "value")
 
@@ -1324,7 +1308,6 @@ def events_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one day of events, so at 100 TB one narrows the partition key
     to (day, hour) with carry-in counts — the standard segmented-scan
     refinement; no global window anywhere."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # One scan: each event row explodes into its two sweep points
     # (a union of starts and ends would read the fact table twice).
@@ -1407,7 +1390,6 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 2-decimal by construction), so every prefix sum, running min
     and threshold comparison is exact and order-free — no float
     drift anywhere until the single final cast of the max."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = (
         Window.partitionBy("event_type")
@@ -1491,7 +1473,6 @@ def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key serialization for a hot key to exploit.  Sums are exact
     DECIMAL so the fill carries bit-identical values in both
     engines."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     daily = (
         t.events.filter(F.col("user_id") % FFILL_MOD == 0)

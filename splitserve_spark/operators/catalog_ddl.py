@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -84,7 +83,6 @@ def ddl_temp_view_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     §3.1 lifecycle: parse → resolve against SessionCatalog → optimize →
     execute. The view is a logical alias; filters still push to the
     parquet scan underneath."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     view = f"orders_v_{_tag(sf_dir)}"
     t.orders.createOrReplaceTempView(view)
@@ -109,7 +107,6 @@ def ddl_temp_view_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_global_temp_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global temp view (global_temp database) — cross-session-visible
     catalog entry, reference `catalog/GlobalTempViewManager`."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     view = f"region_gv_{_tag(sf_dir)}"
     t.region.createOrReplaceGlobalTempView(view)
@@ -132,7 +129,6 @@ def ddl_global_temp_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHOW TABLES (ShowTablesCommand) filtered by LIKE pattern;
     projected to the stable (tableName, isTemporary) pair."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     t.nation.createOrReplaceTempView("show_a_t1")
     t.region.createOrReplaceTempView("show_a_t2")
@@ -158,7 +154,6 @@ def ddl_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_describe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DESCRIBE TABLE (DescribeTableCommand) on a temp view — schema
     surfaced through the catalog, names/types pinned by the oracle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     view = f"nation_desc_{_tag(sf_dir)}"
     t.nation.createOrReplaceTempView(view)
@@ -179,7 +174,6 @@ def ddl_describe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_catalog_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spark.catalog.listTables — programmatic catalog API
     (reference `internal/CatalogImpl.scala`)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     t.part.createOrReplaceTempView("cat_list_v1")
     tables = spark.catalog.listTables()
@@ -199,7 +193,6 @@ def ddl_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     AnalyzeTableCommand): collected row counts feed the cost-based
     optimizer's join reordering.  Verified by reading the rowCount back
     out of DESCRIBE EXTENDED."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.scale_patterns import _bucketed_tables
 
     t_orders, _ = _bucketed_tables(spark, sf_dir)
@@ -228,7 +221,6 @@ def ddl_database_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     `command/ddl.scala:55` CreateDatabaseCommand, `:120`
     DropDatabaseCommand).  The namespace lifecycle a real warehouse
     exercises before any table exists."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     db = f"ddl_db_{_tag(sf_dir)}"
     _clear_managed_location(spark, f"{db}.db")
@@ -260,7 +252,6 @@ def ddl_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     `command/tables.scala:320` ShowPartitionsCommand) — the catalog
     must enumerate the directory-keyed partitions the writer laid down,
     which is what partition pruning trusts at scale."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     name = f"nation_part_{_tag(sf_dir)}"
     _clear_managed_location(spark, name)
@@ -291,7 +282,6 @@ def ddl_truncate_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUNCATE TABLE (reference `command/tables.scala:250`
     TruncateTableCommand): data gone, table + schema retained in the
     catalog — unlike DROP, downstream readers keep resolving."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     name = f"region_trunc_{_tag(sf_dir)}"
     _clear_managed_location(spark, name)
@@ -320,7 +310,6 @@ def ddl_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference `execution/columnar/InMemoryRelation.scala:55`,
     CacheManager substitution in §3.1 step 3). The cached view is
     uncached afterwards so repeated driver runs stay idempotent."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     view = f"lineitem_cache_{_tag(sf_dir)}"
     t.lineitem.createOrReplaceTempView(view)
@@ -358,7 +347,6 @@ def ddl_alter_add_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ADD COLUMNS is a metadata-only operation — O(1) regardless
     of table size, the property that makes schema evolution viable on
     a 100 TB table (contrast rewriting every parquet file)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     name = f"region_alter_{_tag(sf_dir)}"
     _clear_managed_location(spark, name)
@@ -401,7 +389,6 @@ def ddl_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     with (defaults are materialized at write time, not read time,
     which is why the ALTER cannot rewrite history).  The oracle pins
     the exact expected rows."""
-    ensure_parity_conf(spark)
     name = f"defaults_{_tag(sf_dir)}"
     _clear_managed_location(spark, name)
     spark.sql(

@@ -33,8 +33,13 @@ from splitserve_spark.functions.parity_hash import (
     perm_hash_spark_sql,
     perm_hash_sql,
 )
+# Shared bounded-to-one-run persist tracker (run_cache.py holds the
+# contract).  The LSH collapse persists its narrow membership table
+# (doc_id, fp, rep — five consuming branches) and its single shingle
+# pass (three consumers); without it, Catalyst re-derives both per
+# branch (measured: 17 scans, zero exchange reuse).
+from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 _NORM_SQL = "regexp_replace(trim(lower(text)), ' +', ' ', 'g')"
@@ -77,17 +82,6 @@ _BANDS_SQL = " UNION ALL ".join(
 
 def _norm(col):
     return F.regexp_replace(F.trim(F.lower(col)), " +", " ")
-
-
-# Shared bounded-to-one-run persist tracker (run_cache.py holds the
-# contract).  The LSH collapse persists its narrow membership table
-# (doc_id, fp, rep — five consuming branches) and its single shingle
-# pass (three consumers); without it, Catalyst re-derives both per
-# branch (measured: 17 scans, zero exchange reuse).
-from splitserve_spark.operators.run_cache import (
-    persist_tracked as _persist_tracked,
-    release_prior as _release_prior,
-)
 
 
 def _shingles(spark, sf_dir, docs: DataFrame | None = None) -> DataFrame:
@@ -170,7 +164,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on the normalized-text fingerprint,
     electing min(doc_id) as canonical.  One shuffle on the 128-bit
     fingerprint — uniformly distributed, no skew, scales linearly."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.documents.select(
@@ -196,7 +189,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-permutation MinHash signature per document — the building
     block of LSH dedup, verified value-exact against the oracle."""
-    ensure_parity_conf(spark)
     return _signatures(spark, sf_dir).orderBy("doc_id")
 
 
@@ -283,8 +275,7 @@ def _lsh_members_confirmed(
     only need per-DOC decisions (pipeline_training_data's loser set)
     derive them linearly from membership instead of materializing the
     pair expansion."""
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     # selectExpr / SQL-string predicates below parse to the identical
     # Catalyst trees as the previous Column-by-Column construction but
@@ -298,7 +289,7 @@ def _lsh_members_confirmed(
     # groupBy+join, NOT a partitionBy(fp) window: map-side partial
     # aggregation keeps a 10⁷-copy hot fingerprint from concentrating
     # its rows in one window task; AQE splits the skewed join side.
-    members = _persist_tracked(fp_df.join(reps, "fp"))
+    members = persist_tracked(fp_df.join(reps, "fp"))
     uniq_docs = t.documents.join(
         members.filter("doc_id = rep").select("doc_id"),
         "doc_id",
@@ -309,7 +300,7 @@ def _lsh_members_confirmed(
     # would run the tokenize/shingle hot loop three times).  Spark's
     # default MEMORY_AND_DISK level spills rather than OOMs when the
     # unique-text shingle table outgrows executor memory.
-    sh = _persist_tracked(_shingles(spark, sf_dir, uniq_docs))
+    sh = persist_tracked(_shingles(spark, sf_dir, uniq_docs))
     sig = _signatures(spark, sf_dir, sh=sh)
     n_bands = len(MINHASH_PERMS) // 2
     # One (band, bucket) struct array exploded in a single pass — NOT a
@@ -390,7 +381,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash: per bit, majority vote of token-hash bits over the
     document's distinct tokens.  Identical texts → identical sketch;
     near-identical → small Hamming distance (paired in tests)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # The token-hash array is let-bound via a 1-element transform() so
     # all 16 bit-majority terms read the SAME array — the previous
@@ -441,7 +431,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the brute-force ground truth the LSH pipeline approximates.  The
     O(n²) join is intentionally fenced to a fixed block; the scale path
     is dedup_minhash_lsh."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = t.documents.filter(F.col("doc_id") < 150).select(
         "doc_id",
@@ -523,12 +512,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node, label) pairs only; at corpus scale the pair list comes from
     the banded-LSH candidate join (dedup_minhash_lsh), not the fenced
     O(n²) block."""
-    # Reuse the iterative-operator persist tracker (bounds cached
-    # copies to one run across repeated invocations — graph.py:41).
-    from splitserve_spark.operators.graph import _persist_tracked, _release_prior
-
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     w = t.documents.filter(F.col("doc_id") < 150).select(
         "doc_id",
@@ -544,7 +528,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= 0.6)
         .select("a", "b")
     )
-    sym = _persist_tracked(
+    sym = persist_tracked(
         pairs.select("a", "b")
         .union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .union(pairs.select("a", F.col("a").alias("b")))
@@ -606,7 +590,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the persisted dedup index, O(corpus) keys but narrow); the batch
     shuffles once on fp for both the index anti-probe and the
     first-in-batch window.  Corpus text is never touched."""
-    ensure_parity_conf(spark)
     from pyspark.sql.window import Window
 
     t = Tables(spark, sf_dir)
@@ -670,7 +653,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate pairs come from the MinHash-LSH index and only
     candidates get the exact containment confirm — the same
     mine-then-confirm discipline as dedup_minhash_lsh."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = t.documents.filter(F.col("doc_id") < 150).select(
         "doc_id",
@@ -754,7 +736,6 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: narrow projection → one exact-key groupBy; no joins,
     no windows, no Python.  At 100 TB this is the cheapest dedup tier
     (shuffle on canonical_url, combiner-friendly min/count)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     raw = t.documents.select(
         "doc_id", F.expr(_RAW_URL_SQL).alias("url")
@@ -863,8 +844,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     join gracefully when a boilerplate-heavy crawl inflates it.  A
     hot fingerprint (10⁷-copy boilerplate window) lands in ONE
     groupBy cell (combiner-absorbed), not a window task."""
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     K = SUBSTR_WIN
     t = Tables(spark, sf_dir)
     parallelism = spark.sparkContext.defaultParallelism
@@ -898,7 +878,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("st"),
         )
     )
-    wins = _persist_tracked(
+    wins = persist_tracked(
         base.select(
             "doc_id",
             F.col("st.tok_count").alias("tok_count"),

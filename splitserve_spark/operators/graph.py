@@ -15,7 +15,7 @@ weight-0 self-loop keeps in-degree-0 nodes alive through the single
 allowed recursive reference).
 
 Scale notes: the static edge/node tables are persisted for the loop
-(and released on the NEXT invocation — see _release_prior, which keeps
+(and released on the NEXT invocation — see release_prior, which keeps
 repeated bench/oracle runs from accumulating cached copies); the edge
 table is the static side of every join, so at cluster scale you
 bucket/pre-partition edges by src once and every iteration reuses that
@@ -27,21 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 N_ITER = 5
 RESET = 0.15
 DAMP = 0.85
-
-# Shared bounded-to-one-run persist tracker (run_cache.py holds the
-# full contract); re-exported under the historical local names, which
-# dedup/analytics also import from here.
-from splitserve_spark.operators.run_cache import (  # noqa: E402
-    persist_tracked as _persist_tracked,
-    release_prior as _release_prior,
-)
 
 
 def _edges(spark, sf_dir) -> DataFrame:
@@ -105,10 +97,9 @@ def _edges(spark, sf_dir) -> DataFrame:
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank, GraphX semantics, {N_ITER} fixed iterations."""
-    ensure_parity_conf(spark)
-    _release_prior()
-    edges = _persist_tracked(_edges(spark, sf_dir))
-    nodes = _persist_tracked(
+    release_prior()
+    edges = persist_tracked(_edges(spark, sf_dir))
+    nodes = persist_tracked(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -116,7 +107,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Edge weights (1/outdeg) are a property of the STATIC graph —
     # compute once before the loop, not per iteration.
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_w = _persist_tracked(
+    edges_w = persist_tracked(
         edges.join(outdeg, "src").select(
             "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
         )
@@ -207,8 +198,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as PageRank.  The edge sample (o_orderkey % 20 = 0) keeps
     multiple components alive; the fixed iteration count makes the
     Spark loop and the recursive-CTE oracle bitwise comparable."""
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     edges = (
         t.orders.filter(F.col("o_orderkey") % 20 == 0)
@@ -229,7 +219,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("a"), F.col("dst").alias("b")))
         .distinct()
     )
-    sym = _persist_tracked(sym)
+    sym = persist_tracked(sym)
     labels = sym.groupBy("a").agg(F.min("b").alias("label")).withColumnRenamed("a", "node")
     for _ in range(CC_ITER):
         # labels is O(|nodes|) — unlike PageRank's rank/deg vector demo,
@@ -281,7 +271,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical orientation (each edge stored once, low→high) is exactly
     GraphX's degree-based de-duplication trick, keeping wedge counts
     linear in Σ deg² rather than double-counting."""
-    ensure_parity_conf(spark)
     return _triangle_core(spark, _co_membership_pairs(spark, sf_dir))
 
 
@@ -380,8 +369,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges (u,v,w) of d(u)+w — so Spark loop and recursive-CTE oracle
     are structurally identical.  Nodes not reached in {BFS_ITER} hops
     are absent (frontier semantics), not NULL-padded."""
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     edges = (
         t.orders.filter(F.col("o_orderkey") % 20 == 0)
@@ -395,7 +383,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sym = _persist_tracked(
+    sym = persist_tracked(
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), F.lit(1).alias("w"))
         .union(edges.select("dst", "src", F.lit(1)))
         .union(edges.select("src", "src", F.lit(0)))
@@ -478,8 +466,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max_by over the vote struct — no window, map-side combinable)
     picks the winner.  Labels are O(|nodes|) and are never broadcast-
     hinted, so the planner shuffle-joins at cluster scale."""
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     edges = (
         t.orders.filter(F.col("o_orderkey") % LPA_MOD == 0)
@@ -498,7 +485,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
     )
-    sym = _persist_tracked(sym)
+    sym = persist_tracked(sym)
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -678,9 +665,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable).  No broadcast hints — the planner picks broadcast at
     test SF and shuffle-join at cluster scale, the same discipline the
     r6 PageRank de-hint established."""
-    ensure_parity_conf(spark)
-    _release_prior()
-    sym = _persist_tracked(_sssp_sym_edges(spark, sf_dir))
+    release_prior()
+    sym = persist_tracked(_sssp_sym_edges(spark, sf_dir))
     return _sssp_core(sym, _sssp_seeds(sym))
 
 
@@ -843,7 +829,6 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(diameter) for naive propagation (the difference between 7 and
     ~64 rounds on this block's giant SCC).  Every distinct is an
     exact-key shuffle; nothing driver-side."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     nodes = t.documents.filter(F.col("doc_id") < SCC_N).select(
         F.col("doc_id").cast("int").alias("u")
@@ -963,7 +948,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds rounds by the graph's degeneracy, not its size — this is
     the textbook distributed k-core (ref GraphX aggregateMessages
     degree loop, `graphx/.../GraphOps.scala:88` degrees)."""
-    ensure_parity_conf(spark)
     edges = _symmetrize(_md5_block_edges(spark, sf_dir, "kcore", KCORE_N))
     return _kcore_core(edges)
 
@@ -1073,13 +1057,12 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     — decimal addition is exact and order-free, so the score is
     deterministic across partitionings and engines (then cast to
     DOUBLE once, exactly, for the hash)."""
-    ensure_parity_conf(spark)
     # Persisted: the symmetrized edge list has four consumers (degree
     # table, both 2-path join sides, the existing-edge anti-join) and
     # its own lineage reads the corpus four times — unpersisted that
     # is 16 corpus scans per run (run_cache.py contract).
-    _release_prior()
-    g = _persist_tracked(
+    release_prior()
+    g = persist_tracked(
         _symmetrize(_md5_block_edges(spark, sf_dir, "aa", AA_N))
     )
     scored = _aa_scored(g)

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from splitserve_spark import sql_entry
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -56,7 +55,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer (filtered on mktsegment) broadcasts into orders; the
     orders⋈lineitem join shuffles on orderkey (sort-merge at scale).
     Top-k via TakeOrderedAndProject — no global sort."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     cutoff = F.lit("2000-03-15").cast("timestamp")
     cust = t.customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
@@ -107,7 +105,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5: 6-table star join.  nation/region broadcast by hint;
     customer and the supplier-side dims broadcast by planner size check
     at test SF (at 100 TB they would shuffle — correctly)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     dims = (
         t.supplier
@@ -175,7 +172,6 @@ def join_sort_merge_fact_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact equi-join: at 100 TB both sides exceed any broadcast
     threshold → sort-merge on l_orderkey/o_orderkey with AQE handling
     skew.  No hint given: Catalyst must pick correctly by size."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.select("l_orderkey", "l_quantity")
@@ -200,7 +196,6 @@ def join_sort_merge_fact_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER preserving customers with zero orders (count(col)
     skips the null-extended rows, matching SQL semantics)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"), "left")
@@ -221,7 +216,6 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "outer"),
 )
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"), "right")
@@ -246,7 +240,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two pre-aggregated sides (aggregate-then-join
     keeps the shuffled data minimal — a 100 TB-safe pattern vs
     join-then-aggregate)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     c = t.customer.groupBy(F.col("c_nationkey").alias("c_nk")).agg(
         F.count(F.lit(1)).alias("n_cust")
@@ -281,7 +274,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI: customers with ≥1 finished order. Emits each left row
     at most once — no duplication, no right-side columns."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     f_orders = t.orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     return (
@@ -308,7 +300,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOME order in the synthetic data, so the unrestricted variant is a
     vacuous 0-row check; the priority filter keeps ~13% of customers at
     every SF.)"""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.customer.join(
@@ -333,7 +324,6 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product of two tiny dimensions (CartesianProductExec /
     broadcast NLJ — only sane when one side is tiny, as here)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.region.select("r_name")
@@ -378,7 +368,6 @@ def join_non_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual — NOT a full nested loop.  No broadcast hint: supplier
     grows with SF (ref SparkStrategies.scala:116-120 — the planner's
     size threshold, not the query, decides the build side)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return _non_equi_count(t.customer, t.supplier)
 
@@ -397,7 +386,6 @@ def join_non_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_using_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """USING-style join (single shared key column in the output,
     reference ResolveNaturalAndUsingJoin)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     o = t.orders.select(F.col("o_custkey").alias("custkey"), "o_orderkey")
     c = t.customer.select(F.col("c_custkey").alias("custkey"), "c_name")
@@ -421,7 +409,6 @@ def join_using_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_self(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-join producing unordered same-region nation pairs."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     a = t.nation.alias("a")
     b = t.nation.alias("b")
@@ -458,7 +445,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (<=>, reference predicates.scala:446
     EqualNullSafe): NULL keys match NULL keys — unlike `=`, which drops
     them. Catalyst still plans a hash join because <=> is an equi-key."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k = F.when(F.col("o_orderstatus") == "P", F.lit(None)).otherwise(
         F.col("o_orderpriority")
@@ -495,7 +481,6 @@ def join_shuffled_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     beats sort-merge when one side is much smaller per partition but too
     big to broadcast.  Forced via hint("SHUFFLE_HASH"); the physical
     operator is asserted in tests/test_plans.py."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     orders = t.orders.filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
@@ -527,7 +512,6 @@ def join_natural(spark: SparkSession, sf_dir: str) -> DataFrame:
     `catalyst/analysis/Analyzer.scala:101`): resolved at analysis time
     to a USING join on the common columns, then planned like any
     equi-join (broadcast here: region is tiny)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     t.nation.select(
         F.col("n_nationkey").alias("nationkey"),
@@ -579,5 +563,4 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k, then the 25-row nation side broadcasts.  The identical SQL
     text is the oracle (cross-engine portability is the point).
     """
-    ensure_parity_conf(spark)
     return sql_entry.sql(spark, _LATERAL_TOPN_SQL, sf_dir)

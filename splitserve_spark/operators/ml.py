@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.functions.parity_hash import md5_hash60, md5_hash60_sql
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 K = 8
@@ -162,7 +161,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     _lloyd_final_centroids, memoized per sf_dir (deterministic in the
     input data alone) so ml_kmeans's twin check shares it instead of
     re-training."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     data = t.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -220,7 +218,6 @@ def ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed — measured 0.5% the other way at sf0.001) and 1 ≤
     #clusters ≤ K.  The 1-row × 1-row crossJoin broadcasts (BNLJ) —
     never a data cartesian."""
-    ensure_parity_conf(spark)
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -283,7 +280,6 @@ def workload_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SparkPi as deterministic quasi-Monte-Carlo: hash-derived points
     instead of rand() so the estimate is partitioning-independent and
     oracle-checkable.  No input scan — spark.range generates splits."""
-    ensure_parity_conf(spark)
     ids = spark.range(0, _PI_N)
     x = (md5_hash60(F.concat(F.lit("x"), F.col("id").cast("string"))) % 1_000_000) / 1_000_000.0
     y = (md5_hash60(F.concat(F.lit("y"), F.col("id").cast("string"))) % 1_000_000) / 1_000_000.0
@@ -347,7 +343,6 @@ def ml_kmeans_onestep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every init cell is non-empty by construction (each seed vector is
     at distance 0 from its own cell), so no empty-cell branch is
     needed."""
-    ensure_parity_conf(spark)
     from pyspark.sql.window import Window
 
     t = Tables(spark, sf_dir)

@@ -91,10 +91,8 @@ def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     k = F.variant_get(F.parse_json(F.col("props")), "$.k", "bigint")
     return (
@@ -131,9 +129,6 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the non-aggregate select list, ordering from the full select
     list.  The IDENTICAL SQL text runs on both engines — the whole
     point of the shorthand is cross-engine portability."""
-    from splitserve_spark.session import ensure_parity_conf
-
-    ensure_parity_conf(spark)
     return sql_entry.sql(spark, _GROUP_BY_ALL_SQL, sf_dir)
 
 
@@ -197,10 +192,8 @@ def merge_upsert_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF≈33+."""
     from pyspark.sql import functions as F
 
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     target = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
     upd = target.filter(F.col("c_custkey") % UPD_MOD == 0).select(
@@ -274,10 +267,8 @@ def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-aggregates exactly like a binary string — no extra shuffle."""
     from pyspark.sql import functions as F
 
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     mixed = t.customer.select(
         F.when(
@@ -331,9 +322,6 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical plan (partial→final agg, one shuffle) is unchanged; the
     oracle is the classic-form equivalent, proving the two surfaces
     agree."""
-    from splitserve_spark.session import ensure_parity_conf
-
-    ensure_parity_conf(spark)
     return sql_entry.sql(spark, _PIPE_SQL, sf_dir)
 
 
@@ -395,9 +383,6 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: procedural loops re-scan per iteration by design (12
     scans here); the declarative twin is the 1-scan plan you deploy —
     the pair documents exactly that trade."""
-    from splitserve_spark.session import ensure_parity_conf
-
-    ensure_parity_conf(spark)
     prior = spark.conf.get("spark.sql.scripting.enabled", "false")
     spark.conf.set("spark.sql.scripting.enabled", "true")
     try:
@@ -441,10 +426,8 @@ def sql_udf_identifier_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve to the same plan semantics.  Decimal-exact money math
     inside the UDF application (p * 0.9 cast to DECIMAL before the
     sum)."""
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     Tables(spark, sf_dir).register_temp_views()
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION discounted(p DOUBLE) "
@@ -496,10 +479,8 @@ def sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     procedures hide.  The oracle's single left-join aggregate is the
     one-scan deployment form; the pair documents that trade the same
     way the scripting WHILE loop does."""
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     Tables(spark, sf_dir).register_temp_views()
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION seg_orders(seg STRING) "
@@ -556,10 +537,8 @@ def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     string), so alias-resolution order and the decimal arithmetic
     chain (scale-4 net → scale-6 gross, all exact, summed exactly and
     cast to double only at the edge) must agree to the bit."""
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     Tables(spark, sf_dir).register_temp_views()
     return spark.sql(_LATERAL_ALIAS_SQL)
 
@@ -603,10 +582,8 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     t.events.filter(F.col("user_id") % DIST_MOD == 0).select(
         "user_id", "ts", "event_id"
@@ -696,10 +673,8 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent."""
     from pyspark.sql import functions as F
 
-    from splitserve_spark.session import ensure_parity_conf
     from splitserve_spark.tables import Tables
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     a = t.orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
     # Derive snapshot B in ONE pass over orders instead of a union of

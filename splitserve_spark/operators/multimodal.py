@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 def decode_media(payload: bytes) -> dict:
@@ -82,7 +81,6 @@ def _capped_docs(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
 def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload metadata: byte length + content digest — computed
     JVM-side on the binary column (no decode needed)."""
-    ensure_parity_conf(spark)
     df = with_payload(spark, sf_dir)
     return (
         df.filter(F.col("doc_id") < 300)
@@ -243,7 +241,6 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     BatchEvalPythonExec (`execution/python/BatchEvalPythonExec.scala:63`);
     swap the kernel for PIL/ffmpeg for codec formats (see
     `decode_media`)."""
-    ensure_parity_conf(spark)
     return wav_features(
         _capped_docs(spark, sf_dir, MM_WAV_DOCS)
     ).orderBy("doc_id")
@@ -334,7 +331,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     into {FRAME_LEN}-sample frames, keeps every {FRAME_STRIDE}-th, and
     emits per-frame energy/peak — the 1:N payload→frames fan-out of a
     video/audio pipeline, analytically oracled per frame."""
-    ensure_parity_conf(spark)
     return frame_sample(
         _capped_docs(spark, sf_dir, MM_FRAME_DOCS)
     ).orderBy("doc_id", "frame_idx")
@@ -477,7 +473,6 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     perfectly partition-parallel, no shuffle until the final
     presentation sort; at 100 TB the payload column streams through
     Arrow batches and only the tiny feature rows come out."""
-    ensure_parity_conf(spark)
     return (
         _ppm(_capped_docs(spark, sf_dir, MM_PPM_DOCS)).mapInPandas(
             _decode_ppm_batches,
@@ -577,7 +572,6 @@ def mm_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline whose output is ~(HW/P²) small rows per image.  The
     oracle replays the synthetic pixel formula analytically over the
     same grid."""
-    ensure_parity_conf(spark)
     return image_patches(
         _capped_docs(spark, sf_dir, MM_PPM_DOCS)
     ).orderBy("doc_id", "py", "px")
@@ -679,7 +673,6 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     final presentation sort.  At 100 TB the frame rows inherit the
     input partitioning, and the sort is the queryable-output
     convention, not part of the pipeline."""
-    ensure_parity_conf(spark)
     return _wav(_capped_docs(spark, sf_dir, MM_WAV_DOCS)).mapInPandas(
         _audio_feature_batches,
         schema=(
@@ -794,7 +787,6 @@ def mm_audio_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature kernel in one mapInPandas pass, zero exchanges before the
     presentation sort; the per-clip kernel is O(n·{AC_MAX_LAG}) numpy
     dot products inside the batch."""
-    ensure_parity_conf(spark)
     return audio_autocorr(
         _capped_docs(spark, sf_dir, MM_WAV_DOCS)
     ).orderBy("doc_id")

@@ -29,7 +29,6 @@ from splitserve_spark.operators.dedup import (
     _lsh_members_confirmed,
 )
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 MIN_CHARS = 120
@@ -101,7 +100,6 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed algorithm first; the pair expansion is
     dedup_minhash_lsh's declared OUTPUT, but this pipeline only ever
     consumed the per-doc decision)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # String-parsed expressions (selectExpr / SQL predicate strings)
     # parse to the identical trees as the Column forms in one py4j

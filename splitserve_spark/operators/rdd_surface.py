@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -43,7 +42,6 @@ def rdd_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """flatMap → map → reduceByKey — the canonical RDD program
     (map-side combine happens in reduceByKey, same as a partial
     aggregate). Threshold filter keeps the result bounded."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rdd = (
         t.documents.select("text").rdd
@@ -71,7 +69,6 @@ def rdd_aggregate_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregateByKey with a (count, sum, max) accumulator — the
     combineByKey family (PairRDDFunctions). seqOp runs map-side,
     combOp merges per key after the shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rdd = (
         t.lineitem.select("l_suppkey", "l_quantity", "l_extendedprice").rdd
@@ -99,7 +96,6 @@ def rdd_aggregate_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rdd_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RDD pair join (CoGroupedRDD underneath) on the dimension tables."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     nations = t.nation.rdd.map(lambda r: (r["n_regionkey"], (r["n_nationkey"], r["n_name"])))
     regions = t.region.rdd.map(lambda r: (r["r_regionkey"], r["r_name"]))
@@ -126,7 +122,6 @@ def rdd_join_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rdd_sort_zip_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sortBy + zipWithIndex (range-partitioned sort, then per-partition
     offset assignment — one extra job to count partition sizes)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rdd = (
         t.supplier.select("s_suppkey", "s_acctbal").rdd
@@ -174,8 +169,6 @@ def workload_pi_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only entries' task).  Each of the {PI_RDD_PARTS} partitions
     samples its own contiguous id range — the map/reduce shape is
     unchanged."""
-    ensure_parity_conf(spark)
-
     def sample(split):
         import hashlib
 
@@ -223,7 +216,6 @@ def rdd_broadcast_accumulator(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulator counts rows processed (the ancestor of df.observe).
     The DataFrame equivalents are strictly preferred (see module
     docstring); this proves the escape hatch end-to-end."""
-    ensure_parity_conf(spark)
     sc = spark.sparkContext
     t = Tables(spark, sf_dir)
     region_map = sc.broadcast(
@@ -270,7 +262,6 @@ def rdd_tree_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on 2-decimal quantities, so the tree's different merge
     order cannot change the result (associativity is exact here —
     floats would need the decimal recipe the SQL oracles use)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rdd = t.lineitem.select("l_quantity").rdd.map(
         lambda row: int(round(row["l_quantity"] * 100))

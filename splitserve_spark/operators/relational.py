@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -55,7 +54,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation has 6 groups, so the partial-aggregate reduces ~all rows
     map-side and the final shuffle moves O(partitions·6) rows.
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -104,7 +102,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + conjunctive filter; both predicates reach the scan
     (PushedFilters) and ReadSchema carries only 6 columns."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem
@@ -133,7 +130,6 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY + LIMIT → TakeOrderedAndProject: per-partition top-k
     heaps, only k rows per partition to the driver-side merge — no
     global sort shuffle even at 100 TB."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders
@@ -157,7 +153,6 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def global_sort_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global range-partitioned sort with explicit NULLS LAST ordering
     (SortOrder semantics, SURVEY.md §2.6)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     price_or_null = F.when(F.col("o_orderstatus") == "P", F.lit(None).cast("double")).otherwise(
         F.col("o_totalprice")
@@ -186,7 +181,6 @@ def global_sort_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT → rewritten to an aggregate (ReplaceDistinctWithAggregate);
     partial dedup map-side, tiny shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem.select("l_returnflag", "l_linestatus")
@@ -214,7 +208,6 @@ def drop_duplicates_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number so Spark and the oracle agree on WHICH row survives
     (bare dropDuplicates keeps an arbitrary first row — fine for the
     engine, not for a hash-matched oracle)."""
-    ensure_parity_conf(spark)
     from pyspark.sql.window import Window
 
     t = Tables(spark, sf_dir)
@@ -241,7 +234,6 @@ def drop_duplicates_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def range_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spark.range → RangeExec, codegen'd generator with no input scan
     (reference `execution/basicPhysicalOperators.scala:331`)."""
-    ensure_parity_conf(spark)
     return (
         spark.range(0, 1000)
         .select(F.col("id"), (F.col("id") * 2).alias("doubled"))
@@ -280,7 +272,6 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     population.  The population projection still persists for the run
     (run_cache contract) because TWO branches consume it (its count
     and the anti-join's right side)."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.run_cache import (
         persist_tracked, release_prior,
     )
@@ -319,7 +310,6 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-memory local relation (LocalTableScanExec,
     reference `execution/LocalTableScanExec.scala:29`)."""
-    ensure_parity_conf(spark)
     df = spark.createDataFrame([(1, "one"), (2, "two"), (3, "three")], ["k", "v"])
     return df.orderBy("k")
 
@@ -345,7 +335,6 @@ def sort_within_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic oracle comparison the query pins ONE partition, so
     the local sort is provably total; the multi-partition layout
     behavior is asserted in tests/test_plans.py."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.orders.filter(F.col("o_orderkey") <= 500)

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables, sfdir_tag
 
 N_SALT = 8
@@ -56,7 +55,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, salt) so a hot key spreads over S reducers; a second, tiny
     aggregation merges the S partials per key.  Value-identical to the
     plain join the oracle runs."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     orders = (
         t.orders.filter(F.col("o_custkey") % 100 == 7)
@@ -144,7 +142,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join itself (asserted in tests/test_scale_patterns.py).  This is
     the contract that makes repeated fact-fact joins affordable at
     100 TB: pay the partitioning once at write time."""
-    ensure_parity_conf(spark)
     t_orders, t_lineitem = _bucketed_tables(spark, sf_dir)
     o = spark.table(t_orders)
     li = spark.table(t_lineitem)

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -43,7 +42,6 @@ _FIN_SQL = "SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = '
     tags=("setop",),
 )
 def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return _high(t).union(_finished(t)).orderBy("o_orderkey", "o_orderstatus")
 
@@ -58,7 +56,6 @@ def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("setop",),
 )
 def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         _high(t).union(_finished(t)).distinct().orderBy("o_orderkey", "o_orderstatus")
@@ -76,7 +73,6 @@ def setop_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT → left-semi join + dedup under the hood."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return _high(t).intersect(_finished(t)).orderBy("o_orderkey")
 
@@ -92,7 +88,6 @@ def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT → left-anti join + dedup."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return _high(t).subtract(_finished(t)).orderBy("o_orderkey")
 
@@ -110,7 +105,6 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL — bag semantics (min of multiplicities)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     a = t.lineitem.filter(F.col("l_quantity") > 40).select("l_orderkey")
     b = t.lineitem.filter(F.col("l_discount") > 0.05).select("l_orderkey")
@@ -130,7 +124,6 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — bag semantics (multiplicity subtraction)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     a = t.lineitem.filter(F.col("l_quantity") > 40).select("l_orderkey")
     b = t.lineitem.filter(F.col("l_discount") > 0.05).select("l_orderkey")
@@ -150,7 +143,6 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName — column-name (not positional) union resolution."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     a = t.customer.filter(F.col("c_custkey") <= 10).select(
         F.col("c_custkey").alias("k"), F.col("c_acctbal").alias("v")

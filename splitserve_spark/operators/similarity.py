@@ -45,7 +45,6 @@ from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 #: Number of probe vectors (lowest vec_ids double as the query set).
@@ -260,7 +259,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no query × corpus pair row is ever built.  The rank window over
     those ≤ partitions·N_QUERIES·k candidates gives the exact global
     rank (REPOSE-style partition-local top-k, then a global merge)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     corpus = t.embeddings.select("vec_id", "embedding")
     q = corpus.filter(F.col("vec_id") < N_QUERIES).toArrow()
@@ -310,7 +308,6 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded block — the semantic-dedup primitive.  The fenced O(n²)
     block is the ground-truth twin of the LSH path (same pattern as
     dedup_ngram_jaccard)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     e = t.embeddings.filter(F.col("vec_id") < 300).select(
         "vec_id", _as_double("embedding").alias("v")
@@ -357,7 +354,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by LSH-bucketed candidates (sim_lsh_ann's signature
     equi-join) feeding this same keep-first aggregation; one shuffle on
     dup_id either way."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     e = t.embeddings.filter(F.col("vec_id") < 300).select(
         "vec_id", _as_double("embedding").alias("v")
@@ -490,7 +486,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The planes are md5-parity Rademacher vectors, so the whole
     mine→confirm→keep-first pipeline is value-checked against a SQL
     replica (upgraded from the former rows-only check)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # Consumed by the signature index and by both vector re-attach
     # sides of the confirm join — persist so the corpus is scanned
@@ -633,7 +628,6 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, re-rank — is value-checked against a SQL replica (the r6
     'upgrade rows-only entries' task) instead of the former rows-only
     count; recall vs sim_cosine_topk stays property-tested."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     buckets = _sig_kernel(_hyperplanes(EMB_DIM), N_BITS)
 
@@ -777,7 +771,6 @@ def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize→probe→re-rank pipeline (the r6 'upgrade rows-only
     entries' task); recall vs sim_cosine_topk stays
     property-tested."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # Three consumers (init collect, centroid-update collect, final
     # assignment) = three corpus scans without a persist; one
@@ -875,7 +868,6 @@ def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector norms/sums/dims — the sanity projection for embedding
     columns (array<float> treated as first-class typed data)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     v = _as_double(F.col("embedding"))
     return (
@@ -936,7 +928,6 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python, no shuffle; the quantized codes would be written in the
     scan projection at corpus scale.  floor(x + 0.5) is used instead of
     round() in BOTH engines so half-way semantics cannot drift."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     e = t.embeddings.filter(F.col("vec_id") < 500).select(
         "vec_id", _as_double("embedding").alias("v")
@@ -1022,7 +1013,6 @@ def sim_label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned three times anyway — the cache pins the
     single-scan contract (run_cache: released on the next tracked
     operator's entry)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     release_prior()
     # posexplode_OUTER: a degenerate row (empty/null embedding) still
@@ -1218,7 +1208,6 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     update stays a map-side-combinable (subspace, code, pos)
     re-average.  Approximate → recall-tested against sim_cosine_topk
     in tests."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # The raw-vector projection feeds five consumers (init collect,
     # codebook training, final encode, the query set, and the rerank
@@ -1398,7 +1387,6 @@ def sim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices in-expression — no second embedding table, which is the
     point: at 100 TB you evaluate truncation candidates without
     re-materializing the corpus."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # Both ranking passes and the query-set broadcast read the same
     # raw-vector projection — persist it so the corpus is scanned and
@@ -1493,7 +1481,6 @@ def sim_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, map-side combinable; the confusion rollup is O(K).  The
     oracle replays it with generate_subscripts/unnest (DuckDB lacks
     WITH ORDINALITY)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     base = t.embeddings.select(
         "vec_id", "label", _as_double("embedding").alias("v")
@@ -1644,7 +1631,6 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel chunks its pairwise block to a fixed-size intermediate, so
     task memory stays flat at 100 TB.  Beyond-reference (LLM-pipeline
     mandate); cluster-scoped twin of dedup_embedding_cosine."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     e = t.embeddings.filter(F.col("vec_id") < SEM_N).select(
         "vec_id", _as_double("embedding").alias("v")
@@ -1775,7 +1761,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     final order.  At 100 TB this is the cheapest similarity query in
     the module; the same LSH/IVF bucketing as sim_lsh_ann prunes the
     scan when the radius is tight."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     e = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(

@@ -21,7 +21,6 @@ from pyspark.sql.window import Window
 
 from splitserve_spark.operators.prefix_rank import with_global_prefix
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -41,7 +40,6 @@ def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.stat.crosstab — contingency table (pair-count aggregate +
     driver-side pivot of the *distinct value set*, which must be small;
     row count is |distinct(a)|·|distinct(b)|, here 3×2)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ct = t.lineitem.stat.crosstab("l_returnflag", "l_linestatus")
     return ct.orderBy("l_returnflag_l_linestatus")
@@ -60,7 +58,6 @@ def stat_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stat_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.stat.corr / cov semantics (Pearson, sample covariance) as a
     DataFrame result — single-pass co-moment aggregation."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # Rounded both engines (9dp corr, 4dp cov): co-moment accumulation
     # order differs across engines → last-ULP drift under strict compare.
@@ -94,7 +91,6 @@ def stat_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.describe() — count/mean/stddev/min/max per numeric column.
     describe() itself returns strings (display contract); this re-casts
     to double so values hash-match the oracle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     desc = t.orders.select("o_totalprice", "o_orderkey").describe()
     return (
@@ -165,7 +161,6 @@ def stat_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract), and the total row count derives from a cached rollup —
     so the many downstream branches (threshold filter, anti-join,
     final union) never re-derive a corpus pass."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.run_cache import (
         persist_tracked, release_prior,
     )
@@ -235,7 +230,6 @@ def stat_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The API returns a driver-side list by contract; re-wrapped as a
     1-row DataFrame.  At 100 TB you run relativeError>0 (bounded
     memory); tests bound the rank error of that regime separately."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     q25, q50, q75 = t.orders.stat.approxQuantile(
         "o_totalprice", [0.25, 0.5, 0.75], 0.0
@@ -272,7 +266,6 @@ def stat_sample_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bernoulli semantics, also inside the band).  The live sampleBy
     output feeds the check, so the §2 operator still runs inside the
     checked plan; rate assertions per stratum stay in tests."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     frac = F.create_map(
         *[F.lit(x) for kv in SAMPLE_BY_FRACTIONS.items() for x in kv]
@@ -327,7 +320,6 @@ def stat_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, and the observation reports what the scan actually saw —
     the decimal sum keeps the metric bit-exact at any partition
     order."""
-    ensure_parity_conf(spark)
     from pyspark.sql import Observation
 
     t = Tables(spark, sf_dir)
@@ -397,7 +389,6 @@ def stat_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-reducer global sort anywhere, and the integer count sums
     make the decomposition bit-identical to the oracle's sequential
     window."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     pooled = t.events.filter(
         F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)
@@ -466,7 +457,6 @@ def stat_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 1-row table count broadcast back for the relative
     threshold.  The fact table is scanned twice but never shuffled —
     at 100 TB each scan emits only its column's partial counts."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     n = t.orders.agg(F.count("*").alias("n_rows"))
 
@@ -532,7 +522,6 @@ def stat_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded cell table read events exactly once.  The unpartitioned
     N-window is over input bounded BY CONSTRUCTION (|types|×|bands|
     rows), registered in the plan guard's allow-list."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     obs = (
         t.events.select(
@@ -613,7 +602,6 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard applies).  The z-score divides the same integers through
     the same double expression on both engines before the shared
     round(…, 6)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     pooled = t.events.filter(
         F.col("event_type").isin(KS_TYPE_A, KS_TYPE_B)

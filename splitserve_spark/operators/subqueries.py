@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -24,7 +23,6 @@ def _sql_query(name: str, sql: str, tags: tuple[str, ...] = ("subquery", "sql"))
 
     @register(name, oracle=sql, tags=tags)
     def run(spark: SparkSession, sf_dir: str, _sql: str = sql) -> DataFrame:
-        ensure_parity_conf(spark)
         Tables(spark, sf_dir).register_temp_views()
         return spark.sql(_sql)
 

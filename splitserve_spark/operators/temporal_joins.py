@@ -70,7 +70,6 @@ def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     no nested loop, no per-row subquery.  Ties on (custkey, orderdate)
     resolve to max(o_orderkey) — mirrored in the oracle's pre-aggregate
     (DuckDB's native ASOF JOIN picks an arbitrary row otherwise)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     events = _events_sample(t)
     orders = (
@@ -192,7 +191,6 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform bin key instead of nested-looping orders × bands.  (Here the
     band side is tiny so Catalyst broadcasts it anyway — the bin
     structure is what survives when BOTH sides are large.)"""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     bands = spark.createDataFrame(
         [
@@ -347,7 +345,6 @@ def pit_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix_rank.py applies unchanged if one key dominates).  Feature
     values pass through VERBATIM (no arithmetic), so parity with the
     oracle's correlated form is exact."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     examples = t.events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"

@@ -20,7 +20,6 @@ from splitserve_spark.functions.parity_hash import (
 )
 from splitserve_spark.registry import register
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 #: Marker (stop)words per language for the heuristic classifier.  The
@@ -87,7 +86,6 @@ def _word_ngrams_expr(n: int):
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token statistics: char/word/unique-word/stopword
     counts in one narrow projection."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     stop = F.filter(w, lambda x: x.isin(*_STOPWORDS))
@@ -119,7 +117,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex tokenization (BPE-ish pre-tokenizer shape) + type counts.
     regexp_extract_all is JVM-side; the pattern avoids constructs where
     Java and RE2 dialects diverge."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     toks = F.regexp_extract_all("text", F.lit(TOKEN_RE), 0)
     return (
@@ -164,7 +161,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID with a deterministic argmax tiebreak
     (en > de > fr).  A real system would use char-n-gram profiles; the
     pipeline shape — score columns + argmax — is identical."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     def marker_count(markers):
@@ -213,7 +209,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score: length saturation + stopword density +
     lexical diversity (the classic pre-training quality-filter triple)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     n_words = F.size(w).cast("double")
@@ -268,7 +263,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the natural key.  Docs with <2 words have no bigrams and get
     top_bigram_frac = 0.0 via the left join.
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     n = F.size(w)
@@ -370,7 +364,6 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-step of a training-data pipeline (eval sets are O(MB), corpora
     O(100 TB)).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     g = t.documents.select(
         "doc_id", _word_ngrams_expr(CONTAM_N).alias("gs")
@@ -436,7 +429,6 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase text
     plus the 60-bit integer form used by the dedup operators."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), " +", " ")
     return (
@@ -511,7 +503,6 @@ def text_segment_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenized exactly once (persisted for the run, run_cache contract);
     only a doc_id-projection scan remains for the empty-document
     universe."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ws = _words(F.col("text"))
     n_segs_col = F.ceil(F.size(ws) / F.lit(float(SEG_LEN))).cast("int")
@@ -620,7 +611,6 @@ def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-side probe; the per-doc reassembly shuffles on doc_id once
     with array_sort fixing token order — same skeleton as the segment
     rewrite."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ws = _words(F.col("text"))
     w = t.documents.select(
@@ -743,7 +733,6 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy term); for fixed small queries this shape is strictly
     better — the corpus never shuffles.
     """
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     ws = _words(F.col("text"))
@@ -837,7 +826,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     de-hint playbook; selection rule `SparkStrategies.scala:116-120`).
     The 1-row total IS hint-broadcast — bounded by construction.  All
     JVM-side: no UDF, the log/avg run in whole-stage codegen."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     words = t.documents.select(
@@ -917,7 +905,6 @@ def text_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit-prunable rank partitioned by doc_id.  Raw text is
     read once; nothing wider than (doc_id, word) ever shuffles.
     Ties broken by term so both engines emit identical keyword sets."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     words = t.documents.select(
@@ -1002,7 +989,6 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     {CHUNK_SIZE} words, so consecutive chunks share
     {CHUNK_SIZE - CHUNK_STRIDE} words; the final start is the last one
     that still begins a new (possibly short) window."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     starts = F.sequence(
@@ -1061,7 +1047,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as text_tokenize_ids), and the per-source rollup is
     map-side combinable.  At 100 TB the vocab is a fixed artifact —
     this query is one corpus scan."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     words = t.documents.select(
         "source", F.explode(_words(F.col("text"))).alias("w")
@@ -1111,7 +1096,6 @@ def text_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB `quantile_cont`); one map-side-combinable groupBy.  At
     100 TB swap to percentile_approx for one-pass sketching — the
     stat_approx_quantile twin documents that trade."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.documents.groupBy("source")
@@ -1157,7 +1141,6 @@ def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME split array — a narrow JVM projection, no self-join; the
     count rollup is map-side combinable and the top-k is a
     TakeOrdered, so nothing but (word-pair, count) rows ever shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = _words(F.col("text"))
     bigrams = (
@@ -1230,7 +1213,6 @@ def text_source_drift_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Heaps' law), so a forced broadcast would OOM executors; the
     planner/AQE broadcasts it only when it measures small.  The final
     sum shuffles only O(|sources|) rows."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     words = t.documents.select(
@@ -1317,7 +1299,6 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected list (no window), and the 1-row corpus count broadcasts
     for the relative-df fence.  Nothing wider than (term, doc, tf)
     ever shuffles."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     words = t.documents.select(
         "doc_id", F.explode(_words(F.col("text"))).alias("w")
@@ -1414,7 +1395,6 @@ def text_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes with pipeline_training_data's quality gate.  The ratio
     columns divide exact ints on both engines before the shared
     round(…, 4), so the hash is drift-free."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ws = _words(F.col("text"))
     m = t.documents.select(

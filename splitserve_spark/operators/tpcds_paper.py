@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.operators.run_cache import persist_tracked, release_prior
 from splitserve_spark.tables import Tables
 
@@ -71,7 +70,6 @@ def qds5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Expand operator doubles rows per grouping set — the I/O-heavy
     pattern the paper picked).  Union branches stay independent until
     the single aggregation shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     flow1 = (
@@ -198,7 +196,6 @@ def qds16_multi_site_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one per-order aggregate over the date/priority slice's lines
     (see _slice_membership). (Oracle's l1 join has duplicate orders
     per line; its DISTINCT is the aggregate's (key, price) grouping.)"""
-    ensure_parity_conf(spark)
     return _q16_94_impl(
         spark, sf_dir, "1996-01-01", "1996-04-01",
         ("1-URGENT", "2-HIGH"), negate_prio=False,
@@ -219,7 +216,6 @@ def qds94_web_no_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     the paper runs both to stress the same I/O pattern twice.  The
     per-order aggregate covers the slice's lines only (see
     _slice_membership)."""
-    ensure_parity_conf(spark)
     return _q16_94_impl(
         spark, sf_dir, "1997-01-01", "1997-03-01", ("5-LOW",), negate_prio=True,
     )
@@ -258,7 +254,6 @@ def qds95_both_sites_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("≥2 suppliers AND has a returned line") over the date slice's
     lines (see _slice_membership; o_orderkey is orders' key, so its
     (key, price) groups are the oracle's orders rows)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     orders = t.orders.filter(
         (F.col("o_orderdate") >= _ts("1996-06-01"))
@@ -294,7 +289,6 @@ def qds3_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     side small → broadcast; the orders join carries only (orderkey,
     orderdate).  Grouping keys are low-cardinality so the partial agg
     collapses the fact stream before the single shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     item = t.part.filter(F.col("p_type") == "PROMO").select(
         "p_partkey", "p_brand"
@@ -354,7 +348,6 @@ def qds7_demographic_item_avgs(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer is the only non-broadcast-size dim, so the planner
     shuffle-joins it and broadcasts the rest (no hints — AQE decides),
     and the final TopK is TakeOrderedAndProject, never a global sort."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     demo = t.customer.filter(F.col("c_mktsegment") == "BUILDING").select(
         "c_custkey"
@@ -440,7 +433,6 @@ def qds42_category_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     item side broadcasts; the six-group agg collapses map-side.
     Revenue aggregates through DECIMAL(18,4) (see _DEC_REVENUE_SQL) —
     order-independent, so bit-exact at any corpus size."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     item = t.part.filter(F.col("p_size") <= 10).select("p_partkey", "p_type")
     dated = t.orders.filter(
@@ -488,7 +480,6 @@ def qds52_brand_month_extprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     family identically — broadcast item, date-pruned fact scan, map-
     side-collapsed agg — rather than treating each as novel.
     Undiscounted 2-decimal prices sum exactly through DECIMAL(18,4)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     item = t.part.filter(F.col("p_type") == "SMALL").select(
         "p_partkey", "p_brand"
@@ -550,7 +541,6 @@ def qds19_cross_nation_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFr
     pre-shuffle, so the agg exchange sees only surviving rows; every
     dim except customer broadcasts.  Revenue through DECIMAL(18,4) —
     bit-exact at any corpus size."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     item = t.part.filter(
         F.col("p_type").isin("PROMO", "ECONOMY") & (F.col("p_size") <= 15)
@@ -614,7 +604,6 @@ def qds88_hour_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle keeps the banding in FILTER-clause form to pin the same
     semantics.  Mapped onto events: hour-of-day bands × event-type /
     value predicates."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     h = F.hour("ts")
 
@@ -680,7 +669,6 @@ def qds51_cumulative_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     realistic horizon), so the unpartitioned frame is bounded by
     construction, like the calendar windows in the guard allow-list.
     Sums are decimal until the output cast."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     o = (
         t.orders.filter(
@@ -766,7 +754,6 @@ def qds98_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates through DECIMAL(18,4) (order-independent, bit-exact);
     the ratio divides two exact decimals cast to double identically on
     both engines before the shared round(…, 6)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     dated = t.orders.filter(
         F.col("o_orderdate").between("1997-11-01", "1997-11-30")
@@ -854,7 +841,6 @@ def qds1_returns_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the per-customer ROLLUP (|customers| rows, not the fact
     table), so the second pass shuffles only aggregates; the fact
     scans once."""
-    ensure_parity_conf(spark)
     from pyspark.sql.window import Window
 
     t = Tables(spark, sf_dir)
@@ -955,7 +941,6 @@ def qds11_yoy_channel_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     |customers| rows BEFORE the join; the YoY comparison joins
     aggregates, never facts, and the final report is a |segments|-row
     aggregate."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     d18_2, d18_4 = "decimal(18,2)", "decimal(18,4)"
 
@@ -1045,7 +1030,6 @@ def qds90_time_band_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery scans — the spec's two-subquery formulation is the
     repeat-scan defect class guard #4 hunts); the division happens on
     two driver-visible longs cast identically on both engines."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     hour = F.hour("ts")
     return t.events.agg(
@@ -1095,7 +1079,6 @@ def qds97_channel_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle once on ck — no broadcast: full-outer cannot broadcast
     either side), and the overlap counts are one final scalar
     aggregate.  Integer output, nothing float."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     def half(lo, hi, alias):
@@ -1166,7 +1149,6 @@ def qds39_quantity_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  cov is irrational (a square root) for any non-trivial
     group, so the 0.5 threshold cannot sit on an engine-boundary
     midpoint; outputs round to 4 dp."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     g = (
         t.lineitem.filter(
@@ -1259,7 +1241,6 @@ def qds47_monthly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint between Spark's HALF_UP and DuckDB's double rounding
     (1385069.094 vs .0939 at sf0.01) — never round a float DIVISION
     for output when the dividend is already exact."""
-    ensure_parity_conf(spark)
     from pyspark.sql.window import Window
 
     t = Tables(spark, sf_dir)
@@ -1358,7 +1339,6 @@ def qds23_frequent_best_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the repeat-scan gate exists to catch (it did, in review).  The
     spend cut compares an exact DECIMAL(18,2) sum against a decimal
     literal — no float boundary."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     in_1995 = (F.col("o_orderdate") >= _ts("1995-01-01")) & (
@@ -1457,7 +1437,6 @@ def qds67_rollup_brand_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs are unambiguous (shipdate and brand are non-null in the
     data), and the grouping-level column pins each row's provenance
     in both engines."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     from pyspark.sql.window import Window
 
@@ -1546,7 +1525,6 @@ def qds64_yoy_part_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on partkey; the doubling cut compares exact decimals (a
     x2 decimal multiply is lossless), so both engines agree at the
     boundary."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
@@ -1642,7 +1620,6 @@ def qds93_returns_adjusted_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     sales whole.  The quantity adjustment and retail valuation stay
     in exact decimals end to end; the final rollup groups on
     low-cardinality keys so the last shuffle is tiny."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     dec0 = F.lit(0).cast("decimal(12,2)")
     ret = (
@@ -1749,7 +1726,6 @@ def qds14_cross_channel_intersect(spark: SparkSession, sf_dir: str) -> DataFrame
     count rows, not a second fact pass) and compared in exact
     decimals (x400 is a lossless integer multiply), so the share cut
     cannot flip on float rounding in either engine."""
-    ensure_parity_conf(spark)
     release_prior()
     t = Tables(spark, sf_dir)
     fast = ("1-URGENT", "2-HIGH", "3-MEDIUM")

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -85,7 +84,6 @@ _PART_SUPP_SQL = """
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated MAX scalar subquery over a 4-way join,
     written decorrelated (per-part max → equi-join back)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     eu_suppliers = (
         t.supplier
@@ -156,7 +154,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS → left-semi join (lateness
     adapted to shipdate vs orderdate+60d; no commit/receipt dates)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     o = t.orders.filter(
         (F.col("o_orderdate") >= _ts("1996-07-01"))
@@ -199,7 +196,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure scan→filter→global agg. All four predicates reach
     the parquet scan; single-row result, near-zero shuffle."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.lineitem
@@ -246,7 +242,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: 6-way join with a disjunctive nation-pair predicate;
     dims broadcast, single fact-fact shuffle on orderkey."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     n1 = t.nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
@@ -322,7 +317,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: 8-way join + conditional-aggregation market share."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     asia_cust = (
         t.customer
@@ -410,7 +404,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit per nation-year over a 5-way join with a
     LIKE part filter (supply cost proxied by 0.5·p_retailprice — no
     partsupp table)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     supp = (
         t.supplier
@@ -464,7 +457,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: returned-item revenue top-20; fact-fact join then
     TakeOrdered over the aggregated result."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     o = t.orders.filter(
         (F.col("o_orderdate") >= _ts("1996-10-01"))
@@ -511,7 +503,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: HAVING with an uncorrelated scalar subquery
     (global total computed once, broadcast as a 1-row cross join)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     nation5_supp = (
         t.supplier
@@ -573,7 +564,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_shipping_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: join + conditional counts (shipmode → linestatus,
     lateness = shipdate > orderdate+30d)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     li = t.lineitem.filter(
@@ -617,7 +607,6 @@ def q12_shipping_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13: outer join with an extra join-condition predicate,
     double aggregation (count per customer → histogram of counts)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # Aggregate orders BEFORE the outer join (guide §2.3 "aggregate
     # before you shuffle"): the priority predicate touches only the
@@ -662,7 +651,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promo revenue ratio; part broadcast, single-row out."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     rev = (
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -711,7 +699,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: CTE view + MAX scalar subquery over it (view reused
     twice — Catalyst's ReuseExchange shares the aggregated exchange)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     revenue = (
         t.lineitem
@@ -763,7 +750,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN → left-anti join + count(DISTINCT)
     (complaint filter adapted to s_acctbal < 0)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     bad_supp = t.supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
     parts = t.part.filter(
@@ -810,7 +796,6 @@ def q16_supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated AVG scalar subquery, decorrelated to
     a per-part aggregate joined back (container filter → p_size<10)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     parts = t.part.filter((F.col("p_brand") == "Brand#3") & (F.col("p_size") < 10))
     # The AVG subquery correlates only on partkey and the outer join
@@ -863,7 +848,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: IN over an aggregated-HAVING subquery → semi join."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # One fact pass: the HAVING aggregate already computes each
     # qualifying order's total quantity, and the outer query's
@@ -921,7 +905,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin corpus (r11, one occurrence in ~700 query-runs): partial-sum
     order differs between engines/runs, the exact class FIXTURES.md's
     decimal-sum discipline exists to close."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
@@ -966,7 +949,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: nested IN subqueries (part IN → lineitem agg
     HAVING → supplier IN) as chained semi joins."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     promo_parts = t.part.filter(F.col("p_type") == "PROMO").select("p_partkey")
     heavy_suppliers = (
@@ -1035,7 +1017,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (optimization guide §2.4: remove the pass, not just the shuffle).
     Lateness = shipdate > orderdate + 60d; no receipt/commit dates in
     this schema."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     li = (
         t.lineitem
@@ -1109,7 +1090,6 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar AVG subquery + NOT EXISTS anti join
     (country code from c_nationkey%5 — no c_phone; "never ordered"
     adapted to "no order since 2000" so the result is non-empty)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     code = (F.col("c_nationkey") % 5).alias("cntrycode")
     eligible = t.customer.filter((F.col("c_nationkey") % 5).isin(0, 1, 2))

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -57,7 +56,6 @@ def pii_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: a narrow projection — no shuffle, no UDF; md5 and
     regexp_replace run inside whole-stage codegen, so this is a
     zero-cost rewrite on the 100 TB scan path."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.customer.select(
@@ -134,7 +132,6 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-frequency rollup and the per-doc probe, so it is persisted for
     the run (run_cache contract) — without it Catalyst re-tokenizes
     the corpus once per branch."""
-    ensure_parity_conf(spark)
     from splitserve_spark.operators.run_cache import (
         persist_tracked, release_prior,
     )
@@ -222,7 +219,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition cumsum — the per-source partitioning is the
     parallelism), computed in a single shuffle on source; everything
     else is arithmetic in codegen."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     n_tokens = F.size(F.split(F.trim(F.col("text")), " +")).cast("bigint")
     run = (
@@ -285,7 +281,6 @@ def mix_domains_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable across runs/retries and needs no seed plumbing: one shuffle
     on source, WindowGroupLimit prunes each partition to the quota
     before the final sort."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("source").orderBy("hkey", "doc_id")
     return (
@@ -335,7 +330,6 @@ def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest is one map-side-combinable groupBy."""
     from splitserve_spark.functions.parity_hash import md5_hash60
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     split = F.when(
         md5_hash60(F.col("doc_id").cast("string")) % 100 < EVAL_PCT, "eval"
@@ -390,7 +384,6 @@ def filter_reason_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: a narrow codegen projection; the downstream filter is
     `WHERE reason = 'ok'` and the monitoring rollup is a groupBy on
     (source, reason) — neither is materialized here."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ws = F.split(F.trim(F.col("text")), " +")
     n_words = F.size(ws).cast("bigint")
@@ -441,7 +434,6 @@ def mix_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus reduces to one row-per-source aggregate;
     the share/weight normalization is a window over those few rows,
     not the data."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     s = t.documents.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     everything = Window.partitionBy()
@@ -489,7 +481,6 @@ def text_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the length profile a pipeline inspects before choosing packing and
     truncation parameters.  One map-side-combinable groupBy; bins are
     computed in the scan projection."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     n_words = F.size(F.split(F.trim(F.col("text")), " +"))
     bin_lo = (F.floor(n_words / HIST_BIN) * HIST_BIN).cast("bigint")
@@ -532,7 +523,6 @@ def sample_stratified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on source; the rank <= K predicate pushes
     into the shuffle as WindowGroupLimit (partial top-K on the map
     side), so only ~K rows per source per mapper ever move."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     h = F.md5(
         F.concat(F.col("source"), F.lit(":"), F.col("doc_id").cast("string"))
@@ -582,7 +572,6 @@ def mix_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One groupBy(source) makes the table O(|sources|); the window
     normalizations run over that tiny aggregate, never the corpus."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     counts = t.documents.groupBy("source").agg(F.count("*").alias("n_docs"))
     w_all = Window.partitionBy()
@@ -648,7 +637,6 @@ def pii_detect_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexes avoid lookaround so Java and RE2-style engines agree.  At
     100 TB this is the scan-side audit you run before and after the
     pseudonymization rewrite."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     text2 = F.concat(
         F.col("text"),
@@ -727,7 +715,6 @@ def sample_weighted_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side merge), so the corpus never globally sorts and never
     shuffles.  This is THE scale-safe form of weighted sampling: a
     100 TB corpus yields K rows with one pass and no exchange."""
-    ensure_parity_conf(spark)
     from splitserve_spark.functions.parity_hash import md5_hash60
 
     t = Tables(spark, sf_dir)
@@ -804,7 +791,6 @@ def mix_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference's RangePartitioner+sortByKey global shuffle
     (`core/.../Partitioner.scala:107`) is the RDD-era equivalent; the
     hash-shard form avoids its sampling pass entirely."""
-    ensure_parity_conf(spark)
     from splitserve_spark.functions.parity_hash import md5_hash60
 
     t = Tables(spark, sf_dir)
@@ -857,7 +843,6 @@ def split_group_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     source count rides the same shuffle."""
     from splitserve_spark.functions.parity_hash import md5_hash60
 
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     split = F.when(
         md5_hash60(F.concat(F.lit("grp-"), F.col("source"))) % 100 < EVAL_PCT,
@@ -1014,7 +999,6 @@ def mix_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, not tokens, so the heavy side shuffles once on
     (doc_id, bucket) with map-side combine.  All JVM codegen, no
     UDF."""
-    ensure_parity_conf(spark)
     return _dsir_weights(spark, sf_dir).orderBy("doc_id")
 
 
@@ -1047,7 +1031,6 @@ def mix_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one corpus explode, conditional aggregates, bounded broadcast);
     selection adds one TakeOrderedAndProject over |docs| weight rows —
     never a global sort of the corpus."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     weights = _dsir_weights(spark, sf_dir).select("doc_id", "log_weight")
     # Top-K FIRST via orderBy+limit (TakeOrderedAndProject: per-
@@ -1154,13 +1137,11 @@ def split_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, no second pass."""
     from splitserve_spark.functions.parity_hash import md5_hash60
     from splitserve_spark.operators.dedup import CLUSTER_ITER, _norm
-    from splitserve_spark.operators.graph import (
-        _persist_tracked,
-        _release_prior,
+    from splitserve_spark.operators.run_cache import (
+        persist_tracked, release_prior,
     )
 
-    ensure_parity_conf(spark)
-    _release_prior()
+    release_prior()
     t = Tables(spark, sf_dir)
     fp_df = t.documents.select(
         "doc_id", F.md5(_norm(F.col("text")).cast("binary")).alias("fp")
@@ -1187,7 +1168,7 @@ def split_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     selfloops = t.documents.select(
         F.col("doc_id").alias("a"), F.col("doc_id").alias("b")
     )
-    sym = _persist_tracked(
+    sym = persist_tracked(
         estar.union(rev(estar)).union(pairs).union(rev(pairs))
         .union(selfloops).distinct()
     )

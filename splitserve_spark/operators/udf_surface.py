@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -54,7 +53,6 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas UDF (Arrow-batched, SCALAR eval type): vectorized
     banding over a computed column. One Arrow batch per ~10k rows
     instead of one pickle round-trip per row."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     @F.pandas_udf(StringType())
@@ -94,7 +92,6 @@ def udf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED_AGG pandas UDF — the modern UDAF
     (reference: UserDefinedAggregateFunction, udaf.scala:32).
     Weighted average discount; whole group arrives as pandas Series."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     @F.pandas_udf(DoubleType())
@@ -127,7 +124,6 @@ def udf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     each group becomes one pandas DataFrame in a Python worker.
     Groups are market segments (5 of them, each bounded); a real
     pipeline keys on similarly bounded dimensions."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -170,7 +166,6 @@ def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterator-of-batches transform — streams Arrow batches through
     Python without materializing a partition, so partition size never
     bounds memory."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     def transform(batches):
@@ -218,7 +213,6 @@ def udf_cogroup_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cogroup().applyInPandas (reference: CoGroupExec,
     objects.scala:421): both sides shuffle on the key, then each
     key's two pandas frames meet in one Python call."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     _COLS = ["custkey", "n_orders", "total_spend", "c_acctbal"]
@@ -273,7 +267,6 @@ def udf_python_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BatchEvalPythonExec). Kept as a parity demo on a 25-row dimension;
     NEVER use this on a fact table (each row round-trips through a
     pickled Python worker)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
 
     @F.udf(StringType(), useArrow=False)
@@ -326,7 +319,6 @@ def udtf_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary columnar; still a Python-worker path — at corpus scale
     prefer the pure-column equivalent (slice/transform on the split
     array) unless the expansion logic genuinely needs Python."""
-    ensure_parity_conf(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="chunk_idx int, chunk string, n_words int", useArrow=True)
@@ -378,7 +370,6 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch with no pandas boxing, which is also why this is the
     fastest Python hook for the multimodal decode path.
     """
-    ensure_parity_conf(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -443,7 +434,6 @@ def udtf_polymorphic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python mapping of a type-parameterized generator.  The total is a
     single IEEE double add, bit-identical in both engines; invoked
     via LATERAL join against part."""
-    ensure_parity_conf(spark)
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import DoubleType, StructType
 

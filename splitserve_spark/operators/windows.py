@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables
 
 
@@ -38,7 +37,6 @@ from splitserve_spark.tables import Tables
 def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank / ntile over one shared window
     spec (single shuffle+sort, one WindowExec)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -69,7 +67,6 @@ def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "ranking"),
 )
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
     return (
@@ -97,7 +94,6 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead/lag with offsets and defaults (OffsetWindowFunctionFrame)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
@@ -135,7 +131,6 @@ def window_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregates over ROWS frames: running total (unbounded-preceding),
     sliding 3-row average, and whole-partition count."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     ordered = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
@@ -182,7 +177,6 @@ def window_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame with a value offset (ValuePreceding boundary in the
     reference's SpecifiedWindowFrame)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_totalprice").rangeBetween(
         -50000, Window.currentRow
@@ -217,7 +211,6 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value / last_value / nth_value; last_value over an explicit
     unbounded frame (the default frame stops at CURRENT ROW on both
     engines)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -253,7 +246,6 @@ def window_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-N per group — the canonical window+filter pattern.  Modern
     Spark inserts WindowGroupLimit before the shuffle, so each partition
     only forwards its local top-3 (scale-critical)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -293,7 +285,6 @@ def window_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     import os as _os
 
@@ -350,7 +341,6 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (o_orderdate, o_orderkey) so duplicate dates cannot reorder between
     engines; the sampled key set (custkey % 50) bounds output while
     keeping multi-version histories present at every SF."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     changes = (

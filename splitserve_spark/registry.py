@@ -10,10 +10,18 @@ Determinism contract (FIXTURES.md): every registered query orders its
 output by a unique key (or is a grouped result with unique group keys),
 avoids non-deterministic functions in the hash set, and aliases every
 computed column identically on both sides.
+
+Parity contract: ``register`` is the one place that applies
+``session.PARITY_CONF`` to a registered query.  The callable it stores
+and returns calls ``ensure_parity_conf`` before the body runs, so every
+path (module-level name, ``__spark_entry__.queries()``, bench, sweeps)
+gets pre-ANSI, UTC, Arrow semantics on whatever session it is handed.
+Query bodies never call it themselves.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 import json
 import pathlib
@@ -22,6 +30,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from splitserve_spark.session import ensure_parity_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -109,16 +119,26 @@ def register(
     tags: tuple[str, ...] = (),
     bench: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a query under ``name`` with its oracle SQL."""
+    """Decorator: register a query under ``name`` with its oracle SQL.
+
+    The stored and returned callable is a wrapper that applies the
+    parity confs (``ensure_parity_conf``) to the session it is given,
+    then runs the body; ``__wrapped__`` is the body itself."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_parity_conf(spark)
+            return fn(spark, sf_dir)
+
         REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, tags=tags, bench=bench,
+            name=name, fn=run, oracle=oracle, tags=tags, bench=bench,
             doc=(fn.__doc__ or "").strip(), seq=len(REGISTRY),
         )
-        return fn
+        return run
 
     return deco
 

@@ -22,10 +22,10 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 #: Semantic confs every query assumes.  Applied at session build time
-#: and defensively per-query (the verification driver hands us *its*
-#: session, which may carry Spark 4 defaults like ANSI mode).  Only
-#: correctness-semantics belong here — never tuning knobs, which users
-#: and tests must be able to override per-session.
+#: and by the registry before every registered query (the verification
+#: driver hands us *its* session, which may carry Spark 4 defaults like
+#: ANSI mode).  Only correctness-semantics belong here — never tuning
+#: knobs, which users and tests must be able to override per-session.
 PARITY_CONF = {
     # Reference = Spark 2.1 (pre-ANSI): silent overflow, permissive casts.
     "spark.sql.ansi.enabled": "false",
@@ -56,12 +56,16 @@ TUNING_CONF = {
 def ensure_parity_conf(spark: SparkSession) -> SparkSession:
     """Apply the parity confs to an existing session and verify them.
 
-    Safe to call per-query: each key is read first and set only when it
-    differs, so a session that already carries them costs one
-    driver-side read per key and never touches executors.  A conf that
-    cannot be set, or does not read back as set, raises with its key —
-    a silently unset ANSI or timezone conf gives wrong answers, not
-    slow ones.
+    Callers: ``registry.register``'s wrapper (before every registered
+    query), ``get_session``, ``sql_entry.sql``, ``Tables.__getattr__``
+    on a cache miss, and the unregistered public builders tests call
+    directly (``asof_join_merge_asof``, ``running_user_profile``,
+    ``stream_tumbling_counts``, ``stream_tws_profile``).  Each key is
+    read first and set only when it differs, so a session that already
+    carries them costs one driver-side read per key and never touches
+    executors.  A conf that cannot be set, or does not read back as
+    set, raises with its key — a silently unset ANSI or timezone conf
+    gives wrong answers, not slow ones.
     """
     conf = spark.conf
     for key, value in PARITY_CONF.items():

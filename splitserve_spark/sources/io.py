@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import Tables, sfdir_tag
 
 _IO_ROOT = os.path.join(tempfile.gettempdir(), "splitserve_spark_io")
@@ -71,7 +70,6 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → CSV (header, explicit timestamp format) → read back with
     explicit schema → aggregate.  Matching the parquet oracle proves the
     CSV writer/parser preserved every row and type."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "csv")
     t.orders.write.mode("overwrite").option("header", True).option(
@@ -110,7 +108,6 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → JSON-lines → read back (explicit schema) → aggregate."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "json")
     t.events.write.mode("overwrite").json(path)
@@ -143,7 +140,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark (reference: `sql/hive/src/main/scala/org/apache/spark/sql/
     hive/orc/OrcFileFormat.scala`); matching the parquet-backed oracle
     proves the ORC writer/reader preserved rows, decimals and dates."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "orc")
     t.lineitem.select(
@@ -176,7 +172,6 @@ def source_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem written partitionBy(l_returnflag), read back filtered on
     the partition key — the filter prunes to one directory (partition
     pruning; verified plan-level in tests/test_plans.py)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "part_parquet")
     write_partitioned(
@@ -214,7 +209,6 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionColumn parallelism is what keeps a 1000-executor ingest
     from serializing through one connection.  Row-level fidelity (not
     an aggregate) is the stronger roundtrip claim for a 25-row dim."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     os.makedirs(_IO_ROOT, exist_ok=True)
     # Keep derby.log out of the CWD; no-op once Derby has booted.
@@ -252,7 +246,6 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """text source: one string column `value` per line (reference
     TextFileFormat)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "text")
     t.nation.select(F.col("n_name").alias("value")).write.mode("overwrite").text(path)
@@ -291,7 +284,6 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay it once per query planning (or amortize with a metastore
     schema), and old row groups still prune/push down on the columns
     they have."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "schevo")
     shutil.rmtree(path, ignore_errors=True)
@@ -344,7 +336,6 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write here range-partitions on the natural key so the read
     back fans out across files (one unsplittable file per key range,
     not one giant file)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     path = _roundtrip_dir(sf_dir, "xml")
     cust = t.customer.select(
@@ -404,7 +395,6 @@ def source_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no per-row cost), and the lang=... directory scheme is the same
     partition-pruning layout `source_partitioned_pruning` exercises —
     this is its observability twin."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # pid-suffixed: this op's readback asserts n_files == 1 per lang,
     # which a CONCURRENT process overwriting the same path mid-read
@@ -475,7 +465,6 @@ def sink_partition_overwrite_dynamic(
     or corrected day/source without rewriting the table; the write's
     shuffle is bounded by the corrected partition, not the table, and
     readers keep partition pruning over the unchanged layout."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     # pid-suffixed: base-write -> partition-overwrite is a two-step
     # sequence; a concurrent process re-running step 1 while this one

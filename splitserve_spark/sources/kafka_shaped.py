@@ -60,7 +60,7 @@ from pyspark.sql.datasource import (
 )
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
+from splitserve_spark.session import stream_shuffle_bound
 from splitserve_spark.tables import sfdir_tag
 
 #: Epoch for record timestamps: CreateTime of offset o is EPOCH + o s.
@@ -467,7 +467,6 @@ def source_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     an offset-ordered value digest — any duplicate, loss, or reorder
     across the micro-batches breaks the digest.  Asymmetric partition
     sizes prove per-partition (not global) offset bookkeeping."""
-    ensure_parity_conf(spark)
     import time
 
     register_kafka_shaped(spark)
@@ -587,7 +586,6 @@ def source_kafka_json_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     that arm).  first_offset per partition proves each resolution
     rule; the offset-ordered digest proves no duplicate/loss/reorder
     in the consumed range."""
-    ensure_parity_conf(spark)
     import time
 
     register_kafka_shaped(spark)
@@ -705,7 +703,6 @@ def stream_kafka_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (complete output mode).  The oracle replays the record
     formula analytically — a timestamp-derivation or window-assignment
     bug anywhere in source or aggregation is a hash mismatch."""
-    ensure_parity_conf(spark)
     register_kafka_shaped(spark)
     tag = sfdir_tag(sf_dir)
     name = f"kafka_w_{tag}_p{os.getpid()}"

@@ -31,7 +31,6 @@ from pyspark.sql.datasource import (
 )
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf
 from splitserve_spark.tables import raw_schema, sfdir_tag
 
 PDS_DOCS = 500
@@ -100,7 +99,6 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     up per shard (count, bytes, order-stable url digest) — proving the
     partition planning, per-partition iteration, and Arrow hand-off all
     preserve every row exactly once."""
-    ensure_parity_conf(spark)
     try:
         spark.dataSource.register(CrawlShardDataSource)
     except Exception:
@@ -185,7 +183,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed in the sink, then aggregate the deterministic seq < N prefix
     — overshoot from the final batch is filtered out, so the result is
     exact regardless of trigger timing."""
-    ensure_parity_conf(spark)
     import time
 
     try:
@@ -351,7 +348,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit breaks count / exact-cents sum / distinct-id count; the
     abort path (nothing published on task failure) is pinned in
     tests/test_python_ds_writer.py."""
-    ensure_parity_conf(spark)
     import tempfile
 
     register_shard_sink(spark)
@@ -520,7 +516,6 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest breaks count / exact-cents sum / distinct-id parity.
     The stop/restart exactly-once pytest lives in
     tests/test_python_ds_writer.py."""
-    ensure_parity_conf(spark)
     import tempfile
 
     from splitserve_spark.streaming.custom_state import (

@@ -116,7 +116,6 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly increasing per user, so max_by(., n_events) deterministically
     selects the final state regardless of how the source was batched.
     Multi-batch state carry-over is covered in tests/test_custom_state.py."""
-    ensure_parity_conf(spark)
     from splitserve_spark.streaming.stateful import _events_stream
 
     name = "ssp_" + sfdir_tag(sf_dir)
@@ -276,7 +275,6 @@ def stream_cusum_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-source contract here, kafka-partition-per-key in
     production — the standard ordering premise of every streaming
     change-point detector."""
-    ensure_parity_conf(spark)
     from splitserve_spark.streaming.stateful import _events_stream
 
     src_dir = _ordered_event_splits(spark, sf_dir)

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
 from splitserve_spark.tables import raw_schema, sfdir_tag
-from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
+from splitserve_spark.session import stream_shuffle_bound
 
 #: The canonical wordcount feed — single source of truth for the Spark
 #: query AND the DuckDB oracle (interpolated into the SQL below).
@@ -102,7 +102,6 @@ def source_socket_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     socket source streams them through a groupBy(word).count() in
     complete mode, and the memory-sink table (polled until all
     {_N_WORDS} words arrived) is the result the oracle hashes."""
-    ensure_parity_conf(spark)
     host, port = serve_lines(SOCKET_LINES)
     name = "sock_wc_" + sfdir_tag(sf_dir)
     stream = (
@@ -186,7 +185,6 @@ def sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle proves no row was lost or duplicated across partitions and
     epochs.  foreachBatch (the fast whole-frame path) is covered in
     tests/test_stateful_streaming.py; this is its per-row sibling."""
-    ensure_parity_conf(spark)
     from splitserve_spark.sources.io import _roundtrip_dir
     from splitserve_spark.streaming.stateful import _events_stream
 
@@ -239,7 +237,6 @@ def source_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow pass is exactly reproducible and the closed-form
     oracle (count R, sum R(R-1)/2) proves no row was lost or duplicated
     across the 4 source partitions."""
-    ensure_parity_conf(spark)
     stream = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", RATE_ROWS_PER_BATCH)
@@ -418,7 +415,6 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from splitserve_spark.tables import normalize_event_ts
 
-    ensure_parity_conf(spark)
     src_dir = _ordered_event_splits(spark, sf_dir)
     tag = sfdir_tag(sf_dir)
     base = os.path.join(
@@ -533,7 +529,6 @@ def stream_merge_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from splitserve_spark.tables import normalize_event_ts
 
-    ensure_parity_conf(spark)
     splits_dir = _ordered_event_splits(spark, sf_dir)
     split_files = sorted(_glob.glob(os.path.join(splits_dir, "b*.parquet")))
     assert len(split_files) >= 4, split_files
@@ -684,7 +679,6 @@ def pipeline_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from splitserve_spark.sources.kafka_shaped import register_kafka_shaped
 
-    ensure_parity_conf(spark)
     register_kafka_shaped(spark)
     tag = sfdir_tag(sf_dir)
     base = os.path.join(

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
+from splitserve_spark.session import stream_shuffle_bound
 from splitserve_spark.tables import Tables, raw_schema, sfdir_tag
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,7 +96,6 @@ def sessionize_lag_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the strict-equivalent split-and-stitch twin
     ``sessionize_hot_key_safe`` (measured flat at 64× hot-key skew
     where this form saturates — SCALE_SMOKE.md skew table)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
@@ -163,7 +162,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SKEW HAZARD: per-user-key window — a hot key serializes through one task; mitigation pattern: sessionize_hot_key_safe (split-and-stitch, see its docstring / SCALE_SMOKE.md skew table).
     """
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return (
         t.events
@@ -197,7 +195,6 @@ def stream_file_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark → tumbling window agg → memory sink (availableNow,
     complete mode). The returned table is IncrementalExecution output —
     the oracle proves stream == batch semantics end to end."""
-    ensure_parity_conf(spark)
     name = "sfsa_" + sfdir_tag(sf_dir)
     stream = (
         _events_stream(spark, sf_dir)
@@ -246,7 +243,6 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not a dedup column, so it would evict nothing and only add a
     no-data micro-batch re-committing every key.  (A raw total would
     need a second stateful aggregation; out of scope here.)"""
-    ensure_parity_conf(spark)
     name = "sdid_" + sfdir_tag(sf_dir)
     deduped = (
         _events_stream(spark, sf_dir)
@@ -296,7 +292,6 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     viable on an unbounded 100 TB/day stream — state is O(rate x gap),
     not O(history).  The oracle is the equivalent batch self-join, so
     the driver proves stream==batch for the join too."""
-    ensure_parity_conf(spark)
     name = "sca_" + sfdir_tag(sf_dir)
     clicks = (
         _events_stream(spark, sf_dir)
@@ -373,7 +368,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no join state accumulates across batches, unlike the
     stream-stream attribution join above.  The aggregation state is
     bounded by |segments|."""
-    ensure_parity_conf(spark)
     name = "sssj_" + sfdir_tag(sf_dir)
     customers = Tables(spark, sf_dir).customer.select(
         "c_custkey", "c_mktsegment"
@@ -452,7 +446,6 @@ def sessionize_hot_key_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel axis, and the only cross-block pass runs over per-block
     aggregates.  At 100 TB a 50%-hot user costs #days tasks of work
     instead of one task owning half the corpus."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     return _hot_safe_sessions(
         t.events.select("user_id", "ts", "event_id", "value")
@@ -561,7 +554,6 @@ def stream_dedup_within_watermark(
     the sink and aggregate in a batch step, keeping the streaming
     side a pure dedup (the single-stateful-operator form every engine
     version supports)."""
-    ensure_parity_conf(spark)
     name = "sdww_" + sfdir_tag(sf_dir)
     leg = lambda: _events_stream(spark, sf_dir).select(  # noqa: E731
         "event_id", "event_type", "ts"
@@ -778,7 +770,6 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
     sentinel rows are un-matchable by construction (negative user ids,
     disjoint between sides) and filtered AFTER the join, so they
     contribute watermark advancement and nothing else."""
-    ensure_parity_conf(spark)
     tag = sfdir_tag(sf_dir)
     name = f"scao_{tag}"
     src_dir = _attrib_outer_dir(spark, sf_dir)

@@ -48,7 +48,6 @@ from splitserve_spark.tables import Tables
 def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time windows — identical expression batch or
     streaming (Structured Streaming incrementalizes this exact plan)."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = F.window("ts", "10 minutes")
     return (
@@ -93,7 +92,6 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (10 min length, 5 min slide): each event lands in
     two windows; Spark's TimeWindow expands exactly like the oracle's
     offset union."""
-    ensure_parity_conf(spark)
     t = Tables(spark, sf_dir)
     w = F.window("ts", "10 minutes", "5 minutes")
     return (

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from splitserve_spark.registry import load_all
 from splitserve_spark.sources.python_ds import register_shard_sink
+from splitserve_spark.tables import raw_schema
 from tests.oracle_utils import SF_DIR, check_query
 
 load_all()
@@ -110,12 +111,12 @@ def test_stream_sink_exactly_once_across_restart(spark, tmp_path):
     out = str(tmp_path / "pub")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(out)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    events_schema = raw_schema(spark, sf_dir, "events")
     total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
 
     def start(trigger_kwargs):
         stream = (
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(events_schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src_dir}/b*.parquet")
             .select("event_id", "event_type")

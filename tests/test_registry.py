@@ -192,3 +192,61 @@ def test_skew_hazard_tags_name_existing_mitigations():
                   "window_running_distinct", "events_markov_transitions",
                   "events_bot_detection"):
         assert any(t.startswith("skew_hazard:") for t in reg[known].tags), known
+
+
+def test_register_applies_parity_conf(spark):
+    """The callable register stores and returns applies PARITY_CONF to
+    the session it is handed before the body runs, whichever path calls
+    it, and keeps the body as __wrapped__ (inspect.getsource reads it)."""
+    from splitserve_spark.registry import REGISTRY, register
+    from splitserve_spark.session import PARITY_CONF, ensure_parity_conf
+    from tools.sweep import FOREIGN_CONF
+
+    seen = []
+
+    def body(spark, sf_dir):
+        seen.append({k: spark.conf.get(k) for k in FOREIGN_CONF})
+        return spark.range(1)
+
+    name = "_test_register_applies_parity_conf"
+    try:
+        run = register(name)(body)
+        spec = REGISTRY[name]
+        assert spec.fn is run
+        assert spec.fn.__wrapped__ is body
+        for call in (spec.fn, run):
+            for key, value in FOREIGN_CONF.items():
+                spark.conf.set(key, value)
+            call(spark, "unused")
+    finally:
+        REGISTRY.pop(name, None)
+        ensure_parity_conf(spark)
+    assert seen == [{k: PARITY_CONF[k] for k in FOREIGN_CONF}] * 2
+
+
+def test_no_registered_body_calls_ensure_parity_conf():
+    """register's wrapper owns the parity contract for registered
+    queries: no @register body under splitserve_spark repeats the call."""
+    import ast
+    import pathlib
+
+    def registered(fn) -> bool:
+        return any(
+            isinstance(d, ast.Call)
+            and getattr(d.func, "id", getattr(d.func, "attr", None)) == "register"
+            for d in fn.decorator_list)
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "splitserve_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and registered(fn)):
+                continue
+            sites += [
+                f"{path.relative_to(pkg)}:{node.lineno} {fn.name}"
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "ensure_parity_conf"
+            ]
+    assert not sites, sites

@@ -233,6 +233,30 @@ def test_sweep_time_records_match_plan_inspect(spark):
         assert min(rec["build_s"], rec["plan_s"], rec["exec_s"]) >= 0
 
 
+def test_strict_check_starts_from_foreign_confs(spark):
+    """check mode starts every query from a stock session's ANSI,
+    timezone and Arrow values, as the driver's session may carry: the
+    registry's parity wrapper must restore them, so a timezone-sensitive
+    query (qds88 bands on the hour) still passes strict, and the
+    session leaves with PARITY_CONF in force.  The table handles are
+    cached first: a cache miss in Tables applies parity itself and
+    would hide a registry that stopped applying it."""
+    from splitserve_spark.registry import load_all
+    from splitserve_spark.session import PARITY_CONF
+    from splitserve_spark.tables import TABLE_NAMES
+
+    tables = Tables(spark, SF_DIR)
+    for name in TABLE_NAMES:
+        getattr(tables, name)
+    registry = load_all()
+    specs = [registry[n] for n in ("q1_pricing_summary",
+                                   "qds88_hour_band_counts")]
+    recs = sweep.run(spark, specs, "check", SF_DIR, out=io.StringIO(),
+                     strict=True)
+    assert [r["error"] for r in recs] == [None, None], recs
+    assert {k: spark.conf.get(k) for k in PARITY_CONF} == PARITY_CONF
+
+
 def test_plans_md_masks_plan_ids():
     """Plan ids and lambda variable numbers come from process-wide
     counters: left unmasked, one changed plan renumbers every later

@@ -340,13 +340,12 @@ def streaming_smoke(spark, out, scale):
         import glob
 
         from splitserve_spark.streaming import custom_state as C
-        from splitserve_spark.tables import normalize_event_ts
+        from splitserve_spark.tables import normalize_event_ts, raw_schema
 
         tag = "sdw_" + run_tag + ("_k" if sf_dir == out else "_1")
         src_dir = C._ordered_event_splits(spark, sf_dir)
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
         stream = normalize_event_ts(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(raw_schema(spark, sf_dir, "events"))
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src_dir}/b*.parquet")
         ).select("event_id", "ts")

@@ -10,7 +10,11 @@ picks the bench set, and with neither every registered query runs.
 --sf-dir defaults to $SPARK_GRAFT_SF_DIR, else sf0.1.  Records go to
 stdout unless --out names a file, so a bare run overwrites no evidence.
 
-- check: each query against its DuckDB oracle (tests/oracle_utils).
+- check: each query against its DuckDB oracle (tests/oracle_utils),
+  starting from FOREIGN_CONF (ANSI on, a non-UTC zone, Arrow off) as
+  on a stock session the driver hands over; the registry's parity
+  wrapper must restore session.PARITY_CONF, and the check fails if it
+  is not in force when the query is done.
   --strict models the driver's exact value hash; a strict pass at
   sf0.001 AND sf0.01 AND sf0.1 is SUFFICIENT (not necessary — the
   driver tolerates last-ULP float drift strict flags) evidence for a
@@ -49,7 +53,7 @@ from splitserve_spark.plans.inspect import (  # noqa: E402
     physical_plan,
 )
 from splitserve_spark.registry import load_all  # noqa: E402
-from splitserve_spark.session import get_session  # noqa: E402
+from splitserve_spark.session import PARITY_CONF, get_session  # noqa: E402
 from splitserve_spark.tables import (  # noqa: E402
     DEFAULT_SF_DIR,
     TABLE_NAMES,
@@ -89,10 +93,26 @@ def session(mode: str, shuffle_partitions: int | None = None):
     return spark
 
 
+#: What a session the driver hands over may carry: Spark 4's ANSI and
+#: Arrow defaults and a non-UTC zone.  Every check starts from them, so
+#: a query passes only if the registry's parity wrapper restores
+#: PARITY_CONF.
+FOREIGN_CONF = {
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.session.timeZone": "America/Los_Angeles",
+    "spark.sql.execution.arrow.pyspark.enabled": "false",
+}
+
+
 def _check(spark, spec, sf_dir, strict, reps) -> dict:
     from tests.oracle_utils import check_query
 
+    for key, value in FOREIGN_CONF.items():
+        spark.conf.set(key, value)
     check_query(spark, spec.name, sf_dir, strict=strict)
+    conf = {key: spark.conf.get(key, None) for key in PARITY_CONF}
+    if conf != PARITY_CONF:
+        raise RuntimeError(f"parity confs not in force afterwards: {conf}")
     return {}
 
 
