@@ -11,13 +11,15 @@ Scale posture: these configs are chosen for a real cluster — AQE for
 runtime re-planning and skew-join handling, partition coalescing so
 small stages don't produce thousands of empty tasks, and a broadcast
 threshold that keeps dimension-table joins shuffle-free.  On local[N]
-the same settings exercise the identical plans.
+the same settings exercise the identical plans.  Streaming queries
+plan their state stores at slot-sized shuffle partitions whatever this
+session's batch value is: ``streaming/drain.py`` owns that, with the
+rest of how a stream is run to completion.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -57,9 +59,11 @@ def ensure_parity_conf(spark: SparkSession) -> SparkSession:
     """Apply the parity confs to an existing session and verify them.
 
     Callers: ``registry.register``'s wrapper (before every registered
-    query), ``get_session``, ``sql_entry.sql``, ``Tables.__getattr__``
-    on a cache miss, and the unregistered public builders tests call
-    directly (``asof_join_merge_asof``, ``running_user_profile``,
+    query), ``get_session`` (so ``bench.py``, ``perfbench/run.py``,
+    ``tools/sweep.py``, ``tools/scale_smoke.py`` and the tests' ``spark``
+    fixture read tables under parity), ``sql_entry.sql``, and the
+    unregistered public builders tests call directly
+    (``asof_join_merge_asof``, ``running_user_profile``,
     ``stream_tumbling_counts``, ``stream_tws_profile``).  Each key is
     read first and set only when it differs, so a session that already
     carries them costs one driver-side read per key and never touches
@@ -115,31 +119,3 @@ def get_session(
     spark = builder.getOrCreate()
     return ensure_parity_conf(spark)
 
-
-@contextmanager
-def stream_shuffle_bound(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to the session's actual
-    parallelism while a streaming query plans and drains, restoring the
-    prior value afterwards.
-
-    A stateful streaming query freezes its state-store partition count
-    from this conf at first start — it is a physical layout, not a
-    batch-tuning knob, and AQE never coalesces it.  Inheriting a
-    batch-sized value (stock Spark: 200) gives a small drain hundreds
-    of state-store instances per stateful operator PER MICRO-BATCH
-    (commit + maintenance each), which multiplies drain wall-time by
-    the partition surplus rather than adding parallelism.  The count is
-    exactly ``defaultParallelism`` — one state store per task slot, one
-    commit wave per micro-batch — so it tracks the cluster.
-
-    Use around ``.start()`` + ``awaitTermination()`` — both the
-    micro-batch planning and the drain happen inside the block; the
-    restore only runs after the query has terminated.
-    """
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    slots = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(slots))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)

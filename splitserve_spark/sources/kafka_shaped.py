@@ -60,7 +60,7 @@ from pyspark.sql.datasource import (
 )
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import stream_shuffle_bound
+from splitserve_spark.streaming.drain import drain, drain_until
 from splitserve_spark.tables import sfdir_tag
 
 #: Epoch for record timestamps: CreateTime of offset o is EPOCH + o s.
@@ -467,8 +467,6 @@ def source_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     an offset-ordered value digest — any duplicate, loss, or reorder
     across the micro-batches breaks the digest.  Asymmetric partition
     sizes prove per-partition (not global) offset bookkeeping."""
-    import time
-
     register_kafka_shaped(spark)
     tag = sfdir_tag(sf_dir)
     name = f"kafka_q_{tag}_p{os.getpid()}"
@@ -485,23 +483,12 @@ def source_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("startingOffsets", "earliest")
         .load()
     )
-    q = (
+    drain_until(
+        spark,
         stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
+        .queryName(name).outputMode("append"),
+        lambda: spark.table(name).count() >= KQ_TOTAL,
     )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table(name).count() >= KQ_TOTAL:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError("kafka-shaped source did not drain the log")
-    finally:
-        q.stop()
     val = F.col("value").cast("string")
     return (
         spark.table(name)
@@ -586,8 +573,6 @@ def source_kafka_json_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     that arm).  first_offset per partition proves each resolution
     rule; the offset-ordered digest proves no duplicate/loss/reorder
     in the consumed range."""
-    import time
-
     register_kafka_shaped(spark)
     tag = sfdir_tag(sf_dir)
     name = f"kafka_j_{tag}_p{os.getpid()}"
@@ -608,25 +593,12 @@ def source_kafka_json_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("failOnDataLoss", "false")
         .load()
     )
-    q = (
+    drain_until(
+        spark,
         stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
+        .queryName(name).outputMode("append"),
+        lambda: spark.table(name).count() >= KJ_TOTAL,
     )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table(name).count() >= KJ_TOTAL:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError(
-                "kafka-shaped JSON-offsets source did not drain the log"
-            )
-    finally:
-        q.stop()
     val = F.col("value").cast("string")
     return (
         spark.table(name)
@@ -743,29 +715,8 @@ def stream_kafka_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_partitions"),
         )
     )
-    with stream_shuffle_bound(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # AvailableNow terminates on its own once the drain finishes;
-            # a False return means the 180 s budget elapsed first and the
-            # complete-mode table is PARTIAL — fail loudly instead of
-            # letting the oracle comparison surface it as a confusing
-            # value mismatch.
-            if not q.awaitTermination(180):
-                raise TimeoutError(
-                    "stream_kafka_windowed: AvailableNow drain did not "
-                    "terminate within 180 s; aborting rather than compare "
-                    "a partial complete-mode table against the full-log "
-                    "oracle"
-                )
-        finally:
-            q.stop()
+    drain(spark, agg.writeStream.format("memory")
+          .queryName(name).outputMode("complete"))
     return (
         spark.table(name)
         .select(

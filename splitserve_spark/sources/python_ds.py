@@ -31,6 +31,7 @@ from pyspark.sql.datasource import (
 )
 
 from splitserve_spark.registry import register
+from splitserve_spark.streaming.drain import drain, drain_until
 from splitserve_spark.tables import raw_schema, sfdir_tag
 
 PDS_DOCS = 500
@@ -183,31 +184,18 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed in the sink, then aggregate the deterministic seq < N prefix
     — overshoot from the final batch is filtered out, so the result is
     exact regardless of trigger timing."""
-    import time
-
     try:
         spark.dataSource.register(FrontierTailSource)
     except Exception:
         pass
     name = "pys_" + sfdir_tag(sf_dir)
     stream = spark.readStream.format("crawl_frontier_tail").load()
-    q = (
+    drain_until(
+        spark,
         stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="200 milliseconds")
-        .start()
+        .queryName(name).outputMode("append"),
+        lambda: spark.table(name).count() >= PDS_STREAM_N,
     )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table(name).count() >= PDS_STREAM_N:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError("python stream source did not reach cutoff")
-    finally:
-        q.stop()
     return (
         spark.table(name)
         .filter(F.col("seq") < PDS_STREAM_N)
@@ -537,16 +525,14 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    q = (
+    drain(
+        spark,
         stream.writeStream.format("shard_stream_sink")
         .option("path", out)
         .option(
             "checkpointLocation", tempfile.mkdtemp(prefix="shard_ss_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
     return (
         read_manifested_shards(spark, out)
         .groupBy("event_type")

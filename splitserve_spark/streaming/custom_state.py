@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from splitserve_spark.session import ensure_parity_conf, stream_shuffle_bound
+from splitserve_spark.session import ensure_parity_conf
+from splitserve_spark.streaming.drain import drain
 from splitserve_spark.tables import raw_schema, sfdir_tag
 
 OUTPUT_SCHEMA = (
@@ -120,16 +121,8 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = "ssp_" + sfdir_tag(sf_dir)
     raw = _events_stream(spark, sf_dir).select("user_id", "ts", "value")
-    with stream_shuffle_bound(spark):
-        q = (
-            running_user_profile(spark, raw)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, running_user_profile(spark, raw).writeStream
+          .format("memory").queryName(name).outputMode("update"))
     return (
         spark.table(name)
         .groupBy("user_id")
@@ -286,23 +279,15 @@ def stream_cusum_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
     ).select("event_type", "ts", "event_id", "value")
-    with stream_shuffle_bound(spark):
-        q = (
-            stream.groupBy("event_type")
-            .applyInPandasWithState(
-                _fold_cusum,
-                outputStructType=CUSUM_OUTPUT_SCHEMA,
-                stateStructType=CUSUM_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    cusum = stream.groupBy("event_type").applyInPandasWithState(
+        _fold_cusum,
+        outputStructType=CUSUM_OUTPUT_SCHEMA,
+        stateStructType=CUSUM_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    drain(spark, cusum.writeStream.format("memory")
+          .queryName(name).outputMode("update"))
     return (
         spark.table(name)
         .groupBy("event_type")

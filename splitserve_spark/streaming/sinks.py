@@ -36,8 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from splitserve_spark.registry import register
+from splitserve_spark.streaming.drain import drain, drain_until
 from splitserve_spark.tables import raw_schema, sfdir_tag
-from splitserve_spark.session import stream_shuffle_bound
 
 #: The canonical wordcount feed — single source of truth for the Spark
 #: query AND the DuckDB oracle (interpolated into the SQL below).
@@ -115,25 +115,13 @@ def source_socket_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = (
+    drain_until(
+        spark,
         counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="200 milliseconds")
-        .start()
+        .queryName(name).outputMode("complete"),
+        lambda: (spark.table(name).agg(F.sum("n")).collect()[0][0] or 0)
+        >= _N_WORDS,
     )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if (
-                spark.table(name).agg(F.sum("n")).collect()[0][0] or 0
-            ) >= _N_WORDS:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError("socket stream did not deliver all words")
-    finally:
-        q.stop()
     return spark.table(name).orderBy("word")
 
 
@@ -193,12 +181,7 @@ def sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).filter(
         F.col("event_id") % FOREACH_MOD == 0
     ).select("event_id", "value")
-    q = (
-        stream.writeStream.foreach(JsonlForeachWriter(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, stream.writeStream.foreach(JsonlForeachWriter(out_dir)))
     back = spark.read.schema("event_id long, value double").json(out_dir)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -250,14 +233,8 @@ def source_rate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("max_value"),
     )
     name = "rate_stream_agg"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, agg.writeStream.format("memory")
+          .queryName(name).outputMode("complete"))
     return spark.table(name)
 
 
@@ -430,20 +407,8 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src_dir}/b*.parquet")
     ).select("user_id", "value", "ts")
-    # NO stream_shuffle_bound here: this topology has no stateful
-    # operator (foreachBatch runs stateless batch MERGE jobs), so the
-    # state-store partition layout the bound pins never exists, and the
-    # inner joins' partitioning is AQE-coalesced either way.  A 3-round
-    # interleaved A/B on a stock local[4] session at sf0.01 measured
-    # bound 6.7/5.2/4.1 s vs unbounded 5.1/4.4/5.0 s — parity, with the
-    # unbounded form ahead in 2 of 3 rounds.
-    q = (
-        stream.writeStream.foreachBatch(target.apply)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, stream.writeStream.foreachBatch(target.apply)
+          .option("checkpointLocation", os.path.join(base, "ckpt")))
     return (
         target.current()
         .filter(F.col("user_id") % 17 == 0)
@@ -550,15 +515,8 @@ def stream_merge_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{staged}/b*.parquet")
         ).select("user_id", "value", "ts")
-        # NO stream_shuffle_bound: same stateless-foreachBatch topology
-        # as stream_foreachbatch_merge (see the measurement note there).
-        q = (
-            stream.writeStream.foreachBatch(target.apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, stream.writeStream.foreachBatch(target.apply)
+              .option("checkpointLocation", ckpt))
 
     def _stage(files) -> None:
         for f in files:
@@ -721,20 +679,15 @@ def pipeline_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = gated.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["content_fp"]
     )
-    with stream_shuffle_bound(spark):
-        q = (
-            deduped.select("content_fp", "quality", "source_bucket")
-            .writeStream.format("parquet")
-            .option("path", shards)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("source_bucket")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("ingest drain exceeded 300s")
+    drain(
+        spark,
+        deduped.select("content_fp", "quality", "source_bucket")
+        .writeStream.format("parquet")
+        .option("path", shards)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("source_bucket")
+        .outputMode("append"),
+    )
     return (
         spark.read.parquet(shards)
         .groupBy(F.col("source_bucket").cast("long").alias("source_bucket"))

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from splitserve_spark.registry import register
-from splitserve_spark.session import stream_shuffle_bound
+from splitserve_spark.streaming.drain import drain
 from splitserve_spark.tables import Tables, raw_schema, sfdir_tag
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,18 +212,8 @@ def stream_file_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    # Stateful drains plan their state-store layout from
-    # spark.sql.shuffle.partitions at first start — bound it to the
-    # session's parallelism for the drain (see stream_shuffle_bound).
-    with stream_shuffle_bound(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, stream.writeStream.format("memory")
+          .queryName(name).outputMode("complete"))
     return spark.table(name).orderBy("wstart", "event_type")
 
 
@@ -250,15 +240,8 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy()
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    with stream_shuffle_bound(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, deduped.writeStream.format("memory")
+          .queryName(name).outputMode("complete"))
     return spark.table(name)
 
 
@@ -327,18 +310,8 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lag_us"
         ),
     )
-    # Two-sided stream-stream join state: the worst drain of the
-    # family at an inherited batch partition count (measured 300 s at
-    # 200 partitions on a 4-core stock session).
-    with stream_shuffle_bound(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, joined.writeStream.format("memory")
+          .queryName(name).outputMode("append"))
     return spark.table(name).orderBy("click_id", "buy_id")
 
 
@@ -382,15 +355,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double").alias("total_value"),
         )
     )
-    with stream_shuffle_bound(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, enriched.writeStream.format("memory")
+          .queryName(name).outputMode("complete"))
     return spark.table(name).orderBy("mktsegment")
 
 
@@ -564,15 +530,8 @@ def stream_dedup_within_watermark(
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    with stream_shuffle_bound(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, deduped.writeStream.format("memory")
+          .queryName(name).outputMode("append"))
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -792,28 +751,8 @@ def stream_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("buy_id").isNotNull().alias("matched"),
         )
     )
-    # Two-sided stream-stream join state on a short staged drain: at
-    # the stock 200 shuffle partitions this query builds 200 state
-    # stores per side per micro-batch and blows the 180 s drain budget
-    # on a 4-core driver session (measured r11: >180 s at 200 vs 28 s
-    # at parallelism-sized partitions).  The bound tracks
-    # defaultParallelism, so a real cluster still gets cluster-wide
-    # state parallelism.
-    with stream_shuffle_bound(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(180):
-            q.stop()  # don't leak an active query (queryName collision on retry)
-            raise TimeoutError(
-                "stream_click_attribution_outer: AvailableNow drain did not "
-                "terminate within 180 s; aborting rather than compare a "
-                "partial append-mode table against the batch oracle"
-            )
+    drain(spark, joined.writeStream.format("memory")
+          .queryName(name).outputMode("append"))
     return (
         spark.table(name)
         .filter(F.col("click_id") >= 0)  # drop the flush sentinel

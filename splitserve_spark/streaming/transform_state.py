@@ -60,6 +60,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 from splitserve_spark.session import ensure_parity_conf
+from splitserve_spark.streaming.drain import drain
 from splitserve_spark.tables import raw_schema, sfdir_tag
 
 TWS_OUTPUT_SCHEMA = (
@@ -165,21 +166,14 @@ def stream_tws_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
     )
     try:
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=UserProfileProcessor(),
-                outputStructType=TWS_OUTPUT_SCHEMA,
-                outputMode="update",
-                timeMode="none",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        profiles = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=UserProfileProcessor(),
+            outputStructType=TWS_OUTPUT_SCHEMA,
+            outputMode="update",
+            timeMode="none",
         )
-        q.awaitTermination()
+        drain(spark, profiles.writeStream.format("memory")
+              .queryName(name).outputMode("update"))
     finally:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", prior

@@ -134,18 +134,3 @@ def stream_tumbling_counts(
         )
     )
 
-
-def run_stream_to_memory(
-    df: DataFrame, query_name: str, output_mode: str = "complete"
-):
-    """Start a memory-sink query and block until all available data is
-    processed (deterministic for tests)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

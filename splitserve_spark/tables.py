@@ -124,9 +124,6 @@ class Tables:
         per_session = _session_cache(_DF_HANDLES, self._spark)
         key = (self._sf_dir, name)
         if key not in per_session:
-            from splitserve_spark.session import ensure_parity_conf
-
-            ensure_parity_conf(self._spark)
             df = self._spark.read.parquet(
                 os.path.join(self._sf_dir, f"{name}.parquet")
             )

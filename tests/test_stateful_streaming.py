@@ -63,13 +63,31 @@ def test_events_stream_schema_is_inferred_once(spark):
 
 @pytest.mark.parametrize(
     "name",
-    ["stream_dedup_ids", "stream_file_source_agg", "stream_click_attribution"],
+    [
+        "stream_dedup_ids",
+        "stream_file_source_agg",
+        "stream_click_attribution",
+        "source_socket_stream",
+        "source_rate_stream",
+        "stream_cusum_stateful",
+        "stream_kafka_windowed",
+    ],
 )
 def test_state_stores_match_slots(spark, name):
-    """stream_shuffle_bound sizes each stateful operator to exactly one
-    state store per task slot: one commit wave per micro-batch."""
+    """The drain sizes each stateful operator to exactly one state
+    store per task slot, whatever the session's batch partition count:
+    the session runs at stock Spark's 200 here, so an undrained copy
+    that plans its own layout shows up as 200 state stores."""
     slots = spark.sparkContext.defaultParallelism
-    _, events = drain_events(spark, lambda: REGISTRY[name].fn(spark, SF_DIR))
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        _, events = drain_events(
+            spark, lambda: REGISTRY[name].fn(spark, SF_DIR)
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
     ops = [op for e in events for op in e["stateOperators"]]
     assert ops, f"{name}: no state operator reported"
     assert [op["numShufflePartitions"] for op in ops] == [slots] * len(ops)

@@ -17,10 +17,8 @@ from pyspark.sql.types import (
 )
 
 from splitserve_spark.registry import load_all
-from splitserve_spark.streaming.windows import (
-    run_stream_to_memory,
-    stream_tumbling_counts,
-)
+from splitserve_spark.streaming.drain import drain
+from splitserve_spark.streaming.windows import stream_tumbling_counts
 from splitserve_spark.tables import Tables
 from tests.oracle_utils import SF_DIR, check_query
 
@@ -71,7 +69,8 @@ def test_stream_matches_batch(spark, event_json_dir):
     """Micro-batch streaming aggregation == the same aggregation run as
     a plain batch query (the batch-vs-stream oracle from FIXTURES.md)."""
     sdf = stream_tumbling_counts(spark, event_json_dir, EVENT_SCHEMA)
-    run_stream_to_memory(sdf, "tumbling_test", output_mode="complete")
+    drain(spark, sdf.writeStream.format("memory")
+          .queryName("tumbling_test").outputMode("complete"))
     got = (
         spark.table("tumbling_test")
         .orderBy("wstart", "event_type")
@@ -98,7 +97,8 @@ def test_stream_append_mode_with_watermark(spark, event_json_dir):
     """Append mode emits only watermark-finalized windows; every emitted
     row must agree with the batch result."""
     sdf = stream_tumbling_counts(spark, event_json_dir, EVENT_SCHEMA, "10 minutes")
-    run_stream_to_memory(sdf, "append_test", output_mode="append")
+    drain(spark, sdf.writeStream.format("memory")
+          .queryName("append_test").outputMode("append"))
     got = spark.table("append_test").toPandas()
     expected = (
         spark.read.schema(EVENT_SCHEMA)

@@ -223,13 +223,13 @@ def graph_smoke(spark, src):
 def _drain_to_memory(spark, df, mode, tag):
     """Drain ``df`` (availableNow) into memory table ``tag``; return
     (sink rows, peak state-store rows)."""
+    from splitserve_spark.streaming.drain import drain
     from splitserve_spark.streaming.progress import drain_events, state_peak
 
     _, events = drain_events(
         spark,
-        lambda: df.writeStream.format("memory").outputMode(mode)
-        .queryName(tag).trigger(availableNow=True).start()
-        .awaitTermination(),
+        lambda: drain(spark, df.writeStream.format("memory")
+                      .outputMode(mode).queryName(tag)),
     )
     return spark.table(tag).count(), state_peak(events)
 
