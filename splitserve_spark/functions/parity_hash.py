@@ -51,10 +51,13 @@ def md5_hash60_sql(expr: str) -> str:
 def md5_hash60_spark_sql(expr: str) -> str:
     """Spark-SQL string for md5_hash60 — parses to the IDENTICAL
     Catalyst expression as the Column form (verified by plan diff).
-    String construction exists because every F.* call is a py4j round
-    trip: an 8-permutation signature built Column-by-Column costs ~100
-    driver↔JVM round trips, while one F.expr parses JVM-side in a
-    single call (optimization guide §7.3 — driver/planning overhead)."""
+    String construction exists because every F.* call costs py4j round
+    trips: built Column-by-Column, md5_hash60 costs 37 and the eight
+    perm_hash calls of a signature 120 on this engine's sessions
+    (call-site capture off, session.TUNING_CONF), and 50 and 360 on a
+    stock PySpark 4.1 session, where each call also captures its call
+    site; one F.expr parses JVM-side in 3 either way (optimization
+    guide §7.3 — driver/planning overhead)."""
     return f"CAST(conv(substring(md5(CAST(({expr}) AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
 
 

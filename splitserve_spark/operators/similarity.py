@@ -258,7 +258,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a running top-k per query and emits at most k rows per query, so
     no query × corpus pair row is ever built.  The rank window over
     those ≤ partitions·N_QUERIES·k candidates gives the exact global
-    rank (REPOSE-style partition-local top-k, then a global merge)."""
+    rank (REPOSE-style partition-local top-k, then a global merge), and
+    the bounded result is sorted in one partition, not range-shuffled."""
     t = Tables(spark, sf_dir)
     corpus = t.embeddings.select("vec_id", "embedding")
     q = corpus.filter(F.col("vec_id") < N_QUERIES).toArrow()
@@ -277,7 +278,10 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-        .orderBy("query_id", "rank")
+        # At most N_QUERIES·TOP_K rows: one partition sorts them, with
+        # no range-sampling job and no range shuffle.
+        .coalesce(1)
+        .sortWithinPartitions("query_id", "rank")
     )
 
 

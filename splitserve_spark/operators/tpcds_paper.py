@@ -111,7 +111,11 @@ def qds5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("sales") - F.col("returns"))
             .cast("double").alias("profit"),
         )
-        .orderBy(F.col("channel").asc_nulls_first(), F.col("id").asc_nulls_first())
+        # A few dozen rollup rows: one partition sorts them, with no
+        # range-sampling job and no range shuffle.
+        .coalesce(1)
+        .sortWithinPartitions(
+            F.col("channel").asc_nulls_first(), F.col("id").asc_nulls_first())
     )
 
 
@@ -144,9 +148,14 @@ def _slice_membership(t: Tables, orders: DataFrame, has_r: int) -> DataFrame:
     return flag.  Each verdict depends on the order's own lines only,
     so the slice joins lineitem BEFORE the aggregate, which then groups
     the slice's lines, not the whole fact table.  Grouping on (key,
-    price) is the oracle's DISTINCT o_orderkey, o_totalprice.  No
-    broadcast hint: orders grows with SF, and at scale this selective
-    shuffle join is what the runtime bloom filter prunes."""
+    price) is the oracle's DISTINCT o_orderkey, o_totalprice.  The
+    order count is a plain count of those groups, because it relies on
+    o_orderkey being orders' primary key (tests/test_tpcds_paper.py
+    pins it unique at every SF): each key has one price and so one
+    group, and count(DISTINCT o_orderkey) would give the same number
+    at the cost of one more shuffle and one more job.  No broadcast
+    hint: orders grows with SF, and at scale this selective shuffle
+    join is what the runtime bloom filter prunes."""
     li = t.lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
     return (
         li.join(
@@ -160,7 +169,7 @@ def _slice_membership(t: Tables, orders: DataFrame, has_r: int) -> DataFrame:
         )
         .filter(F.col("multi") & (F.col("has_r") == has_r))
         .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
+            F.count(F.lit(1)).alias("order_count"),
             F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
             .cast("double").alias("total_price"),
         )

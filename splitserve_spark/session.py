@@ -52,6 +52,12 @@ TUNING_CONF = {
     # Dimension tables (region/nation/customer/part/supplier at any SF
     # that fits) should broadcast rather than shuffle.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # PySpark 4.1 captures every F.* / Column call's Python call site
+    # for error messages: per call a getActiveSession, a conf read and
+    # a PySparkCurrentOrigin set + clear over py4j, plus a stack walk.
+    # Off, Q16's plan build makes 155 py4j round trips instead of 439.
+    # All it adds is call-site text in error messages, which nothing here reads.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -36,8 +37,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+#: A fixed cap, not DuckDB's default share of the host's RAM (80%).  Past
+#: it an oracle spills, and fails its own query if the spill cannot be
+#: written.  It cannot be much lower: graph_scc's oracle (the same
+#: fenced graph at every SF) has DuckDB account ~11 GiB for a 2.6 GB
+#: resident set; at sf0.001 it ran 8.6 s unbounded, 10.6 s at this
+#: cap, 42 s at 10 GB, and over 120 s with 7 GB spilled at 4 GB.
+DUCK_MEMORY_LIMIT = "12GB"
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """A DuckDB connection with every table of `sf_dir` as a view.  It
+    spills under the process's temp dir (not the working directory),
+    into a subdirectory DuckDB removes on close."""
+    con = duckdb.connect(config={
+        "memory_limit": DUCK_MEMORY_LIMIT,
+        "temp_directory": os.path.join(
+            tempfile.gettempdir(), f"duckdb-oracle-{os.getpid()}"),
+    })
     for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"

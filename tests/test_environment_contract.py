@@ -97,3 +97,36 @@ def test_nanos_as_long_flag_is_irrelevant(spark):
         pytest.skip("conf not settable in this deployment")
     t = Tables(spark, SF_DIR)
     assert dict(t.events.dtypes)["ts"] == "timestamp"
+
+
+def test_engine_sessions_skip_call_site_capture(spark, monkeypatch):
+    """PySpark 4.1 captures the Python call site of every F.* and
+    Column call (a conf read plus a set and clear of the JVM origin,
+    each over py4j) unless dataFrameDebugging is off.  The flag is
+    cached process-wide on first use, so clear the cache and read it
+    from this session."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
+
+
+def test_duck_connection_caps_memory_and_spills_to_tempdir():
+    """The oracle's DuckDB gets a fixed memory limit (not 80% of the
+    host) and spills under the temp dir, not the working directory."""
+    import tempfile
+
+    from tests.oracle_utils import duck_connection
+
+    con = duck_connection(SF_DIR)
+    try:
+        limit, temp = con.execute(
+            "SELECT current_setting('memory_limit'), "
+            "current_setting('temp_directory')").fetchone()
+        n = con.execute("SELECT count(*) FROM orders").fetchone()[0]
+    finally:
+        con.close()
+    assert limit == "11.1 GiB", limit  # 12 GB, read back in GiB
+    assert temp.startswith(tempfile.gettempdir() + "/duckdb-oracle-"), temp
+    assert n > 0

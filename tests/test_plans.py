@@ -7,6 +7,7 @@ plans (SURVEY.md §4; reference SparkStrategies.scala selection rules).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from splitserve_spark.plans.inspect import (
@@ -312,6 +313,15 @@ def test_cosine_topk_is_one_partition_local_arrow_pass(spark):
     assert "ArrowEvalPython" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["qds5_channel_rollup", "sim_cosine_topk"])
+def test_bounded_result_sorts_without_range_shuffle(spark, name):
+    """A result bounded by construction (a few dozen rollup rows; top-k
+    candidates) is sorted in one partition: no range-sampling job and
+    no range shuffle.  Strict oracle checks still see its order."""
+    plan = physical_plan(q(name, spark), mode="simple")
+    assert "rangepartitioning" not in plan, plan
+
+
 def test_zscore_stats_join_is_broadcast(spark):
     """The 5-row per-type stats table must broadcast back onto the
     events scan — shuffling the fact side against it would be the
@@ -604,9 +614,6 @@ def test_guard_exemptions_are_accounted():
     assert all(r.strip() for r in GUARD_SKIP_REASONS.values())
     # The unpartitioned-window allow-list carries the same contract.
     assert all(r.strip() for r in UNPARTITIONED_WINDOW_ALLOWED.values())
-
-
-import pytest  # noqa: E402
 
 
 @pytest.fixture(scope="module")

@@ -96,6 +96,7 @@ def test_membership_single_fact_pass_over_slice(spark, name):
     plan = physical_plan(df, mode="simple")
     assert plan.count("lineitem.parquet") == 1, plan
     assert "partial_min" in plan and "partial_max" in plan, plan
+    assert "count(distinct" not in plan, plan
     lines = plan.splitlines()
     at = next(i for i, l in enumerate(lines) if "partial_min" in l)
     below = []

@@ -233,6 +233,30 @@ def test_sweep_time_records_match_plan_inspect(spark):
         assert min(rec["build_s"], rec["plan_s"], rec["exec_s"]) >= 0
 
 
+def test_sweep_time_records_count_jobs(spark):
+    """The time record's `jobs` is the number of Spark jobs its rep ran
+    (build, planning and count()), as a job group set around the same
+    steps counts them, also when the same query was swept before, and
+    the sweep leaves no job group behind."""
+    from splitserve_spark.registry import load_all
+
+    spec = load_all()["qds94_web_no_returns"]
+    recs = [sweep.run(spark, [spec], "time", SF_DIR, out=io.StringIO())[0]
+            for _ in range(2)]
+    assert [r["error"] for r in recs] == [None, None], recs
+    sc = spark.sparkContext
+    sc.setJobGroup("test-sweep-jobs", "test")
+    try:
+        df = spec.fn(spark, SF_DIR)
+        df._jdf.queryExecution().executedPlan()
+        df.count()
+        want = sweep._jobs_run(spark, "test-sweep-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["jobs"] for r in recs] == [want, want] and want >= 1, (recs, want)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
 def test_strict_check_starts_from_foreign_confs(spark):
     """check mode starts every query from a stock session's ANSI,
     timezone and Arrow values, as the driver's session may carry: the

@@ -23,9 +23,10 @@ stdout unless --out names a file, so a bare run overwrites no evidence.
   three after touching any operator.
 - time: the best of --reps (by total) of build_s (the fn call), plan_s
   (analysis through physical planning) and exec_s (count(), bench.py's
-  action), after every table is warmed; plus rows, the shuffle
-  exchanges and executed scans counted as PLANS.md and the repeat-scan
-  guard count them, and the bench flag.
+  action), after every table is warmed, and the Spark jobs that rep
+  ran (build, planning and count(), counted by job group); plus rows,
+  the shuffle exchanges and executed scans counted as PLANS.md and the
+  repeat-scan guard count them, and the bench flag.
 - plans: PLANS.md, each query's `simple` physical plan (expression
   ids, plan ids and lambda variable numbers masked for stable diffs:
   each comes from a process-wide counter, so one changed plan would
@@ -39,6 +40,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import itertools
 import json
 import os
 import re
@@ -116,22 +118,42 @@ def _check(spark, spec, sf_dir, strict, reps) -> dict:
     return {}
 
 
+#: Job groups outlive a sweep in the status store: each rep gets its own.
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_run(spark, group: str) -> int:
+    """Spark jobs started under job `group` so far.  The status store is
+    fed by the listener bus, so wait for the bus to drain first."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _time(spark, spec, sf_dir, strict, reps) -> dict:
+    sc = spark.sparkContext
     best = None
-    for _ in range(max(1, reps)):
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()  # forces physical planning
-        t2 = time.perf_counter()
-        rows = df.count()
-        t3 = time.perf_counter()
-        if best is None or t3 - t0 < sum(best):
-            best = (t1 - t0, t2 - t1, t3 - t2)
+    try:
+        for _ in range(max(1, reps)):
+            # Thread-local: set in the thread that runs the rep's jobs.
+            group = f"sweep-time:{spec.name}:{next(_JOB_GROUPS)}"
+            sc.setJobGroup(group, f"sweep:{spec.name}")
+            t0 = time.perf_counter()
+            df = spec.fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()  # forces physical planning
+            t2 = time.perf_counter()
+            rows = df.count()
+            t3 = time.perf_counter()
+            if best is None or t3 - t0 < sum(best[:3]):
+                best = (t1 - t0, t2 - t1, t3 - t2, _jobs_run(spark, group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     return {
         "build_s": round(best[0], 3),
         "plan_s": round(best[1], 3),
         "exec_s": round(best[2], 3),
+        "jobs": best[3],
         "rows": rows,
         "exchanges": count_exchanges(df),
         "scans": count_executed_scans(physical_plan(df, mode="simple")),
